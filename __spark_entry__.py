@@ -138,7 +138,7 @@ def _coverage_order(names: list[str]) -> list[str]:
             return blame_times[path]
         times: list[float] = []
         try:
-            out = subprocess.run(
+            proc = subprocess.run(
                 [
                     "git",
                     "-C",
@@ -152,7 +152,11 @@ def _coverage_order(names: list[str]) -> list[str]:
                 capture_output=True,
                 text=True,
                 timeout=60,
-            ).stdout
+            )
+            if proc.returncode != 0:
+                # a failed blame's stdout is not porcelain to trust
+                return blame_times.setdefault(path, [])
+            out = proc.stdout
             # Porcelain: every content line (TAB-prefixed) is preceded
             # by its own "<sha> <orig> <final> [groupsize]" header;
             # commit metadata (committer-time …) follows only the FIRST

@@ -10,16 +10,18 @@ The reference's imputation surface:
 - missing-indicator flags (utils/silver_credit_history.py:19,
   utils/silver_financial.py:15-17)
 
-Engine design: ONE job for all mode columns (melt → single groupBy →
-window rank), ONE job for all means (multi-aggregate row), then a single
-projection applies every fill + flag. Mode tie-break is defined as
-(count DESC, value ASC) — the reference leaves ties nondeterministic
-(SURVEY §7 "what's hard").
+Engine design: ONE aggregate for every mean and mode of a spec — the
+modes through Spark's ``mode`` aggregate with its deterministic
+tie-break — then a single projection applies every fill + flag. Mode
+tie-break is defined as (count DESC, string value ASC) — the reference
+leaves ties nondeterministic (SURVEY §7 "what's hard").
 
-Scale: the melt multiplies rows by n_mode_cols but aggregates with
-map-side partial combine down to |distinct values| rows — at 100 TB this
-is one shuffle of pre-aggregated (col, value, count) triples, versus N
-full shuffles in the reference.
+Scale: ``mode`` keeps a per-column value→count map per partition and
+merges the maps in one shuffle — at 100 TB this is one shuffle of
+pre-aggregated (value, count) maps, versus N full shuffles in the
+reference. The final merge runs in one task, so its memory is the mode
+columns' distinct values: right for the low-cardinality categorical
+columns a mode fills, wrong for an id-like column.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from itertools import chain
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 
 @dataclass
@@ -49,48 +51,46 @@ def add_missing_flags(df: DataFrame, cols: list[str], suffix: str = "_missing") 
     )
 
 
-def compute_modes(df: DataFrame, cols: list[str]) -> dict[str, str]:
-    """Per-column mode for all ``cols`` in ONE shuffle.
-
-    Melt via map+explode → groupBy(col, value) → rank (count DESC, value
-    ASC) → first per col. Returns string-typed modes; caller casts back.
-    """
-    if not cols:
-        return {}
-    kv = F.explode(
-        F.map_from_arrays(
-            F.array(*[F.lit(c) for c in cols]),
-            F.array(*[F.col(c).cast("string") for c in cols]),
-        )
-    ).alias("col_name", "value")
-    counts = (
-        df.select(kv)
-        .filter(F.col("value").isNotNull())
-        .groupBy("col_name", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+def _agg_stats(
+    df: DataFrame, mean_cols: list[str], mode_cols: list[str]
+) -> tuple[dict[str, float], dict[str, str]]:
+    """Means and modes of ``df`` in one aggregate; columns whose statistic
+    is null (all-null input) are left out."""
+    exprs = [F.avg(c) for c in mean_cols] + [
+        F.mode(F.col(c).cast("string"), True) for c in mode_cols
+    ]
+    if not exprs:
+        return {}, {}
+    row = df.agg(*[e.alias(f"_{i}") for i, e in enumerate(exprs)]).first()
+    means, modes = row[: len(mean_cols)], row[len(mean_cols) :]
+    return (
+        {c: v for c, v in zip(mean_cols, means) if v is not None},
+        {c: v for c, v in zip(mode_cols, modes) if v is not None},
     )
-    w = Window.partitionBy("col_name").orderBy(F.desc("cnt"), F.asc("value"))
-    rows = counts.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1).collect()
-    return {r["col_name"]: r["value"] for r in rows}
+
+
+def compute_modes(df: DataFrame, cols: list[str]) -> dict[str, str]:
+    """Per-column mode for all ``cols`` in one aggregate: ``mode`` with
+    its deterministic tie-break, i.e. (count DESC, string value ASC);
+    nulls are ignored. Returns string-typed modes; caller casts back."""
+    return _agg_stats(df, [], cols)[1]
 
 
 def compute_means(df: DataFrame, cols: list[str]) -> dict[str, float]:
     """All means in one multi-aggregate job (vs one job per column)."""
-    if not cols:
-        return {}
-    row = df.agg(*[F.avg(c).alias(c) for c in cols]).first()
-    return {c: row[c] for c in cols if row[c] is not None}
+    return _agg_stats(df, cols, [])[0]
 
 
 def fit_impute_stats(df: DataFrame, spec: ImputeSpec) -> dict[str, Any]:
     """Compute the data-dependent fill values (modes + means) once, as a
-    pinnable stats dict. The imputation analogue of the global category
-    dictionary (operators/encode.py): per-batch statistics drift across
-    incremental runs — a week with unusual nulls would silently shift
-    every fill — so streaming/weekly pipelines fit stats on a reference
-    window and apply them to every batch (persist as a tiny JSON/table
-    next to the checkpoint)."""
-    return {**compute_means(df, spec.mean_cols), **compute_modes(df, spec.mode_cols)}
+    pinnable stats dict, in one aggregate. The imputation analogue of the
+    global category dictionary (operators/encode.py): per-batch
+    statistics drift across incremental runs — a week with unusual nulls
+    would silently shift every fill — so streaming/weekly pipelines fit
+    stats on a reference window and apply them to every batch (persist as
+    a tiny JSON/table next to the checkpoint)."""
+    means, modes = _agg_stats(df, spec.mean_cols, spec.mode_cols)
+    return {**means, **modes}
 
 
 def impute(

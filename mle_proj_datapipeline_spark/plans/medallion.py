@@ -19,13 +19,33 @@ Differences from the reference, by design:
   readers get partition pruning for free.
 - encodings are dictionary/declared-category driven — identical columns
   every week (vs per-batch StringIndexer fit, SURVEY §4.2).
-- one mode-imputation job for all columns (vs one groupBy per column).
+- one aggregate for all mode and mean fills of a table (vs one groupBy
+  per column).
+
+Execution of one run (``run_pipeline``): the four silver tables are
+independent, so each table's build (its imputation stats actions), write
+and read-back is one task, and the four tasks run concurrently on a
+thread pool; then the label-store write runs concurrently with the
+feature store's top-k and write. Every task keeps the caller's job
+group, local properties and tags, so each job stays attributed to the
+run. Read-backs carry the schema the write fixed, so no footer-inference
+job runs. If a task fails, the others still finish, and the first error
+in table order is raised: the tables that finished hold this run's
+partitions, the failed one holds the previous run's (or a partial write
+of this one). Every write is a per-table dynamic partition overwrite, so
+rerunning the week repairs it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import DateType, StructField, StructType
+from pyspark.util import inheritable_thread_target
 
 from mle_proj_datapipeline_spark.functions.core import (
     binary_flag,
@@ -212,6 +232,39 @@ def gold_feature_store(
     return deduped.drop("__rk", "member_id", "grade")  # keep id + snapshot_week lineage
 
 
+SILVER_TABLES = {
+    "credit_history": silver_credit_history,
+    "demographic": silver_demographic,
+    "financial": silver_financial,
+    "loan_terms": silver_loan_terms,
+}
+
+
+def _run_concurrently(spark: SparkSession, tasks: list[Callable[[], Any]]) -> list[Any]:
+    """Run independent ``tasks`` on a thread pool, each keeping the
+    caller's job group, local properties and tags. Every task runs to
+    its end; then the first error in task order is raised."""
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
+    return [f.result() for f in futures]
+
+
+def _write_store(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` as snapshot_week-partitioned parquet with dynamic
+    partition overwrite, and read the store back with the schema the
+    write fixed: the written fields made nullable, snapshot_week last as
+    a DATE (what footer inference returns, without its job)."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("snapshot_week").parquet(path)
+    fields = [f for f in df.schema.fields if f.name != "snapshot_week"]
+    schema = StructType(
+        [StructField(f.name, f.dataType, True) for f in fields]
+        + [StructField("snapshot_week", DateType(), True)]
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
 def run_pipeline(
     spark: SparkSession,
     bronze: dict[str, DataFrame],
@@ -222,37 +275,35 @@ def run_pipeline(
     → gold, written as snapshot_week-partitioned parquet with dynamic
     partition overwrite (idempotent weekly re-runs,
     utils/process_silver_tables.py:85 semantics)."""
-    silvers = {
-        "credit_history": silver_credit_history(to_bronze(bronze["credit_history"], week_start)),
-        "demographic": silver_demographic(to_bronze(bronze["demographic"], week_start)),
-        "financial": silver_financial(to_bronze(bronze["financial"], week_start)),
-        "loan_terms": silver_loan_terms(to_bronze(bronze["loan_terms"], week_start)),
-    }
-    for name, df in silvers.items():
-        df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("snapshot_week").parquet(f"{out_dir}/silver/{name}")
-    silvers_r = {n: spark.read.parquet(f"{out_dir}/silver/{n}") for n in silvers}
 
-    labels = gold_label_store(silvers_r["loan_terms"])
-    features = gold_feature_store(
-        silvers_r["credit_history"].drop("snapshot_week"),
-        silvers_r["demographic"].drop("snapshot_week"),
-        silvers_r["financial"].drop("snapshot_week"),
-        silvers_r["loan_terms"],
+    def silver_task(name: str) -> Callable[[], DataFrame]:
+        build = SILVER_TABLES[name]
+        return lambda: _write_store(
+            spark, build(to_bronze(bronze[name], week_start)), f"{out_dir}/silver/{name}"
+        )
+
+    silvers = dict(zip(SILVER_TABLES, _run_concurrently(spark, [silver_task(n) for n in SILVER_TABLES])))
+
+    labels = gold_label_store(silvers["loan_terms"]).withColumn(
+        "snapshot_week", week_of(F.col("snapshot_date"))
     )
-    labels.withColumn("snapshot_week", week_of(F.col("snapshot_date"))).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy("snapshot_week").parquet(
-        f"{out_dir}/gold/label_store"
+
+    def features() -> DataFrame:
+        fs = gold_feature_store(
+            silvers["credit_history"].drop("snapshot_week"),
+            silvers["demographic"].drop("snapshot_week"),
+            silvers["financial"].drop("snapshot_week"),
+            silvers["loan_terms"],
+        )
+        return _write_store(spark, fs, f"{out_dir}/gold/feature_store")
+
+    label_store, feature_store = _run_concurrently(
+        spark, [lambda: _write_store(spark, labels, f"{out_dir}/gold/label_store"), features]
     )
-    features.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("snapshot_week").parquet(f"{out_dir}/gold/feature_store")
     return {
-        "label_store": spark.read.parquet(f"{out_dir}/gold/label_store"),
-        "feature_store": spark.read.parquet(f"{out_dir}/gold/feature_store"),
-        **{f"silver_{n}": silvers_r[n] for n in silvers_r},
+        "label_store": label_store,
+        "feature_store": feature_store,
+        **{f"silver_{n}": df for n, df in silvers.items()},
     }
 
 

@@ -37,8 +37,9 @@ from mle_proj_datapipeline_spark.sources.catalog import load_table
     """,
 )
 def impute_mode_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mode fill via the engine's single-shuffle melt (operators/impute.py)
-    — vs the reference's per-column groupBy loop
+    """Mode fill via the engine's one-aggregate ``mode`` with its
+    (count DESC, value ASC) tie-break (operators/impute.py) — vs the
+    reference's per-column groupBy loop
     (utils/silver_credit_history.py:31-37)."""
     d = load_table(spark, sf_dir, "documents").select(
         F.nullif(F.col("lang"), F.lit("zh")).alias("lang_n")

@@ -141,9 +141,7 @@ def order_cardinalities(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def part_attr_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long reshape via the native unpivot operator (zero-copy
-    Expand, no self-union of N projections) + per-attribute rollup —
-    the same melt that powers single-shuffle multi-column mode
-    imputation (operators/impute.py)."""
+    Expand, no self-union of N projections) + per-attribute rollup."""
     p = load_table(spark, sf_dir, "part")
     return (
         p.select(

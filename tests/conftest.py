@@ -39,7 +39,7 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if (
             os.path.basename(str(item.fspath)) in _SLOW_TIER_FILES
-            or item.originalname in _SLOW_TIER_TESTS
+            or getattr(item, "originalname", "") in _SLOW_TIER_TESTS
         ):
             item.add_marker(skip)
 

@@ -128,6 +128,70 @@ def test_incremental_week_idempotent(spark, domain, tmp_path_factory):
     assert again == all_rows
 
 
+# Jobs of one incremental week on the fixture domain: a footer-inference
+# job per read-back or a multi-job mode fit would push a week past it.
+WEEK_JOB_BUDGET = 20
+
+
+def test_week_job_budget_attribution_and_schemas(spark, domain, tmp_path_factory):
+    """An incremental week stays within its job budget, every job it
+    submits — from any of its worker threads — is attributed to the
+    caller's job group, and every returned frame carries exactly the
+    schema a plain read of its store infers."""
+    out = str(tmp_path_factory.mktemp("budget"))
+    M.run_pipeline(spark, domain, out, week_start=str(WEEKS[0]))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return tracker.getJobIdsForGroup(group)[-1]
+
+    before = marker_job("budget:before")
+    sc.setJobGroup("budget:week", "medallion week 2")
+    try:
+        r = M.run_pipeline(spark, domain, out, week_start=str(WEEKS[1]))
+        after = marker_job("budget:after")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    week_jobs = set(tracker.getJobIdsForGroup("budget:week"))
+    assert week_jobs == set(range(before + 1, after))
+    assert len(week_jobs) <= WEEK_JOB_BUDGET
+
+    paths = {
+        "label_store": f"{out}/gold/label_store",
+        "feature_store": f"{out}/gold/feature_store",
+        **{f"silver_{n}": f"{out}/silver/{n}" for n in M.SILVER_TABLES},
+    }
+    assert set(r) == set(paths)
+    for name, path in paths.items():
+        assert r[name].schema == spark.read.parquet(path).schema, name
+
+
+def test_concurrent_tasks_all_finish_then_first_error_raised(spark):
+    """A failing table task does not cancel the others, and the error
+    raised is the first in task order."""
+    done = []
+
+    def ok(i):
+        return lambda: done.append(i) or i
+
+    def fail(msg):
+        def task():
+            done.append(msg)
+            raise ValueError(msg)
+
+        return task
+
+    assert M._run_concurrently(spark, [ok(0), ok(1)]) == [0, 1]
+    done.clear()
+    with pytest.raises(ValueError, match="first"):
+        M._run_concurrently(spark, [ok(0), fail("first"), ok(2), fail("second")])
+    assert sorted(map(str, done)) == ["0", "2", "first", "second"]
+
+
 def test_partition_pruning(spark, domain, tmp_path_factory, pipeline_out):
     out, _ = pipeline_out
     ls = spark.read.parquet(f"{out}/gold/label_store")

@@ -13,13 +13,14 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql.types import (
     DoubleType,
+    LongType,
     StringType,
     StructField,
     StructType,
 )
 
 from mle_proj_datapipeline_spark.operators.dedup import exact_dedup
-from mle_proj_datapipeline_spark.operators.impute import ImputeSpec, impute
+from mle_proj_datapipeline_spark.operators.impute import ImputeSpec, compute_modes, impute
 from mle_proj_datapipeline_spark.operators.psi import psi
 from mle_proj_datapipeline_spark.plans.medallion import week_of
 
@@ -59,6 +60,44 @@ def test_impute_leaves_no_nulls(spark, rows):
     assert out.filter(F.col("cat_missing") == 1).count() == sum(
         1 for r in rows if r[0] is None
     )
+
+
+MODE_SCHEMA = StructType(
+    [
+        StructField("i", LongType(), True),
+        StructField("s", StringType(), True),
+        StructField("d", DoubleType(), True),
+        StructField("void", StringType(), True),
+    ]
+)
+# small domains so ties are common; 2 vs 10 and 9.5 vs 10.0 order
+# differently as strings than as numbers
+MODE_ROWS = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.sampled_from([2, 10, -1, 3])),
+        st.one_of(st.none(), st.sampled_from(["b", "a", "B", "ab"])),
+        st.one_of(st.none(), st.sampled_from([9.5, 10.0, -1.25, 0.0])),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=MODE_ROWS, n_parts=st.integers(min_value=1, max_value=7))
+def test_compute_modes_matches_count_desc_string_asc(spark, rows, n_parts):
+    """Mode = (count DESC, str(value) ASC) over non-null values, whatever
+    the partitioning; an all-null column has no mode."""
+    import pandas as pd
+
+    df = spark.createDataFrame([(*r, None) for r in rows], MODE_SCHEMA).repartition(n_parts)
+    pdf = pd.DataFrame(rows, columns=["i", "s", "d"], dtype=object)
+    want = {}
+    for c in pdf.columns:
+        counts = pdf[c].dropna().map(str).value_counts()
+        if len(counts):
+            want[c] = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+    assert compute_modes(df, ["i", "s", "d", "void"]) == want
 
 
 @SLOW
