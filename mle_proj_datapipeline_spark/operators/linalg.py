@@ -189,8 +189,9 @@ def top_eigvec(
     with microseconds. Above the gate the distributed rounds run
     unchanged: the vector frame is d rows, broadcast-hinted into every
     matvec join (checkpointed frames carry no size stats, so Catalyst
-    would otherwise sort-merge-shuffle the d² matrix each round)."""
-    cov = cov.localCheckpoint()
+    would otherwise sort-merge-shuffle the d² matrix each round). Only
+    that arm cuts the covariance's lineage, since its rounds re-read
+    it; the driver arm evaluates it once in the collect."""
     if driver_max_dim and dim <= driver_max_dim:
         import numpy as np
 
@@ -217,6 +218,7 @@ def top_eigvec(
             [(int(j), float(v[j]), eigval) for j in range(dim)],
             "j INT, v DOUBLE, eigval DOUBLE",
         )
+    cov = cov.localCheckpoint()
     v = cov.select(F.col("j")).distinct().withColumn(
         "v", F.lit(1.0 / dim ** 0.5)
     )

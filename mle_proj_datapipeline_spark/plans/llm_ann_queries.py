@@ -15,7 +15,7 @@ from mle_proj_datapipeline_spark.operators import kmeans as _km
 from mle_proj_datapipeline_spark.operators import veclib as _vl
 from mle_proj_datapipeline_spark.plans.llm_common import _COSINE, _bucket_sql
 from mle_proj_datapipeline_spark.plans.registry import register
-from mle_proj_datapipeline_spark.sources.catalog import load_table
+from mle_proj_datapipeline_spark.sources.catalog import load_table, source_fingerprint
 
 # --------------------------------------------------------------------------
 # Similarity: brute-force cosine top-k
@@ -480,15 +480,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _source_fingerprint(sf_dir: str, table: str) -> str:
-    """Staleness key for a persisted index — see
-    sources/catalog.source_fingerprint (moved there so other families
-    can pin snapshots without importing this module's closure)."""
-    from mle_proj_datapipeline_spark.sources.catalog import source_fingerprint
-
-    return source_fingerprint(sf_dir, table)
-
-
 @register("ann_lsh_indexed_top1", oracle=_LSH_TOP1_ORACLE)
 def ann_lsh_indexed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH ANN top-1 served from the PERSISTED signature index
@@ -514,7 +505,7 @@ def ann_lsh_indexed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     want = {
         "bands": _vl.BANDS,
         "planes_per_band": _vl.PLANES_PER_BAND,
-        "source": _source_fingerprint(sf_dir, "embeddings"),
+        "source": source_fingerprint(sf_dir, "embeddings"),
     }
     if _lsh.lsh_index_geometry(spark, root) != want:
         _lsh.lsh_index_build(emb, root, meta_extra={"source": want["source"]})

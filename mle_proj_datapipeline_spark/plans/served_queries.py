@@ -34,9 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 # shared verbatim (ORACLES lookups below happen at import time).
 import mle_proj_datapipeline_spark.plans.featurize_queries  # noqa: F401
 import mle_proj_datapipeline_spark.plans.rollup_queries  # noqa: F401
-from mle_proj_datapipeline_spark.plans.llm_ann_queries import _source_fingerprint
 from mle_proj_datapipeline_spark.plans.registry import ORACLES, register
-from mle_proj_datapipeline_spark.sources.catalog import load_table
+from mle_proj_datapipeline_spark.sources.catalog import load_table, source_fingerprint
 from mle_proj_datapipeline_spark.sources.metrics import warehouse_root
 
 
@@ -52,7 +51,7 @@ def _ensure_stream_state(
     tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
     root = os.path.join(warehouse_root(), f"{name}_{tag}")
     meta_path = os.path.join(root, "meta.json")
-    want = {"source": _source_fingerprint(sf_dir, table)}
+    want = {"source": source_fingerprint(sf_dir, table)}
     have = None
     if os.path.exists(meta_path):
         try:

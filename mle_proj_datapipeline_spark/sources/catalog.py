@@ -11,12 +11,11 @@ thin loader + view registrar.
 from __future__ import annotations
 
 import os
-import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+from mle_proj_datapipeline_spark.sources.readers import file_listing, read_parquet
 
 TABLES = (
     "region",
@@ -41,9 +40,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark 4 rejects
     (PARQUET_TYPE_ILLEGAL); we read nanos as long and convert to a
     microsecond timestamp with exact integer division (`div`, not `/` —
-    double division loses precision above 2^53 ns)."""
+    double division loses precision above 2^53 ns).
+
+    The scan is ``readers.read_parquet``: the footer schema is inferred
+    on the first load of a table and remembered, keyed on the path and
+    the inference confs, beside the table's file state (path, size,
+    mtime per file). Later loads of unchanged files declare that schema
+    and run no job; a changed file state or conf infers again."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -62,44 +67,12 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
-def _hadoop_file_listing(path: str) -> list[str]:
-    """``path:size:mtime_ms`` per file under ``path`` (recursive,
-    sorted), through the active session's Hadoop FileSystem — the same
-    listing every other storage-layer operation uses (the
-    snapshots.list_subdirs pattern), so hdfs:// and s3a:// sf_dirs
-    fingerprint by real file state. Raises when no SparkSession is
-    active: a constant fingerprint would pin persisted snapshots to
-    stale sources (silent stale serving), strictly worse than failing."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError(
-            f"source_fingerprint({path!r}): path has a URI scheme but no "
-            "SparkSession is active to list it through the Hadoop "
-            "FileSystem; refusing to return a constant fingerprint"
-        )
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return []
-    parts = []
-    it = fs.listFiles(jpath, True)  # recursive; yields files only
-    while it.hasNext():
-        st = it.next()
-        parts.append(
-            f"{st.getPath().toString()}:{st.getLen()}:{st.getModificationTime()}"
-        )
-    return sorted(parts)
-
-
 def source_fingerprint(sf_dir: str, table: str) -> str:
     """Content fingerprint of a source table's files (path, size, mtime
-    per file) — NO data scan; the staleness key for a persisted index
-    or derived snapshot. The testdata parquet is regenerated between
-    driver rounds, so state keyed on geometry alone would silently
-    serve the OLD corpus.
+    per file, from ``readers.file_listing``) — NO data scan; the
+    staleness key for a persisted index or derived snapshot. Source
+    parquet can be regenerated in place between runs, so state keyed
+    on geometry alone would silently serve the OLD corpus.
 
     Plain local paths stat through the OS (no JVM round-trip, and
     byte-stable with the pre-round-9 fingerprint format, so upgrading
@@ -109,18 +82,5 @@ def source_fingerprint(sf_dir: str, table: str) -> str:
     fingerprint-pinned snapshots never invalidated (ADVICE r7 #2)."""
     import hashlib
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if _URI_SCHEME.match(sf_dir):
-        parts = _hadoop_file_listing(path)
-    else:
-        parts = []
-        if os.path.isdir(path):
-            for dirpath, _, names in sorted(os.walk(path)):
-                for n in sorted(names):
-                    p = os.path.join(dirpath, n)
-                    st = os.stat(p)
-                    parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(path):
-            st = os.stat(path)
-            parts.append(f"{path}:{st.st_size}:{st.st_mtime_ns}")
+    parts = file_listing(os.path.join(sf_dir, f"{table}.parquet"))
     return hashlib.md5("|".join(parts).encode()).hexdigest()

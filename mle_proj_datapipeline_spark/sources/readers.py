@@ -4,14 +4,42 @@ The reference reads CSV with ``inferSchema=True`` (reference:
 utils/silver_credit_history.py:7 et al.) — a two-pass scan that is
 unacceptable at 100 TB and yields drift-prone types. Every engine read
 declares a StructType; malformed rows route to a permissive-mode corrupt
-column instead of failing the job.
+column instead of failing the job. Parquet carries its schema in the
+file footers: ``read_parquet`` infers it once per file state and then
+declares the remembered StructType.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import threading
+from collections import OrderedDict
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
+
+_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+
+# Session confs under which the same parquet files infer to different
+# schemas; a remembered schema is served only under the values it was
+# inferred with.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# Inferred parquet schemas kept by read_parquet, least recently used
+# dropped first: (paths, conf values) -> (file state, schema).
+_SCHEMA_MEMORY_SIZE = 256
+_schemas: OrderedDict = OrderedDict()
+_schemas_lock = threading.Lock()
 
 
 def read_csv(
@@ -41,12 +69,101 @@ def read_csv(
     return reader.csv(path)
 
 
+def _hadoop_file_listing(path: str, spark: SparkSession | None) -> list[str]:
+    """``path:size:mtime_ms`` per file under a schemed ``path``
+    (recursive, sorted), through the session's Hadoop FileSystem — the
+    same listing every other storage-layer operation uses (the
+    snapshots.list_subdirs pattern), so hdfs:// and s3a:// paths are
+    keyed by real file state. Raises when no SparkSession is active: a
+    constant listing would pin persisted state to stale sources (silent
+    stale serving), strictly worse than failing."""
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError(
+            f"file_listing({path!r}): path has a URI scheme but no "
+            "SparkSession is active to list it through the Hadoop "
+            "FileSystem; refusing to return a constant listing"
+        )
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return []
+    parts = []
+    it = fs.listFiles(jpath, True)  # recursive; yields files only
+    while it.hasNext():
+        st = it.next()
+        parts.append(
+            f"{st.getPath().toString()}:{st.getLen()}:{st.getModificationTime()}"
+        )
+    return sorted(parts)
+
+
+def file_listing(path: str, spark: SparkSession | None = None) -> list[str]:
+    """File state under ``path``: ``path:size:mtime`` per file
+    (recursive, sorted), ``[]`` when nothing is there — no data is read.
+    The one listing behind ``catalog.source_fingerprint`` and
+    ``read_parquet``'s schema memory.
+
+    Plain local paths stat through the OS (mtime in ns). ``file:/abs``
+    — how Hadoop prints a local file, and so how snapshot manifests
+    list their files — is the local path ``/abs``. Paths with a
+    ``scheme://`` (hdfs://, s3a://, file://) list through the Hadoop
+    FileSystem of ``spark`` or the active session (mtime in ms)."""
+    if _URI_SCHEME.match(path):
+        return _hadoop_file_listing(path, spark)
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+    parts = []
+    if os.path.isdir(path):
+        for dirpath, _, names in sorted(os.walk(path)):
+            for n in sorted(names):
+                p = os.path.join(dirpath, n)
+                st = os.stat(p)
+                parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
+    elif os.path.exists(path):
+        st = os.stat(path)
+        parts.append(f"{path}:{st.st_size}:{st.st_mtime_ns}")
+    return parts
+
+
 def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
-    """Parquet scan. Prefer ONE partitioned root + a partition predicate
-    over enumerating paths (reference anti-pattern:
+    """The engine's parquet scan. Prefer ONE partitioned root + a
+    partition predicate over enumerating paths (reference anti-pattern:
     utils/model_operations.py:33-35 passes 50 explicit weekly paths) —
-    partition pruning then happens in the optimizer, not in Python."""
-    return spark.read.parquet(*paths)
+    partition pruning then happens in the optimizer, not in Python.
+
+    A bare parquet read runs one footer-inference job. This reader
+    remembers the schema Spark inferred, keyed on the path tuple and
+    the session's values of the inference confs (``_INFERENCE_CONFS``:
+    nanosAsLong, binaryAsString, int96AsTimestamp, inferTimestampNTZ,
+    caseSensitive, mergeSchema, partition type inference), next to the
+    file state of those paths (``file_listing``: path, size and mtime
+    per file). A read with the same key and the same file state scans
+    with the remembered schema and runs no job. It infers again — and
+    replaces the entry — when any file is added, removed, resized or
+    touched, or when a conf differs. A path whose listing is empty
+    (missing, a glob, or a form the listing cannot resolve) is never
+    served from memory. The memory is an LRU of
+    ``_SCHEMA_MEMORY_SIZE`` entries."""
+    key = (paths, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    listings = [file_listing(p, spark) for p in paths]
+    state = tuple(tuple(x) for x in listings) if paths and all(listings) else None
+    with _schemas_lock:
+        hit = _schemas.get(key)
+        schema = hit[1] if hit is not None and hit[0] == state else None
+        if schema is not None:
+            _schemas.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if state is not None:
+        with _schemas_lock:
+            _schemas[key] = (state, df.schema)
+            _schemas.move_to_end(key)
+            while len(_schemas) > _SCHEMA_MEMORY_SIZE:
+                _schemas.popitem(last=False)
+    return df
 
 
 def read_json(

@@ -57,6 +57,8 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mle_proj_datapipeline_spark.sources.readers import read_parquet
+
 SNAP_DIR = "_snapshots"
 
 # A commit claim younger than this is treated as a possibly-live writer
@@ -388,11 +390,17 @@ def read_snapshot(
     as_of: float | None = None,
 ) -> DataFrame:
     """Read one table version: latest by default, a pinned ``version``,
-    or time travel to the latest snapshot with timestamp ≤ ``as_of``."""
+    or time travel to the latest snapshot with timestamp ≤ ``as_of``.
+
+    The version's files go through ``readers.read_parquet``, keyed on
+    the manifest's file tuple and the inference confs: the first read
+    of a version infers its schema, later reads of the same files
+    (same paths, sizes and mtimes) declare it and run no job. A new
+    commit lists new files, so it is inferred again."""
     snap = _resolve(spark, root, version, as_of)
     if not snap["files"]:
         raise ValueError(f"snapshot v{snap['version']} is empty")
-    return spark.read.parquet(*snap["files"])
+    return read_parquet(spark, *snap["files"])
 
 
 def merge_snapshot(
@@ -495,7 +503,7 @@ def snapshot_changes(
     if to_version < from_version:
         raise ValueError(f"to_version {to_version} < from_version {from_version}")
     if to_version == from_version:
-        base = spark.read.parquet(*snaps[from_version]["files"])
+        base = read_parquet(spark, *snaps[from_version]["files"])
         return base.limit(0).withColumn("_change_type", F.lit("insert"))
 
     chain = [
@@ -507,14 +515,14 @@ def snapshot_changes(
         old_files = set(snaps[from_version]["files"])
         delta = [f for f in snaps[to_version]["files"] if f not in old_files]
         if not delta:
-            base = spark.read.parquet(*snaps[from_version]["files"])
+            base = read_parquet(spark, *snaps[from_version]["files"])
             return base.limit(0).withColumn("_change_type", F.lit("insert"))
-        return spark.read.parquet(*delta).withColumn(
+        return read_parquet(spark, *delta).withColumn(
             "_change_type", F.lit("insert")
         )
 
-    old = spark.read.parquet(*snaps[from_version]["files"])
-    new = spark.read.parquet(*snaps[to_version]["files"])
+    old = read_parquet(spark, *snaps[from_version]["files"])
+    new = read_parquet(spark, *snaps[to_version]["files"])
     inserted = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
     deleted = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
     return inserted.unionByName(deleted)
@@ -667,7 +675,7 @@ def maintain_rollup(
     if view_hist and not new_files:
         return {"mode": "noop", "scanned_files": 0, "version": None}
 
-    delta = partials(spark.read.parquet(*new_files))
+    delta = partials(read_parquet(spark, *new_files))
     if view_hist:
         prev = read_snapshot(spark, view_root)
         merged = prev.unionByName(delta).groupBy(*keys).agg(

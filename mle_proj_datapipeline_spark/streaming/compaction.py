@@ -36,6 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mle_proj_datapipeline_spark.sources.readers import read_parquet
 from mle_proj_datapipeline_spark.sources.snapshots import (
     delete_dir,
     expire,
@@ -94,13 +95,20 @@ def served_state(
     corpus commits zero batch partials, and the served model is then the
     empty relation with that schema (empty-table fuzz find, round 7).
     Without it, missing state stays a hard error, because for a direct
-    caller it usually means the maintenance pass never ran."""
+    caller it usually means the maintenance pass never ran.
+
+    Both reads go through ``readers.read_parquet`` (the base via
+    ``read_snapshot``), keyed on the path and the inference confs: the
+    partials root's schema is inferred once and served from memory
+    while its file state (path, size, mtime of every file) is
+    unchanged. A new ``batch_id=`` partition, a GC'd one or a new
+    compaction commit changes that state and infers again."""
     wm, base = _watermark_and_base(spark, partials_dir)
     cols = [*key_cols, val_col]
     frames = []
     if any(bid > wm for bid in _partial_ids(spark, partials_dir)):
         frames.append(
-            spark.read.parquet(partials_dir)
+            read_parquet(spark, partials_dir)
             .filter(F.col("batch_id") > wm)
             .select(*cols)
         )
@@ -143,7 +151,7 @@ def compact_state(
     folded_through = max(live_ids)
     cols = [*key_cols, val_col]
     merged = (
-        spark.read.parquet(partials_dir)
+        read_parquet(spark, partials_dir)
         .filter((F.col("batch_id") > wm) & (F.col("batch_id") <= folded_through))
         .select(*cols)
     )

@@ -31,6 +31,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.utils import AnalysisException
 
 from mle_proj_datapipeline_spark.operators.hashing import exact_dedup
+from mle_proj_datapipeline_spark.sources.readers import read_parquet
 from mle_proj_datapipeline_spark.streaming.weekly import file_stream
 
 # Gopher-style keep rules (plans/llm_text_queries.doc_repetition_quality)
@@ -62,7 +63,7 @@ def quality_keep(docs: DataFrame) -> DataFrame:
 
 def _existing_hashes(spark: SparkSession, corpus_dir: str) -> DataFrame:
     try:
-        return spark.read.parquet(corpus_dir).select("content_hash").distinct()
+        return read_parquet(spark, corpus_dir).select("content_hash").distinct()
     except AnalysisException:
         return spark.createDataFrame([], "content_hash string")
 

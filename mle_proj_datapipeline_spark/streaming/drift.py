@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from mle_proj_datapipeline_spark.plans.profile_queries import PSI_EPS, PSI_QS
+from mle_proj_datapipeline_spark.sources.readers import read_parquet
 from mle_proj_datapipeline_spark.streaming.weekly import file_stream
 
 
@@ -167,7 +168,7 @@ def psi_series(
     through the stream — the realistic deploy, where training data is
     historical and only new data lands in the monitor."""
     cnt = (
-        spark.read.parquet(counts_dir)
+        read_parquet(spark, counts_dir)
         .groupBy("wk", "bucket")
         .agg(F.sum("n").alias("n"))
     )

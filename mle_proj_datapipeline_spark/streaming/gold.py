@@ -40,6 +40,7 @@ from mle_proj_datapipeline_spark.plans.medallion import (
     gold_label_store,
     week_of,
 )
+from mle_proj_datapipeline_spark.sources.readers import read_parquet
 from mle_proj_datapipeline_spark.streaming.weekly import file_stream
 
 SILVER_TABLES = ("credit_history", "demographic", "financial", "loan_terms")
@@ -52,7 +53,7 @@ def partition_weeks(spark: SparkSession, path: str) -> set[str]:
     try:
         return {
             r["wk"]
-            for r in spark.read.parquet(path)
+            for r in read_parquet(spark, path)
             .select(F.col("snapshot_week").cast("string").alias("wk"))
             .distinct()
             .collect()
@@ -84,7 +85,7 @@ def maintain_gold(
         return []
 
     silvers: dict[str, DataFrame] = {
-        t: spark.read.parquet(f"{silver_root}/{t}").filter(
+        t: read_parquet(spark, f"{silver_root}/{t}").filter(
             F.col("snapshot_week").cast("string").isin(target)
         )
         for t in SILVER_TABLES
@@ -121,7 +122,7 @@ def incremental_gold(
     rebuilt: list[str] = []
 
     for t in SILVER_TABLES:
-        schema = spark.read.parquet(f"{silver_root}/{t}").schema
+        schema = read_parquet(spark, f"{silver_root}/{t}").schema
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
             weeks = {

@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
+from mle_proj_datapipeline_spark.sources.readers import read_parquet
 from mle_proj_datapipeline_spark.streaming.weekly import file_stream
 
 
@@ -55,7 +56,7 @@ def _latest_snapshot(spark: SparkSession, last_dir: str, before: int) -> DataFra
 
     if not any(n.startswith("batch_id=") for n in list_subdirs(spark, last_dir)):
         return None  # first batch: no state committed yet
-    snaps = spark.read.parquet(last_dir)
+    snaps = read_parquet(spark, last_dir)
     ids = [r["batch_id"] for r in snaps.select("batch_id").distinct().collect()]
     prior = [i for i in ids if i < before]
     if not prior:
@@ -145,7 +146,7 @@ def served_matrix(spark: SparkSession, state_root: str) -> DataFrame:
     """The maintained matrix: merge per-batch pair partials and
     row-normalize — |event_types|² rows regardless of batch count."""
     t = (
-        spark.read.parquet(f"{state_root}/pairs")
+        read_parquet(spark, f"{state_root}/pairs")
         .groupBy("prev", "next")
         .agg(F.sum("c").alias("c"))
     )

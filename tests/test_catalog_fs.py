@@ -11,6 +11,7 @@ import os
 import pytest
 
 from mle_proj_datapipeline_spark.sources.catalog import source_fingerprint
+from mle_proj_datapipeline_spark.sources.readers import file_listing
 
 
 def test_fingerprint_local_format_unchanged(tmp_path):
@@ -78,3 +79,21 @@ def test_fingerprint_schemed_path_raises_without_session(monkeypatch):
     )
     with pytest.raises(RuntimeError, match="no SparkSession is active"):
         source_fingerprint("hdfs://nn/warehouse/sf1", "lineitem")
+
+
+def test_file_listing_resolves_file_uris_and_is_empty_for_globs(tmp_path):
+    """The listing behind source_fingerprint and read_parquet: a
+    ``file:/abs`` URI (how snapshot manifests list files) lists the
+    local path, and a glob or a missing path lists nothing, so
+    read_parquet never serves them from memory."""
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"x" * 3)
+    local = file_listing(str(d))
+    assert len(local) == 1 and local[0].startswith(f"{d}/part-0.parquet:3:")
+    assert file_listing("file:" + str(d)) == local
+    assert source_fingerprint("file:" + str(tmp_path), "t") == source_fingerprint(
+        str(tmp_path), "t"
+    )
+    assert file_listing(str(tmp_path / "t.parque[t]")) == []
+    assert file_listing(str(tmp_path / "absent")) == []
