@@ -16,27 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import mle_proj_datapipeline_spark.plans.relational  # noqa: F401
-import mle_proj_datapipeline_spark.plans.pipeline_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.llm_dedup_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.llm_ann_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.llm_text_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.llm_corpus_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.feature_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.rollup_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.profile_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.series_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.matching_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.lifecycle_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.tpch_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.quality_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.graph_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.sampling_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.stats_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.linalg_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.featurize_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.served_queries  # noqa: F401
-import mle_proj_datapipeline_spark.plans.feature_store  # noqa: F401
+# The driver contract imports every plan module, filling the registry.
+import __spark_entry__  # noqa: F401
 from mle_proj_datapipeline_spark.plans.registry import QUERIES
 from mle_proj_datapipeline_spark.session import get_spark
 

@@ -25,7 +25,6 @@ from mle_proj_datapipeline_spark.operators.veclib import (
     ivf_centroids,
     ivf_min_dist,
     ivf_probes,
-    materialize,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
 

@@ -18,11 +18,16 @@ from mle_proj_datapipeline_spark.operators.veclib import (
     PLANES_PER_BAND,
     cosine,
     hyperplanes,
-    materialize,
     plane_bucket,
     planes_per_band_for,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
+from mle_proj_datapipeline_spark.sources.snapshots import (
+    history,
+    materialize_frame,
+    read_snapshot,
+    write_snapshot,
+)
 
 
 def lsh_topk(
@@ -64,7 +69,7 @@ def lsh_topk(
         ).alias(f"bk{b}")
         for b in range(bands)
     ]
-    base = materialize(
+    base = materialize_frame(
         ensure_parallelism(one).select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("v"), *band_cols
         ),
@@ -135,8 +140,6 @@ def lsh_index_build(
     signature computation — the map-side cost lsh_topk pays on every
     call — is paid once here; serving only runs candidate join +
     rerank. Returns the committed version."""
-    from mle_proj_datapipeline_spark.sources.snapshots import write_snapshot
-
     one = df.select(id_col, vec_col)
     if planes_per_band is None:
         planes_per_band = planes_per_band_for(one.count())
@@ -159,8 +162,6 @@ def lsh_index_build(
 
 def lsh_index_geometry(spark, root: str) -> dict | None:
     """Geometry meta of the committed LSH index, or None if absent."""
-    from mle_proj_datapipeline_spark.sources.snapshots import history
-
     snaps = history(spark, f"{root}/signatures")
     return snaps[-1].get("meta") if snaps else None
 
@@ -170,8 +171,6 @@ def lsh_index_topk(spark, root: str, k: int = 1) -> DataFrame:
     (lsh_index_build): zero signature work — candidates and rerank run
     straight off the committed banded table, identical results to
     lsh_topk over the same corpus/geometry (same oracle)."""
-    from mle_proj_datapipeline_spark.sources.snapshots import read_snapshot
-
     meta = lsh_index_geometry(spark, root)
     if meta is None:
         raise FileNotFoundError(f"no LSH index committed under {root}")
@@ -180,7 +179,7 @@ def lsh_index_topk(spark, root: str, k: int = 1) -> DataFrame:
     # candidate vectors) and re-scanning even a small parquet snapshot
     # 3× costs more than one localCheckpoint of it — and gives AQE
     # exact sizes for the rerank's broadcast decisions.
-    base = materialize(read_snapshot(spark, f"{root}/signatures"))
+    base = materialize_frame(read_snapshot(spark, f"{root}/signatures"))
     return _lsh_rerank(base, int(meta["bands"]), k)
 
 

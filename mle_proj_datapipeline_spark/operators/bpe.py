@@ -40,6 +40,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
+
 DELIM = "||"
 
 
@@ -204,10 +206,9 @@ def bpe_learn(
     # the driver's 8-vs-32-core ratio for bpe_merge_table read 0.89,
     # i.e. serial). Round-robin the raw ids/text BEFORE the encode so
     # the checkpointed stream is spread; no-op at cluster scale.
-    corpus = (
+    corpus = materialize_frame(
         ensure_parallelism(docs.select(text_col))
         .select(encode_tokens(text_col, max_chars).alias("s"))
-        .localCheckpoint()
     )
     merges: list[tuple[int, str, str, int]] = []
     compounds: set[str] = set()
@@ -245,7 +246,7 @@ def bpe_learn(
         # checkpoint only when the lazy replace chain approaches the
         # expression-depth bound (the bpe_apply MAX_EXPR_CHAIN hazard).
         if pending >= MAX_EXPR_CHAIN // 2:
-            corpus = corpus.localCheckpoint()
+            corpus = materialize_frame(corpus)
             pending = 0
     return spark.createDataFrame(
         merges, "step INT, left STRING, right STRING, pair_count BIGINT"

@@ -16,6 +16,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
+
 
 def connected_components(
     pairs: DataFrame,
@@ -51,7 +53,7 @@ def connected_components(
     # generation subtree (MinHash shingle/sig/band work) executes twice
     # inside one job (r12 — the same double-eval the star kernel fixed
     # in round 12 prep; guide §2.4). The cut is pair-list-sized.
-    raw = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
+    raw = materialize_frame(pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     # Small-graph arm: below the gate, per-round shuffle/checkpoint
     # overhead dwarfs the work — one driver union-find replaces the
     # whole iteration (operators/cc_local.py; same canonical labels).
@@ -66,21 +68,19 @@ def connected_components(
 
     if driver_max_edges and raw.count() <= driver_max_edges:
         return union_find_labels(raw, "a", "b")
-    edges = (
+    edges = materialize_frame(
         raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .dropDuplicates(["a", "b"])
-        .localCheckpoint()
     )
     if (
         driver_max_edges
         and edges.filter(F.col("a") <= F.col("b")).count() <= driver_max_edges
     ):
         return union_find_labels(edges, "a", "b")
-    labels = (
+    labels = materialize_frame(
         edges.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
-        .localCheckpoint()
     )
     # Label/min frames are node-sized; checkpointed frames carry no
     # size stats, so without a hint Catalyst reshuffles the EDGE list
@@ -103,13 +103,12 @@ def connected_components(
             .agg(F.min("bc").alias("nbr_comp"))
             .select(F.col("a").alias("node"), "nbr_comp")
         )
-        updated = (
+        updated = materialize_frame(
             labels.join(hint(nbr_min), "node", "left")
             .select(
                 "node",
                 F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
             )
-            .localCheckpoint()
         )
         changed = (
             updated.join(hint(labels.select("node", F.col("comp").alias("old"))), "node")
@@ -156,8 +155,6 @@ def connected_components_star(
     whole iteration history); result-identical (tested)."""
 
     def cut(df: DataFrame, tag: str, rnd: int) -> DataFrame:
-        from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
-
         root = f"{snapshot_root}/{tag}_r{rnd}" if snapshot_root else None
         return materialize_frame(df, root)
 

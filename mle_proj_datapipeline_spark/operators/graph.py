@@ -24,8 +24,12 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 MAX_COOCCUR_SET = 64
 
@@ -145,9 +149,9 @@ def pagerank(
     vector doesn't fit an executor) the joins degrade to plain shuffle
     joins — correctness is identical, only the hint changes.
 
-    ``checkpointer`` overrides per-round lineage truncation (default
-    ``localCheckpoint``); tests pass the identity to inspect the FULL
-    iteration plan and gate on its join strategies.
+    ``checkpointer`` overrides per-round lineage truncation (default:
+    a lazy ``materialize_frame``); tests pass the identity to inspect
+    the FULL iteration plan and gate on its join strategies.
 
     ``symmetric=True`` declares src-set == dst-set (every unordered
     pair present in both orientations — the cooccurrence_pairs /
@@ -173,19 +177,12 @@ def pagerank(
     removes a full |E| shuffle before the loop (guide §2.4: a distinct
     on data that is already unique).
     """
-    # Lazy checkpoint: lineage still truncates and blocks still
-    # materialize exactly once (at first use), but the 2-jobs-per-round
-    # eager scheduling overhead disappears — the fixed-round loop
-    # executes as one job chain (measured ~15% off the warm sf0.1
-    # wall). The edge frames are forced early anyway: the |V| count
-    # below materializes `nodes` (and `e` transitively), and `ed`
-    # materializes in round 1 and serves every later round from its
-    # cached blocks.
-    cut = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if checkpointer is None
-        else checkpointer
-    )
+    # Lazy cuts (see materialize_frame): each frame here feeds one
+    # consumer chain. The edge frames are forced early anyway: the |V|
+    # count below materializes `nodes` (and `e` transitively), and the
+    # edge list materializes in round 1 and serves every later round
+    # from its cached blocks.
+    cut = checkpointer or functools.partial(materialize_frame, eager=False)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not assume_distinct:
         # One |E| exchange serves three consumers (guide §2.4): hash

@@ -17,6 +17,7 @@ from mle_proj_datapipeline_spark.operators.veclib import (
     ivf_min_dist,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 
 def kmeans_fit(
@@ -113,7 +114,7 @@ def kmeans_fit(
         ],
         "cell int, i int, m double",
     )
-    vrows = (
+    vrows = materialize_frame(
         ensure_parallelism(vecs.select(id_col, vec_col))
         .select(
             F.col(id_col).alias("vid"),
@@ -124,7 +125,6 @@ def kmeans_fit(
             (F.col("i0") + 1).alias("i"),
             F.col("v0").cast("double").alias("v"),
         )
-        .localCheckpoint()
     )
 
     def assign(cent: DataFrame) -> DataFrame:

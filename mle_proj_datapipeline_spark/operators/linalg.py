@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
+
 # Above this dimensionality the d² in-row explode (n·d² cell rows
 # materialized before partial aggregation) loses to one BLAS Gramian
 # per partition; below it the JVM explode avoids the Python boundary.
@@ -218,7 +220,7 @@ def top_eigvec(
             [(int(j), float(v[j]), eigval) for j in range(dim)],
             "j INT, v DOUBLE, eigval DOUBLE",
         )
-    cov = cov.localCheckpoint()
+    cov = materialize_frame(cov)
     v = cov.select(F.col("j")).distinct().withColumn(
         "v", F.lit(1.0 / dim ** 0.5)
     )
@@ -231,10 +233,9 @@ def top_eigvec(
             .agg(F.sum(F.col("c") * F.col("v")).alias("u"))
             .select(F.col("i").alias("j"), "u")
         )
-        v = (
+        v = materialize_frame(
             u.withColumn("nrm", F.sqrt(F.sum(F.col("u") * F.col("u")).over(w)))
             .select("j", (F.col("u") / F.col("nrm")).alias("v"))
-            .localCheckpoint()
         )
     eig = u.join(F.broadcast(v), "j").select(
         F.sum(F.col("v") * F.col("u")).alias("eigval")

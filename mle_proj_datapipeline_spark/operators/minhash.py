@@ -28,6 +28,11 @@ from mle_proj_datapipeline_spark.operators.hashing import (
     word_shingles,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
+from mle_proj_datapipeline_spark.sources.snapshots import (
+    materialize_frame,
+    read_snapshot,
+    write_snapshot,
+)
 
 
 def minhash_signature(shingles_col: str) -> Column:
@@ -88,7 +93,6 @@ def minhash_lsh_pairs(
     text_col: str,
     shingle_k: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
     snapshot_root: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
@@ -99,19 +103,18 @@ def minhash_lsh_pairs(
     the (large) shingle arrays out of the band join/distinct shuffles is
     the difference between shuffling ids and shuffling the corpus.
 
-    ``materialize`` computes the shingle+signature table ONCE instead of
-    re-running the md5 folds for each of the four plan arms that read it
-    (band sides a/b, verify sides x/y) — ~1.5× on the measured corpus.
-    Default storage is ``localCheckpoint`` (executor-local); pass
-    ``snapshot_root`` to persist the signature table as a real snapshot
-    version instead — the 100 TB path, where an executor loss must not
-    invalidate hours of signature computation (result-identical, tested).
+    The shingle+signature table is computed ONCE (one lineage cut)
+    instead of re-running the md5 folds for each of the four plan arms
+    that read it (band sides a/b, verify sides x/y) — ~1.5× on the
+    measured corpus. Default storage is ``localCheckpoint``
+    (executor-local); pass ``snapshot_root`` to persist the signature
+    table as a real snapshot version instead — the 100 TB path, where
+    an executor loss must not invalidate hours of signature computation
+    (result-identical, tested).
     """
-    from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
-
-    base = minhash_signature_table(df, id_col, text_col, shingle_k)
-    if materialize or snapshot_root:
-        base = materialize_frame(base, snapshot_root)
+    base = materialize_frame(
+        minhash_signature_table(df, id_col, text_col, shingle_k), snapshot_root
+    )
     banded = base.select("doc", F.explode("bands").alias("band")).select(
         "doc", "band.band_idx", "band.band_key"
     )
@@ -180,12 +183,6 @@ def minhash_lsh_pairs_delta(
     re-delivery) re-derives its pairs from the snapshot instead of
     returning empty (ADVICE r7: the append must not orphan the batch's
     pairs)."""
-    from mle_proj_datapipeline_spark.sources.snapshots import (
-        materialize_frame,
-        read_snapshot,
-        write_snapshot,
-    )
-
     spark = new_docs.sparkSession
     old_base = read_snapshot(spark, signature_root)
     # Idempotent re-delivery: drop doc ids already in the snapshot BEFORE
@@ -239,7 +236,7 @@ def minhash_lsh_pairs_delta(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    pairs = pairs.localCheckpoint()  # materialize BEFORE the append commit
+    pairs = materialize_frame(pairs)  # materialize BEFORE the append commit
     if n_new:
         # Record the batch size in the version's meta (audit trail for
         # the replay contract above); skip the append entirely on a

@@ -23,6 +23,7 @@ from mle_proj_datapipeline_spark.operators.hashing import (
     word_shingles,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 
 def ngram_jaccard_pairs(
@@ -68,11 +69,13 @@ def ngram_jaccard_pairs(
             )
         else:
             block = prefix
-    blocked = ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc"),
-        word_shingles(F.col(text_col), shingle_k).alias("sh"),
-        block.alias("blk"),
-    ).localCheckpoint()  # shingle once, not once per self-join side
+    blocked = materialize_frame(  # shingle once, not once per self-join side
+        ensure_parallelism(df.select(id_col, text_col)).select(
+            F.col(id_col).alias("doc"),
+            word_shingles(F.col(text_col), shingle_k).alias("sh"),
+            block.alias("blk"),
+        )
+    )
     if max_block:
         wb = Window.partitionBy("blk")
         blocked = (
@@ -168,20 +171,19 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming via block LSH:
     fingerprints within hamming d ≤ SIMHASH_BLOCKS-1 share at least one
     of the 15-bit blocks (pigeonhole), so candidates = equi-join per
     block. 15-bit keys (32k values) keep buckets sparse.
 
-    ``materialize``: compute the 60-bit fingerprint fold once instead of
+    The 60-bit fingerprint fold is computed once (one lineage cut), not
     once per self-join side (see minhash_lsh_pairs)."""
-    base = ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc"), simhash(text_col).alias("fp")
+    base = materialize_frame(
+        ensure_parallelism(df.select(id_col, text_col)).select(
+            F.col(id_col).alias("doc"), simhash(text_col).alias("fp")
+        )
     )
-    if materialize:
-        base = base.localCheckpoint()
     blocks = base.select(
         "doc",
         "fp",

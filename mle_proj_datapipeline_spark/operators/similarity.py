@@ -54,7 +54,6 @@ from mle_proj_datapipeline_spark.operators.veclib import (  # noqa: F401
     ivf_centroids,
     ivf_min_dist,
     ivf_probes,
-    materialize,
     norm_double,
     plane_bucket,
     planes_per_band_for,

@@ -178,14 +178,6 @@ def planes_per_band_for(n_rows: int, target_bucket: int = 64) -> int:
     return max(4, math.ceil(math.log2(max(2, n_rows / max(1, target_bucket)))))
 
 
-def materialize(df: DataFrame, snapshot_root: str | None = None) -> DataFrame:
-    """Cut lineage on a computed base table (signatures, buckets) —
-    see sources/snapshots.materialize_frame for the durable contract."""
-    from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
-
-    return materialize_frame(df, snapshot_root)
-
-
 def valid_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",

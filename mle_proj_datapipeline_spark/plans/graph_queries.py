@@ -270,6 +270,8 @@ def supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph speedup; dense-regular cost reduction would require
     approximate counting (edge-sampled wedge checks), out of contract
     for an oracle-gated exact query."""
+    from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
+
     eb = ensure_cooccurrence_edges(spark, sf_dir, "l_suppkey", "cooccur_supp")
     deg = eb.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # Node-cardinality gate for the degree-join hints (ADVICE r11): the
@@ -287,7 +289,7 @@ def supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dst",
     )
     # both orientations exist in eb: keep the one pointing up-rank
-    e = (
+    e = materialize_frame(
         ranked.filter(
             (F.col("deg") < F.col("deg_dst"))
             | ((F.col("deg") == F.col("deg_dst")) & (F.col("src") < F.col("dst")))
@@ -297,7 +299,6 @@ def supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dst").alias("v"),
             F.col("deg_dst").alias("rv"),
         )
-        .localCheckpoint()
     )
     wedge = (
         e.alias("e1")

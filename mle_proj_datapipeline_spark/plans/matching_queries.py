@@ -280,8 +280,8 @@ def customer_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried an output-independent constant — 325.5 s on the round-12
     sparse probe, 15.5 s warm after the rebuild + the CC raw-pair
     materialization fix, FALSIFY_r12.json), CC runs O(log² n) rounds
-    with durable per-round checkpoints over a pair list materialized
-    ONCE, and survivorship is one window + one groupBy on the cluster
+    with executor-local per-round cuts (no snapshot root) over a pair
+    list materialized ONCE, and survivorship is one window + one groupBy on the cluster
     id."""
     from mle_proj_datapipeline_spark.operators import cc as dd
     from mle_proj_datapipeline_spark.operators.symspell import symspell_pairs

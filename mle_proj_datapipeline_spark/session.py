@@ -40,10 +40,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Safe to call repeatedly — Spark returns the active session. When the
-    driver hands us an existing session (``__spark_entry__.entry``), we
-    never call this; engine code must work on any session.
+    Safe to call repeatedly: an already-active session is returned
+    unchanged. ``builder.getOrCreate()`` would re-apply this builder's
+    confs to it — a caller like ``cli.main`` would then reset the
+    owner's ``spark.sql.shuffle.partitions`` (and so AQE's skew
+    decisions) behind its back. When the driver hands us an existing
+    session (``__spark_entry__.entry``), we never call this; engine
+    code must work on any session.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     par = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)

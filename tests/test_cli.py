@@ -48,3 +48,14 @@ def test_cli_single_week_idempotent(spark, source_dir, tmp_path_factory, capsys)
     assert fs.count() == report["feature_store_rows"] > 0
     weeks = {str(r["snapshot_week"]) for r in fs.select("snapshot_week").distinct().collect()}
     assert weeks == {week}
+
+
+def test_get_spark_returns_active_session_unchanged(spark):
+    """``get_spark`` on a running session hands it back as is: the CLI's
+    call must not re-apply its builder confs (shuffle partitions sized
+    to the core count) over the owner's — the fixture's 8 partitions
+    are what AQE's skew split on the LSH band join relies on."""
+    from mle_proj_datapipeline_spark.session import get_spark
+
+    assert get_spark(app_name="weekly_pipeline") is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

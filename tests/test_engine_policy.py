@@ -81,3 +81,13 @@ def test_partitioned_overwrites_set_dynamic_on_writer():
                 assert "partitionOverwriteMode" in chain, (
                     f"{name}: partitioned overwrite without writer-level dynamic option"
                 )
+
+
+def test_lineage_cuts_go_through_materialize_frame():
+    """Every lineage cut is a ``materialize_frame`` call: raw
+    ``localCheckpoint(`` / ``checkpoint(`` live only in the primitive
+    itself (sources/snapshots.py), so each materialization boundary is
+    one greppable call."""
+    pat = re.compile(r"\.(localCheckpoint|checkpoint)\(")
+    found = {name for name, text in _sources().items() if pat.search(text)}
+    assert found == {"sources/snapshots.py"}

@@ -352,3 +352,35 @@ def test_fork_conflict_detection():
     assert _fork_conflict([m(5, 4), m(6, 5), m(7, 5)], 6, 5)
     # Version skip after a crash (no sibling manifest) is NOT a fork.
     assert not _fork_conflict([m(5, 4), m(7, 5)], 7, 5)
+
+
+def test_materialize_frame_eager_and_lazy_cuts(spark):
+    """The default cut runs its job at call time; ``eager=False`` runs
+    none until the first action reads the frame. Both return the same
+    rows."""
+    from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
+    from tests.test_sources import _jobs
+
+    df = spark.range(200).selectExpr("id", "id % 7 AS k")
+    n_eager, eager = _jobs(spark, "cut:eager", lambda: materialize_frame(df))
+    assert n_eager >= 1
+    n_lazy, lazy = _jobs(spark, "cut:lazy", lambda: materialize_frame(df, eager=False))
+    assert n_lazy == 0
+    n_read, rows = _jobs(spark, "cut:lazy-read", lambda: _rows(lazy))
+    assert n_read >= 1
+    assert rows == _rows(eager) == _rows(df)
+
+
+def test_pagerank_default_cuts_stay_lazy(spark):
+    """Pagerank's per-round cuts are lazy: on a 7-node cycle with 4
+    rounds the call runs 23 jobs (30 with eager cuts) and reading the
+    ranks one more. A flip of the default to eager fails here."""
+    from mle_proj_datapipeline_spark.operators.graph import pagerank
+    from tests.test_sources import _jobs
+
+    n = 7
+    edges = spark.createDataFrame([(i, (i + 1) % n) for i in range(n)], "src INT, dst INT")
+    n_call, ranks = _jobs(spark, "pagerank:call", lambda: pagerank(edges, iterations=4))
+    n_read, rows = _jobs(spark, "pagerank:read", ranks.collect)
+    assert (n_call, n_read) == (23, 1)
+    assert len(rows) == n
