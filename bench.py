@@ -97,11 +97,9 @@ HEADLINE = [
 ]
 
 
-def _prev_round_timings() -> tuple[dict[str, float], float, float]:
-    """Per-query steady-state timings (and both calibration-probe
-    readings — fixed-compute JVM seconds and the shuffle probe, 0.0 if
-    the round predates either) from the latest BENCH_r*.json in the
-    repo root — enables round-over-round deltas."""
+def _prev_round_timings() -> dict[str, float]:
+    """Per-query steady-state timings from the latest BENCH_r*.json in
+    the repo root — enables round-over-round deltas."""
     import glob
 
     here = os.path.dirname(os.path.abspath(__file__))
@@ -115,20 +113,10 @@ def _prev_round_timings() -> tuple[dict[str, float], float, float]:
             d = d.get("parsed", d) if isinstance(d, dict) else {}
             q = dict((d or {}).get("queries", {}))
             if q:
-                # calib rides in the compact line from round 9 on, the
-                # shuffle probe from round 11; for earlier rounds they
-                # are 0.0 and normalization is skipped (a same-round
-                # BENCH_DETAIL fallback would pair prev-round timings
-                # with this round's environment — wrong epoch, worse
-                # than no normalization).
-                return (
-                    q,
-                    float((d or {}).get("calib", 0.0) or 0.0),
-                    float((d or {}).get("calib_sh", 0.0) or 0.0),
-                )
+                return q
         except (OSError, ValueError, AttributeError):
             continue
-    return {}, 0.0, 0.0
+    return {}
 
 
 def _calibration_probe(spark) -> dict[str, float]:
@@ -136,9 +124,8 @@ def _calibration_probe(spark) -> dict[str, float]:
     JVM-only aggregation and a constant-size DuckDB scan, each the median
     of 3 runs. Neither touches the engine or the test data, so their
     round-over-round movement measures ENVIRONMENT drift (CPU contention,
-    JVM/JIT state, container throttling) — per-query deltas can then be
-    normalized by the probe ratio instead of re-adjudicating 10-18%
-    whole-bench swings query by query (rounds 7 and 8 both paid that tax).
+    JVM/JIT state, container throttling); the readings ride in the
+    compact line as ``calib``/``calib_sh``.
     """
     jvm_runs: list[float] = []
     for _ in range(3):
@@ -147,11 +134,10 @@ def _calibration_probe(spark) -> dict[str, float]:
             "sum(id * 2654435761 % 1000003) AS s"
         ).write.format("noop").mode("overwrite").save()
         jvm_runs.append(time.perf_counter() - t0)
-    # Shuffle-weighted twin (VERDICT r10 item 7): the compute-only probe
-    # over-corrects compute-heavy queries when drift is in the exchange
-    # path (task scheduling, shuffle I/O, serialization). A constant
-    # 100k-row hash-repartition + aggregation brackets that axis so the
-    # normalized deltas can be read against BOTH ratios.
+    # Shuffle-weighted twin (VERDICT r10 item 7): drift in the exchange
+    # path (task scheduling, shuffle I/O, serialization) does not show in
+    # the compute-only probe. A constant 100k-row hash-repartition +
+    # aggregation brackets that axis.
     shuffle_runs: list[float] = []
     for _ in range(3):
         t0 = time.perf_counter()
@@ -240,14 +226,11 @@ def main() -> None:
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         cold[name] = round(time.perf_counter() - t0, 3)
-        # Probe classification signals (VERDICT r11 item 6), gathered
-        # outside the timed region: Exchange count in the physical plan
-        # proxies per-action stage weight, and the job-count delta
-        # catches iterative/multi-job queries (k-means training,
-        # pagerank, BPE) whose scheduling cost never shows in the final
-        # returned plan. Either being high means exchange/scheduling
-        # drift dominates, so the shuffle probe's ratio matches better
-        # than the fixed-compute probe's.
+        # Plan-shape signals for BENCH_DETAIL.json, gathered outside the
+        # timed region: Exchange count in the physical plan proxies
+        # per-action stage weight, and the job-count delta catches
+        # iterative/multi-job queries (k-means training, pagerank, BPE)
+        # whose scheduling cost never shows in the final returned plan.
         try:
             exchanges[name] = (
                 df._jdf.queryExecution().executedPlan().toString().count("Exchange")
@@ -281,70 +264,10 @@ def main() -> None:
         n: {"min": min(rs), "max": max(rs), "runs": rs} for n, rs in runs.items()
     }
 
-    prev, prev_calib, prev_calib_sh = _prev_round_timings()
+    prev = _prev_round_timings()
     deltas = {
         n: round(timings[n] - prev[n], 3) for n in timings if n in prev
     }
-    # Drift-normalized deltas: scale this round's timing by the inverse
-    # of the environment-probe ratio before differencing. Only available
-    # once the previous round also carried the probe. The shuffle-probe
-    # ratio rides alongside (available from round 12 on) so adjudication
-    # can bracket fixed-compute vs exchange-path drift.
-    drift_ratio = (
-        round(calib["jvm"] / prev_calib, 4) if prev_calib > 0 else None
-    )
-    drift_ratio_shuffle = (
-        round(calib["jvm_shuffle"] / prev_calib_sh, 4)
-        if prev_calib_sh > 0
-        else None
-    )
-    deltas_norm = (
-        {
-            n: round(timings[n] / drift_ratio - prev[n], 3)
-            for n in timings
-            if n in prev
-        }
-        if drift_ratio
-        else {}
-    )
-    deltas_norm_shuffle = (
-        {
-            n: round(timings[n] / drift_ratio_shuffle - prev[n], 3)
-            for n in timings
-            if n in prev
-        }
-        if drift_ratio_shuffle
-        else {}
-    )
-    # Matched normalization (VERDICT r11 item 6): r11's compute-only
-    # probe over-corrected exchange-heavy queries (ann_ivf_trained_topk
-    # read +0.55 s normalized vs +0.1 s raw). Each query now uses the
-    # probe matching its plan class — >= 4 Exchanges in the physical
-    # plan means stage-scheduling/exchange cost dominates at sf0.1, so
-    # the shuffle probe's ratio applies; otherwise the fixed-compute
-    # probe's. Both raw maps ride alongside so adjudication can bracket.
-    _SHUFFLE_CLASS_MIN_EXCHANGES = 4
-    _SHUFFLE_CLASS_MIN_JOBS = 4
-    probe_class = {
-        n: (
-            "shuffle"
-            if exchanges.get(n, 0) >= _SHUFFLE_CLASS_MIN_EXCHANGES
-            or job_counts.get(n, 0) >= _SHUFFLE_CLASS_MIN_JOBS
-            else "compute"
-        )
-        for n in names
-    }
-    deltas_norm_matched = {}
-    for n in timings:
-        if n not in prev:
-            continue
-        r = (
-            drift_ratio_shuffle
-            if probe_class[n] == "shuffle"
-            else drift_ratio
-        )
-        if r:
-            deltas_norm_matched[n] = round(timings[n] / r - prev[n], 3)
     # The driver captures only the tail (~2 KB) of stdout, so the line it
     # parses must stay compact: steady-state totals + per-query warm only,
     # tight separators, 2-decimal precision. Cold timings and
@@ -359,17 +282,9 @@ def main() -> None:
         "cold_value": round(sum(cold.values()), 3),
         "cold_queries": cold,
         "delta_vs_prev_round": deltas,
-        "delta_vs_prev_round_drift_normalized": deltas_norm,
-        "delta_vs_prev_round_drift_normalized_shuffle": deltas_norm_shuffle,
-        "delta_vs_prev_round_drift_normalized_matched": deltas_norm_matched,
-        "probe_class": probe_class,
         "exchange_counts": exchanges,
         "cold_job_counts": job_counts,
         "calibration_probe": calib,
-        "calibration_probe_prev_jvm": prev_calib,
-        "calibration_probe_prev_jvm_shuffle": prev_calib_sh,
-        "drift_ratio_vs_prev": drift_ratio,
-        "drift_ratio_shuffle_vs_prev": drift_ratio_shuffle,
         "warm_reps": reps,
         "warm_spread": spread,
     }

@@ -1,8 +1,7 @@
 """IVF (inverted-file) approximate nearest neighbor: multi-probe
-search, trained codebooks, and the persisted-index serve paths. Split
-out of operators/similarity.py per VERDICT r6 item 6; cell-assignment
-primitives live in operators/veclib.py, codebook training in
-operators/kmeans.py.
+search, trained codebooks, and the persisted-index serve paths.
+Cell-assignment primitives live in operators/veclib.py, codebook
+training in operators/kmeans.py.
 
 Scale design (100 TB): the codebook is driver-held k·dim (broadcast);
 search shuffles once on cell id; the persisted index is a snapshot
@@ -247,43 +246,4 @@ def ivf_index_topk(
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "cosine", "rk")
-    )
-
-
-def ivf_index_append(
-    spark,
-    new_vecs: DataFrame,
-    root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> int:
-    """Incremental index maintenance: assign a NEW batch of vectors
-    against the index's FROZEN codebook (closed-form expression — map
-    work only, no training, history never re-assigned) and append it to
-    the committed assignment table. The standard production ANN-ingest
-    pattern: the codebook retrains on a cadence (ivf_index_build), while
-    arriving batches append cheaply between rebuilds; wiring this into
-    foreachBatch gives streaming index ingestion as-is. Returns the new
-    assignment version.
-
-    The frozen codebook is the one PINNED by the current assignment
-    commit (not the bare latest — a rebuild's freshly committed codebook
-    must not leak into an append against the old assignment), and the
-    append re-records the same pin so the pair stays consistent."""
-    from mle_proj_datapipeline_spark.sources.snapshots import write_snapshot
-
-    book, cells, pinned = _pinned_codebook(spark, root)
-    cell_ids = F.array(*[F.lit(c) for c in cells])
-
-    batch = new_vecs.select(
-        F.col(id_col).alias("vid"),
-        F.element_at(cell_ids, ivf_cell(vec_col, book, round_to=round_to)).alias("cell"),
-        F.col(vec_col).alias("v"),
-    )
-    return write_snapshot(
-        batch,
-        f"{root}/assignment",
-        mode="append",
-        meta={"codebook_version": pinned},
     )

@@ -1,7 +1,6 @@
 """Random-hyperplane LSH approximate nearest neighbor: banded bucket
-top-k and the persisted-index serve paths. Split out of
-operators/similarity.py per VERDICT r6 item 6; vector primitives live
-in operators/veclib.py.
+top-k and the persisted-index serve paths. Vector primitives live in
+operators/veclib.py.
 
 Scale design (100 TB): sign-bit bucket per vector, exact rerank within
 bucket — one shuffle on bucket id, no cross join; the persisted index

@@ -1,6 +1,5 @@
 """Connected-components kernels: min-label propagation and alternating
-large-star/small-star rounds (split out of operators/dedup.py per
-VERDICT r6 item 6). Turns near-dup PAIRS (MinHash/SimHash output) into
+large-star/small-star rounds. Turns near-dup PAIRS (MinHash/SimHash output) into
 near-dup CLUSTERS — the form a training-data pipeline actually consumes
 (keep one canonical doc per cluster).
 

@@ -12,7 +12,7 @@ ship the small side to one node because distribution costs more than it
 buys — with the distributed kernel unchanged above the gate.
 
 The collect site lives in this dedicated module so the engine-policy
-allowlist (tests/test_engine_policy.py) stays per-purpose: dedup.py
+allowlist (tests/test_engine_policy.py) stays per-purpose: cc.py
 itself remains driver-materialization-free.
 """
 

@@ -1,16 +1,15 @@
 """Cross-engine-deterministic hash primitives and dedup geometry
-constants — the stable leaf of the dedup operator family (split out of
-operators/dedup.py per VERDICT r6 item 6 so a kernel edit in one
-family no longer re-stales every query that only needs ``h31``).
+constants — the stable leaf of the dedup operator family (kept apart from
+the kernels so a kernel edit no longer re-stales every query that
+only needs ``h31``).
 
 All hashing is built from one primitive —
 ``H31(s) = int(md5(s)[:15 hex], 16) % (2^31-1)`` — computable
 identically in Spark (conv/substring/md5), DuckDB (hex-literal cast),
 and Python (hashlib), so every dedup query has an exact SQL oracle.
 
-Everything here is either a pure constant, a narrow per-row JVM
-expression (no shuffle), or — for ``exact_dedup`` — a single keyed
-window shuffle. Constants live HERE (not beside their kernels) because
+Everything here is either a pure constant or a narrow per-row JVM
+expression (no shuffle). Constants live HERE (not beside their kernels) because
 the oracle-SQL builders need them without importing kernel code.
 """
 
@@ -19,7 +18,7 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 
 P31 = (1 << 31) - 1  # Mersenne prime 2^31-1: modmul products stay < 2^62
 
@@ -40,35 +39,6 @@ SIMHASH_BLOCKS = 4
 SIMHASH_BLOCK_BITS = 15
 
 LEN_BAND_WIDTH = 16  # tokens per length band in the composite block key
-
-
-def lsh_geometry_for(
-    threshold: float, max_hashes: int = 256
-) -> tuple[int, int, int]:
-    """(bands, rows, n_hashes) whose S-curve midpoint (1/b)^(1/r) sits
-    closest to the target Jaccard ``threshold`` — the production sizing
-    rule the fixed 4x4 test geometry stands in for (its midpoint ~0.71
-    was hand-picked for oracle-verifiable fixtures; at 100 TB you derive
-    the geometry from the dedup threshold, not the other way around).
-
-    Search is over b*r <= max_hashes with b, r >= 2: more hashes sharpen
-    the S-curve (fewer false positives into the verify stage AND fewer
-    false negatives) at linearly more signature compute; callers cap
-    max_hashes by their compute budget. Deterministic tie-break: closer
-    midpoint, then fewer hashes, then more bands (recall over
-    precision)."""
-    if not 0.05 <= threshold <= 0.95:
-        raise ValueError(f"threshold {threshold} outside sane dedup range")
-    best_key: tuple[float, int, int] | None = None
-    best_geom = (0, 0, 0)
-    for b in range(2, max_hashes // 2 + 1):
-        for r in range(2, max_hashes // b + 1):
-            mid = (1.0 / b) ** (1.0 / r)
-            key = (abs(mid - threshold), b * r, -b)
-            if best_key is None or key < best_key:
-                best_key, best_geom = key, (b, r, b * r)
-    assert best_key is not None
-    return best_geom
 
 
 def h31_py(s: str) -> int:
@@ -97,10 +67,3 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over distinct-element arrays, double division parity."""
     return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
-
-
-def exact_dedup(df: DataFrame, content_col: str, order_cols: list[str]) -> DataFrame:
-    """Keep-first exact dedup: one shuffle keyed on md5(content), window
-    rank by ``order_cols`` — deterministic, unlike dropDuplicates."""
-    w = Window.partitionBy(F.md5(F.col(content_col))).orderBy(*[F.asc(c) for c in order_cols])
-    return df.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") == 1).drop("__rk")

@@ -175,49 +175,6 @@ def _asof_nearest(
     )
 
 
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    salt_from: str,
-    n_salts: int = 16,
-    direction: str = "backward",
-    allow_exact_matches: bool = True,
-    tolerance_s: int | None = None,
-) -> DataFrame:
-    """Skew-resistant as-of join — the mitigation asof_join's docstring
-    names, as a code path: when one equality key holds a large fraction
-    of the LEFT rows, its single window partition exceeds an executor's
-    sort budget and AQE cannot split a window. Here the left side adds
-    a deterministic salt from ``salt_from`` (a well-distributed left
-    column, e.g. its primary key) and the RIGHT side replicates into
-    every salt bucket, so each (key, salt) window holds the full right
-    history for the key but only ~1/n_salts of the left rows.
-
-    Result-identical to asof_join (tested). Cost: right rows shuffle
-    n_salts× — size n_salts to the observed skew, and only reach for
-    this when a profile shows a hot key (the unsalted form is one
-    cheaper shuffle)."""
-    lt = left.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_from)), F.lit(n_salts))
-    )
-    rt = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>"))
-    )
-    return asof_join(
-        lt,
-        rt,
-        on=on + ["__salt"],
-        left_ts=left_ts,
-        right_ts=right_ts,
-        direction=direction,
-        allow_exact_matches=allow_exact_matches,
-        tolerance_s=tolerance_s,
-    ).drop("__salt")
-
-
 def range_join_bucketed(
     left: DataFrame,
     right: DataFrame,
@@ -311,33 +268,6 @@ def range_join_bucketed(
     return bucketed.unionByName(fallback).filter(exact)
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    salt_from: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-resistant inner equi-join: the (large, skewed) ``left`` adds a
-    deterministic salt derived from ``salt_from`` (any well-distributed
-    left column, e.g. its primary key); ``right`` replicates each row
-    across all ``n_salts`` buckets. The hot key's rows then spread over
-    ``n_salts`` shuffle partitions instead of one.
-
-    Semantically identical to ``left.join(right, on)`` (tested); use when
-    a single join key exceeds an executor's partition budget and AQE's
-    skew splitting can't help (e.g. the skewed side feeds a window).
-    Deterministic salt (xxhash64, no rand()) keeps results stable across
-    retries and cluster layouts. Cost: right side is written n_salts×
-    into the shuffle — size n_salts to the skew factor, not higher.
-    """
-    lt = left.withColumn("__salt", F.pmod(F.xxhash64(F.col(salt_from)), F.lit(n_salts)))
-    rt = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>"))
-    )
-    return lt.join(rt, on + ["__salt"]).drop("__salt")
-
-
 def merge_upsert(
     target: DataFrame,
     updates: DataFrame,
@@ -386,7 +316,7 @@ def temporal_proximity_join(
 
     Scale: equi-join shuffle on the equality keys; the range predicate
     is evaluated post-match, so cost is Σ per-key (left × right-in-gap),
-    not a cross join. Hot keys: salt (salted_join) or tighten max_gap.
+    not a cross join. Hot keys: salt the equality key or tighten max_gap.
     """
     lft, rgt = left.alias("l"), right.alias("r")
     cond = F.lit(True)

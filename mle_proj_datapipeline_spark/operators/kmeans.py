@@ -1,6 +1,5 @@
 """Distributed k-means (Lloyd's) over embedding columns — trains the
-IVF codebook served by operators/ann_ivf.py. Split out of
-operators/similarity.py per VERDICT r6 item 6; cell-assignment
+IVF codebook served by operators/ann_ivf.py. Cell-assignment
 primitives live in operators/veclib.py.
 """
 

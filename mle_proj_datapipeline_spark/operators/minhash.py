@@ -1,6 +1,5 @@
-"""MinHash + LSH near-duplicate detection kernels (split out of
-operators/dedup.py per VERDICT r6 item 6; geometry constants and the
-H31 primitive live in operators/hashing.py).
+"""MinHash + LSH near-duplicate detection kernels (geometry constants and
+the H31 primitive live in operators/hashing.py).
 
 Scale design (100 TB):
 - Shingling + signatures are narrow per-row map work (no shuffle).
@@ -8,8 +7,6 @@ Scale design (100 TB):
   (band_idx, band_key): one shuffle, AQE-skew-splittable, carrying ids
   only — the corpus text never enters the band shuffle. Candidate
   verification touches only same-bucket pairs.
-- The signature table persists as a snapshot for the incremental
-  (new-batch × corpus) delta path — history is never re-shingled.
 """
 
 from __future__ import annotations
@@ -28,11 +25,7 @@ from mle_proj_datapipeline_spark.operators.hashing import (
     word_shingles,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
-from mle_proj_datapipeline_spark.sources.snapshots import (
-    materialize_frame,
-    read_snapshot,
-    write_snapshot,
-)
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 
 def minhash_signature(shingles_col: str) -> Column:
@@ -143,7 +136,7 @@ def minhash_signature_table(
 ) -> DataFrame:
     """The (doc, shingles, band-keys) base frame minhash_lsh_pairs
     builds internally — exposed so it can be persisted as a snapshot
-    table and maintained incrementally."""
+    table."""
     return (
         ensure_parallelism(df.select(id_col, text_col))
         .select(
@@ -152,99 +145,3 @@ def minhash_signature_table(
         )
         .withColumn("bands", lsh_band_keys("sh"))
     )
-
-
-def minhash_lsh_pairs_delta(
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    signature_root: str,
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """INCREMENTAL near-dup detection: when a batch of new documents
-    lands, compare them against the corpus WITHOUT re-pairing the
-    corpus with itself.
-
-    The existing corpus's signature table lives as a snapshot
-    (minhash_signature_table → sources/snapshots); this computes
-    signatures only for the new batch, band-joins new × (old ∪ new) —
-    every emitted pair touches ≥ 1 new doc — verifies exact Jaccard,
-    appends the new signatures to the snapshot (the table is ready for
-    the next batch), and returns the new pairs.
-
-    Scale: per-batch cost is O(|batch| signatures + band-join fanout of
-    the batch) — history is touched only through the band equi-join,
-    never re-shingled, never re-paired. Invariant (tested):
-    full-corpus pairs == old-corpus pairs ∪ delta pairs — including
-    under at-least-once delivery: a batch whose doc ids are ALREADY in
-    the snapshot (crash between the append commit and the caller
-    durably consuming the returned pairs, or an at-least-once upstream
-    re-delivery) re-derives its pairs from the snapshot instead of
-    returning empty (ADVICE r7: the append must not orphan the batch's
-    pairs)."""
-    spark = new_docs.sparkSession
-    old_base = read_snapshot(spark, signature_root)
-    # Idempotent re-delivery: drop doc ids already in the snapshot BEFORE
-    # pairing or appending — a crash-replayed batch (or an at-least-once
-    # upstream) must not duplicate signature rows, which would multiply
-    # every later batch's verify joins. Mirrors streaming/corpus's
-    # content-hash anti-join.
-    batch_ids = new_docs.select(F.col(id_col).alias("doc")).distinct()
-    new_base = materialize_frame(
-        minhash_signature_table(new_docs, id_col, text_col, shingle_k).join(
-            old_base.select("doc"), "doc", "left_anti"
-        )
-    )
-    # Replay arm (rare): batch ids dropped by the anti-join were
-    # committed by a PRIOR attempt whose returned pairs may never have
-    # been durably consumed. Their signatures are in the snapshot, so
-    # the batch's pairs are re-derivable: band the committed rows as
-    # the query side too. Counts are cheap (batch_ids is the small
-    # batch frame; new_base is materialized) and the semi-join against
-    # the snapshot runs ONLY when a replay is detected — the normal
-    # path pays one distinct+count on the batch, nothing more.
-    n_batch = batch_ids.count()
-    n_new = new_base.count()
-    query_base = new_base
-    if n_new < n_batch:
-        replay_base = old_base.join(batch_ids, "doc", "left_semi")
-        query_base = new_base.unionByName(replay_base)
-    all_base = old_base.unionByName(new_base)
-
-    def banded(base: DataFrame, side: str) -> DataFrame:
-        return base.select("doc", F.explode("bands").alias("b")).select(
-            F.col("doc").alias(side), F.col("b.band_idx").alias("band_idx"),
-            F.col("b.band_key").alias("band_key"),
-        )
-
-    cand = (
-        banded(query_base, "id_n").join(banded(all_base, "id_o"), ["band_idx", "band_key"])
-        .filter(F.col("id_n") != F.col("id_o"))
-        .select(
-            F.least("id_n", "id_o").alias("id_a"),
-            F.greatest("id_n", "id_o").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    x = all_base.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
-    y = all_base.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = (
-        cand.join(x, "id_a")
-        .join(y, "id_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    pairs = materialize_frame(pairs)  # materialize BEFORE the append commit
-    if n_new:
-        # Record the batch size in the version's meta (audit trail for
-        # the replay contract above); skip the append entirely on a
-        # full replay so re-delivery never grows the version history.
-        write_snapshot(
-            new_base,
-            signature_root,
-            mode="append",
-            meta={"delta_batch_docs": n_new},
-        )
-    return pairs

@@ -10,8 +10,7 @@ Arrow), no row-at-a-time serialization.
 All three modalities are REAL and codec-free: ``parse_image_header``
 reads PNG/JPEG/GIF/BMP dimensions from the mandated byte layouts,
 ``png_decode``/``png_encode`` are a complete 8-bit PNG codec on stdlib
-zlib (all five scanline filters on decode), ``resize`` does
-nearest-neighbor resampling through them; ``wav_encode``/``parse_wav``
+zlib (all five scanline filters on decode); ``wav_encode``/``parse_wav``
 round-trip PCM RIFF/WAVE for ``audio_features``; and the video path
 (``avi_encode``/``avi_frames``/``sample_frames``) demuxes a RIFF/AVI
 container of PNG frames — no stubs remain (compressed inter-frame
@@ -21,7 +20,7 @@ real and exact).
 Scale notes: mapInPandas is per-partition streaming — no driver
 materialization; spark.sql.execution.arrow.maxRecordsPerBatch bounds
 batch memory; binary columns must stay OUT of shuffle keys (hash the
-bytes instead — see operators/dedup.exact_dedup).
+bytes instead, as the exact-dedup queries do with ``md5``).
 """
 
 from __future__ import annotations
@@ -394,56 +393,6 @@ def sample_frames(
             )
 
     return df.select(id_col, media_col).mapInPandas(extract, FRAME_STATS_SCHEMA)
-
-
-def resize(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """REAL image resize (no stub) for PNG payloads: pure-Python PNG
-    decode → nearest-neighbor resample (vectorized index take) → PNG
-    re-encode, streamed per Arrow batch via mapInPandas. Non-PNG /
-    undecodable payloads pass through as NULL media with their parsed
-    format recorded, so one bad blob can't kill a 100 TB job."""
-    import numpy as np
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("media", BinaryType(), True),
-            StructField("width", IntegerType(), True),
-            StructField("height", IntegerType(), True),
-        ]
-    )
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for b in pdf[media_col]:
-                try:
-                    arr = png_decode(bytes(b))
-                    ys = (np.arange(height) * arr.shape[0] // height).astype(np.int64)
-                    xs = (np.arange(width) * arr.shape[1] // width).astype(np.int64)
-                    blobs.append(png_encode(arr[ys][:, xs]))
-                except (ValueError, KeyError):
-                    blobs.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media": blobs,
-                    "width": pd.array(
-                        [width if m is not None else None for m in blobs], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [height if m is not None else None for m in blobs], dtype="Int32"
-                    ),
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(do_resize, out_schema)
 
 
 # ---------------------------------------------------------------------------

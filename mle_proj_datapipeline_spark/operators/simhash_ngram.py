@@ -1,6 +1,5 @@
-"""SimHash and blocked n-gram-Jaccard near-duplicate kernels (split out
-of operators/dedup.py per VERDICT r6 item 6; geometry constants and the
-H31 primitive live in operators/hashing.py).
+"""SimHash and blocked n-gram-Jaccard near-duplicate kernels (geometry
+constants and the H31 primitive live in operators/hashing.py).
 
 Scale design (100 TB): fingerprints are narrow per-row JVM folds (one
 md5 per token); candidate generation is block-keyed equi-self-join —
@@ -10,7 +9,6 @@ blocks with a hard ``max_block`` skew cap for the exact-Jaccard form.
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
@@ -129,41 +127,11 @@ def simhash(text_col: str, bits: int = SIMHASH_BITS) -> Column:
     bit j = 1 iff Σ_tokens (±1 by bit j of H60(token)) > 0.
 
     Delegates to the JVM HOF fold — the r12 NumPy-kernel variant
-    (kept below as ``_simhash_numpy``, bit-identical, pinned by test)
-    was REVERTED in r13: the driver read it 1.2 → 2.1 s and the r13
+    (bit-identical; the A/B is in AB_SIMHASH_r13.json) was REVERTED
+    in r13: the driver read it 1.2 → 2.1 s and the r13
     alternated full-bench A/B confirmed the loss under driver
     methodology (see ``_simhash_hof``). Takes a column NAME."""
     return _simhash_hof(text_col, bits)
-
-
-def _simhash_numpy(text_col: str, bits: int = SIMHASH_BITS) -> Column:
-    """r12 vectorized vote fold (NumPy behind a pandas_udf, guide
-    §4.2): md5 token hashing stays in the JVM (cross-engine H60
-    parity), votes fold in NumPy. Bit-identical to ``_simhash_hof``
-    (integer shifts/adds only; NULL text folds to 0L, same as the
-    IF(NULL > 0, …, 0) arm) — retained as the measured-and-rejected
-    reference (OPTIMIZATION_r13.md §simhash), not on any query path."""
-
-    @F.pandas_udf("long")
-    def _fp(hs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        j = np.arange(bits, dtype=np.int64)
-        out = np.zeros(len(hs), dtype=np.int64)
-        for i, v in enumerate(hs.values):
-            if v is None or len(v) == 0:
-                continue  # 0L: the IF(NULL > 0)/empty-fold arm
-            x = np.asarray(v, dtype=np.int64)[:, None]
-            votes = (2 * ((x >> j[None, :]) & np.int64(1)) - 1).sum(axis=0)
-            out[i] = ((votes > 0).astype(np.int64) << j).sum()
-        return pd.Series(out)
-
-    return _fp(
-        F.expr(
-            f"transform(split({text_col}, ' '), "
-            "t -> cast(conv(substring(md5(t),1,15),16,10) as bigint))"
-        )
-    )
 
 
 def simhash_pairs(

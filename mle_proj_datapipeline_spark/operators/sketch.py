@@ -1,7 +1,7 @@
 """Count-Min sketch as a RELATION.
 
 The sketch is a (j, bucket, cell_n) frame of d×w cells over the
-cross-engine H31 hash family (operators/dedup.h31) — not opaque bits, so
+cross-engine H31 hash family (operators/hashing.h31) — not opaque bits, so
 it hash-verifies against a SQL oracle, merges by plain SUM (map-side
 combinable, batch or streaming), and point estimates are a broadcast
 join + MIN. Used by plans/rollup_queries.cm_sketch_heavy_hitters

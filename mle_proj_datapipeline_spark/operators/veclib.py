@@ -3,8 +3,7 @@
 precision ordered folds (dot/norm/cosine — bit-identical to the DuckDB
 oracle's list_reduce), sign-bit plane buckets, IVF cell assignment /
 multi-probe selection, the exact brute-force top-k baseline, and the
-corpus-sized LSH geometry rule. Stable leaf of the ANN family (split
-out of operators/similarity.py per VERDICT r6 item 6).
+corpus-sized LSH geometry rule. Stable leaf of the ANN family.
 
 No MLlib (per engine policy — MLlib LSH .fit() is batch-dependent, like
 the reference's per-batch StringIndexer anti-pattern SURVEY §4.2).

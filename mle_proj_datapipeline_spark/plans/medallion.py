@@ -84,24 +84,6 @@ def to_bronze(df: DataFrame, week_start: str | None = None) -> DataFrame:
     return out
 
 
-def day_of(col: F.Column) -> F.Column:
-    """Day-granularity partition label (daily processing mode)."""
-    return F.date_format(col.cast("date"), "yyyy-MM-dd")
-
-
-def to_bronze_daily(df: DataFrame, day: str | None = None) -> DataFrame:
-    """Daily-mode bronze (reference utils/process_bronze_tables.py:82-89:
-    'for daily processing, get only the specific date'): partition
-    column is ``snapshot_day``; with ``day`` set, exactly that date's
-    rows — the single-date incremental path. The weekly layer is a
-    strict rollup: union of a week's 7 daily partitions == that week's
-    weekly bronze (tested)."""
-    out = df.withColumn("snapshot_day", day_of(F.col("snapshot_date")))
-    if day:
-        out = out.filter(F.col("snapshot_day") == day)
-    return out
-
-
 def silver_credit_history(df: DataFrame) -> DataFrame:
     """utils/silver_credit_history.py: drop red-flag cols, mort_acc flag
     + 0-fill, mode-fill family (ONE job), -1-fill family, parse

@@ -439,10 +439,10 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def purchase_click_window_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL click→purchase attributions within a 1-hour window
-    (operators/joins.temporal_proximity_join) — the batch twin of the
-    watermarked stream-stream interval join
-    (tests/test_streaming.py::test_stream_stream_interval_join runs the
-    SAME operator on two streams and asserts batch parity)."""
+    (operators/joins.temporal_proximity_join). The same operator runs
+    unchanged as a watermarked stream-stream interval join
+    (tests/test_streaming.py::test_stream_stream_interval_join asserts
+    batch parity)."""
     from mle_proj_datapipeline_spark.operators.joins import temporal_proximity_join
 
     e = load_table(spark, sf_dir, "events")

@@ -399,8 +399,8 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic for lineitem.l_suppkey: per-key counts,
     their median / p99 / max, the max-to-median skew ratio, and the
     number of heavy keys (> 2× median). This is the profiling step that
-    decides whether a planned join needs salting (operators/joins.py:
-    salted_join) or can rely on AQE skew splitting.
+    decides whether a planned join needs a salted key or can rely on AQE
+    skew splitting.
 
     Scale: one partial-agg groupBy shuffle on the key produces the
     per-key counts; every later aggregate runs over the counts relation

@@ -137,7 +137,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Python data sources may implement pushFilters (sources/pysource)
+        # Python data sources may implement pushFilters
         "spark.sql.python.filterPushdown.enabled": "true",
     }
     for k, v in runtime.items():

@@ -1,13 +1,9 @@
-from mle_proj_datapipeline_spark.sources.catalog import TABLES, load_table, load_tables, register_views
+from mle_proj_datapipeline_spark.sources.catalog import TABLES, load_table
 from mle_proj_datapipeline_spark.sources.readers import read_csv, read_parquet
-from mle_proj_datapipeline_spark.sources.writers import write_partitioned
 
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
-    "register_views",
     "read_csv",
     "read_parquet",
-    "write_partitioned",
 ]

@@ -54,19 +54,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so the Spark SQL surface works over the same
-    tables the DuckDB oracle sees."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def source_fingerprint(sf_dir: str, table: str) -> str:
     """Content fingerprint of a source table's files (path, size, mtime
     per file, from ``readers.file_listing``) — NO data scan; the

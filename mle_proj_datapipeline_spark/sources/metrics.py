@@ -93,55 +93,3 @@ def write_registry(registry: DataFrame, sf_dir: str) -> int:
 def read_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest committed registry table."""
     return read_snapshot(spark, _table_root("model_registry", sf_dir))
-
-
-# --------------------------------------------------------------------------
-# JDBC twin (VERDICT r4 missing #2): the over-the-wire metrics sink
-# --------------------------------------------------------------------------
-def write_metrics_jdbc(
-    panel: DataFrame,
-    url: str,
-    table: str = "model_metrics",
-    mode: str = "append",
-    driver: str | None = None,
-    **options: str,
-) -> None:
-    """The reference's actual metrics sink is Postgres over the wire
-    (utils/model_inference_utils.py:97-143: INSERT INTO model_metrics).
-    This is the engine's `df.write.format("jdbc")` twin behind the same
-    panel-in contract as write_metrics — used when a real endpoint
-    exists (none ships in this container; the snapshot-table sink is
-    the default and is a semantic superset with time travel).
-
-    Scale note: metrics panels are models x weeks rows — a single-task
-    write; for big JDBC tables set numPartitions/batchsize options to
-    bound connections and round-trips."""
-    w = (
-        panel.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-    )
-    if driver:
-        w = w.option("driver", driver)
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.mode(mode).save()
-
-
-def write_metrics_any(panel: DataFrame, target: str, table: str = "model_metrics") -> int:
-    """Dispatch on the target: a ``jdbc:`` URL goes over the wire
-    (write_metrics_jdbc), anything else is a snapshot-table root
-    (write_metrics). Lets a deployment flip sinks via configuration
-    ($SPARK_GRAFT_METRICS_URL) without touching callers. Returns the
-    committed snapshot version, or -1 for JDBC (no version over the
-    wire)."""
-    if target.startswith("jdbc:"):
-        write_metrics_jdbc(panel, target, table)
-        return -1
-    return write_metrics(panel, target)
-
-
-def resolve_metrics_target(default_root: str) -> str:
-    """$SPARK_GRAFT_METRICS_URL (a jdbc: URL) wins over the managed
-    snapshot root — the single switch a cluster deployment sets."""
-    return os.environ.get("SPARK_GRAFT_METRICS_URL") or default_root

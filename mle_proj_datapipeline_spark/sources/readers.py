@@ -166,32 +166,6 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     return df
 
 
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    permissive: bool = True,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """JSONL scan with a declared schema — same contract as ``read_csv``
-    (no inference pass, corrupt rows quarantined not fatal). For JSON
-    *columns* inside a table use ``from_json`` (see json_event_props);
-    this is for JSON-lines files as a source."""
-    read_schema = (
-        StructType(list(schema.fields) + [StructField(corrupt_col, StringType(), True)])
-        if permissive
-        else schema
-    )
-    reader = spark.read.schema(read_schema)
-    if permissive:
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", corrupt_col
-        )
-    else:
-        reader = reader.option("mode", "FAILFAST")
-    return reader.json(path)
-
-
 def footer_stats(
     spark: SparkSession,
     path: str,
@@ -261,33 +235,3 @@ def footer_stats(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def read_parquet_evolved(
-    spark: SparkSession, path: str, schema: StructType
-) -> DataFrame:
-    """Schema-evolution-tolerant parquet read: files written under
-    OLDER schema versions (missing newer columns) and files carrying
-    columns the engine no longer declares both load into exactly the
-    declared ``schema`` — missing columns materialize as typed NULLs,
-    undeclared columns are dropped, and matching columns are cast to
-    the declared type AFTER the scan (so int files satisfy a bigint
-    declaration). Caveat: parquet schema merge rejects files whose
-    PHYSICAL type differs for the same column — type migrations need a
-    rewrite (or a snapshot-table commit), only add/drop evolves freely.
-
-    ``mergeSchema`` pays one footer pass over the file set (footers
-    only — no data pages), which is the price of not maintaining a
-    table format's schema log; snapshot tables (sources/snapshots.py)
-    carry their schema in the manifest and skip it. Reads stay
-    column-pruned: Catalyst prunes the merged schema down to what the
-    query touches, and columns absent from an individual file are
-    null-filled at the scan, not by a join."""
-    raw = spark.read.option("mergeSchema", "true").parquet(path)
-    present = {f.name for f in raw.schema.fields}
-    cols = [
-        (F.col(f.name).cast(f.dataType) if f.name in present
-         else F.lit(None).cast(f.dataType)).alias(f.name)
-        for f in schema.fields
-    ]
-    return raw.select(*cols)

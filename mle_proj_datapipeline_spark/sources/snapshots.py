@@ -35,8 +35,8 @@ designs of both inform the layout):
   repair a just-committed version may be briefly visible before its
   writer retracts it.
 - OVERWRITE lists only new files; APPEND lists parent files + new.
-  MERGE (upsert) and COMPACT (small-file bin-packing) are rewrites
-  committed as new versions, so both are time-travel-safe.
+  COMPACT (small-file bin-packing) is a rewrite committed as a new
+  version, so it is time-travel-safe.
 - All filesystem access goes through the Hadoop FileSystem API of the
   active session, so the layout works unchanged on HDFS/S3A/local.
 
@@ -54,7 +54,6 @@ from __future__ import annotations
 import json
 import uuid
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from mle_proj_datapipeline_spark.sources.readers import read_parquet
@@ -403,24 +402,6 @@ def read_snapshot(
     return read_parquet(spark, *snap["files"])
 
 
-def merge_snapshot(
-    spark: SparkSession,
-    root: str,
-    updates: DataFrame,
-    keys: list[str],
-    order_col: str | None = None,
-    timestamp: float | None = None,
-) -> int:
-    """MERGE INTO as a snapshot commit: upsert ``updates`` into the
-    latest version (operators/joins.merge_upsert semantics) and commit
-    the result as a new version — the pre-merge table remains readable
-    at its old version/timestamp."""
-    from mle_proj_datapipeline_spark.operators.joins import merge_upsert
-
-    merged = merge_upsert(read_snapshot(spark, root), updates, keys, order_col)
-    return write_snapshot(merged, root, mode="overwrite", timestamp=timestamp)
-
-
 def compact(
     spark: SparkSession,
     root: str,
@@ -470,141 +451,6 @@ def expire(spark: SparkSession, root: str, keep_last: int) -> list[int]:
     return [s["version"] for s in dead]
 
 
-def snapshot_changes(
-    spark: SparkSession,
-    root: str,
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Change-data-feed between two committed versions: the table's rows
-    plus a ``_change_type`` column ('insert' | 'delete'). An update under
-    overwrite/MERGE commits appears as delete(old) + insert(new) — the
-    same convention as lake-format CDF readers.
-
-    Scale shape, in order of preference:
-    - **Append fast path**: when every commit in (from, to] is
-      append-mode, the change set is EXACTLY the data files added along
-      the chain (manifest set difference) — the reader scans only the
-      delta files, never the table. This is what makes incremental
-      consumers (foreachBatch sinks, downstream rollups) O(delta) at
-      100 TB.
-    - **General path** (any overwrite in the chain): full-row symmetric
-      difference via ``exceptAll`` both ways — multiplicity-preserving,
-      shuffles on the row hash. Correct for any commit sequence, cost is
-      O(both versions); the fast path exists so the common append-only
-      case never pays it.
-    """
-    snaps = {s["version"]: s for s in history(spark, root)}
-    if from_version not in snaps:
-        raise ValueError(f"version {from_version} not found under {root}")
-    to_version = to_version if to_version is not None else max(snaps)
-    if to_version not in snaps:
-        raise ValueError(f"version {to_version} not found under {root}")
-    if to_version < from_version:
-        raise ValueError(f"to_version {to_version} < from_version {from_version}")
-    if to_version == from_version:
-        base = read_parquet(spark, *snaps[from_version]["files"])
-        return base.limit(0).withColumn("_change_type", F.lit("insert"))
-
-    chain = [
-        snaps[v] for v in sorted(snaps) if from_version < v <= to_version
-    ]
-    # Versions may skip after crashed claims; the chain is every commit
-    # in the interval. Append-only iff no overwrite-mode commit inside.
-    if all(s["mode"] == "append" for s in chain):
-        old_files = set(snaps[from_version]["files"])
-        delta = [f for f in snaps[to_version]["files"] if f not in old_files]
-        if not delta:
-            base = read_parquet(spark, *snaps[from_version]["files"])
-            return base.limit(0).withColumn("_change_type", F.lit("insert"))
-        return read_parquet(spark, *delta).withColumn(
-            "_change_type", F.lit("insert")
-        )
-
-    old = read_parquet(spark, *snaps[from_version]["files"])
-    new = read_parquet(spark, *snaps[to_version]["files"])
-    inserted = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
-    deleted = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
-    return inserted.unionByName(deleted)
-
-
-def zorder_value(cols: list[str], bits: int = 12) -> "Column":
-    """Morton (z-curve) key: interleave the low ``bits`` bits of the
-    given integer columns — bit j of column i lands at position
-    j*len(cols)+i. Rows close on the curve are close in EVERY listed
-    dimension, which is what makes multi-column min/max pruning work.
-
-    Interleaved positions must stay inside a signed 64-bit key:
-    ``bits * len(cols) <= 63`` or the high bits overflow negative and
-    the curve (hence min/max pruning) silently scrambles."""
-    import pyspark.sql.functions as F
-
-    if bits * len(cols) > 63:
-        raise ValueError(
-            f"zorder_value: bits ({bits}) * len(cols) ({len(cols)}) must be <= 63 "
-            "to fit a signed 64-bit Morton key; reduce bits or cluster columns"
-        )
-    terms = [
-        f"((((`{c}`) >> {j}) & 1) << {j * len(cols) + i})"
-        for i, c in enumerate(cols)
-        for j in range(bits)
-    ]
-    return F.expr("(" + " + ".join(terms) + ")")
-
-
-def cluster_snapshot(
-    spark: SparkSession,
-    root: str,
-    cols: list[str],
-    bits: int = 12,
-    n_files: int = 8,
-    timestamp: float | None = None,
-) -> int:
-    """Z-ORDER the latest version and commit the re-clustered layout as
-    a new version (rows unchanged — like ``compact``, but the file
-    layout now serves MULTI-column predicates: each column is min-max
-    scaled to ``bits`` bits, rows sort by the interleaved Morton key,
-    and ``repartitionByRange`` gives files disjoint z-ranges, so every
-    listed column's per-file min/max spans shrink and parquet
-    footer/row-group pruning can skip files for predicates on ANY of
-    the clustered columns, not just the first sort key.
-
-    Scale: one range-shuffle of the table (same cost class as compact);
-    the min/max scan is a 1-row aggregate. Run it like compaction —
-    after heavy appends, not per commit."""
-    import pyspark.sql.functions as F
-
-    # Keep the interleaved key inside a signed 64-bit value: with many
-    # cluster columns, auto-reduce per-column bits instead of failing.
-    bits = min(bits, 63 // max(len(cols), 1))
-    if bits < 1:
-        raise ValueError("cluster_snapshot: too many cluster columns for a 63-bit key")
-    df = read_snapshot(spark, root)
-    stats = df.agg(
-        *[F.min(c).alias(f"lo_{c}") for c in cols],
-        *[F.max(c).alias(f"hi_{c}") for c in cols],
-    ).collect()[0]
-    scaled = df
-    zcols = []
-    top = (1 << bits) - 1
-    for c in cols:
-        lo, hi = stats[f"lo_{c}"], stats[f"hi_{c}"]
-        span = (hi - lo) or 1
-        zc = f"__zs_{c}"
-        scaled = scaled.withColumn(
-            zc,
-            F.floor((F.col(c).cast("double") - float(lo)) / float(span) * top).cast("long"),
-        )
-        zcols.append(zc)
-    out = (
-        scaled.withColumn("__z", zorder_value(zcols, bits))
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", *zcols)
-    )
-    return write_snapshot(out, root, mode="overwrite", timestamp=timestamp)
-
-
 def materialize_frame(
     df: DataFrame, snapshot_root: str | None = None, *, eager: bool = True
 ) -> DataFrame:
@@ -634,71 +480,3 @@ def materialize_frame(
         write_snapshot(df, snapshot_root, mode="overwrite")
         return read_snapshot(df.sparkSession, snapshot_root)
     return df.localCheckpoint(eager=eager)
-
-
-def maintain_rollup(
-    spark: SparkSession,
-    source_root: str,
-    view_root: str,
-    keys: list[str],
-    sum_cols: list[str],
-    timestamp: float | None = None,
-) -> dict:
-    """Incremental view maintenance for a distributive rollup
-    (count + sums by ``keys``) over an append-only snapshot source.
-
-    Manifests make the delta computable at FILE granularity: the view's
-    last commit records which source files it has absorbed, so a
-    maintenance pass scans only files added since — partial-aggregates
-    the delta, merges it with the current view state (group-by over
-    view ∪ delta-partials: sums and counts are mergeable), and commits
-    the view as a new snapshot. Cost is O(new data + |view|), never
-    O(source history).
-
-    If the source advanced by anything other than appends (overwrite,
-    compaction, expiry), the file delta is not a data delta — the view
-    is rebuilt from the full source (detected, returned as
-    ``mode='rebuild'``). Algebraic finals (avg = sum/n) belong in a
-    reader view; holistic aggregates (median, distinct) are not
-    maintainable this way and must recompute.
-
-    Returns {'mode': 'noop'|'delta'|'rebuild', 'scanned_files': int,
-    'version': int|None}.
-    """
-    import pyspark.sql.functions as F
-
-    src = history(spark, source_root)
-    if not src:
-        raise FileNotFoundError(f"no snapshots under {source_root}")
-    latest = src[-1]
-    view_hist = history(spark, view_root)
-    absorbed = set(view_hist[-1]["meta"].get("source_files", [])) if view_hist else set()
-
-    cur_files = set(latest["files"])
-    new_files = sorted(cur_files - absorbed)
-    removed = absorbed - cur_files
-
-    def partials(df):
-        return df.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("n"), *[F.sum(c).alias(f"sum_{c}") for c in sum_cols]
-        )
-
-    meta = {"source_files": sorted(cur_files), "source_version": latest["version"]}
-    if removed or (view_hist and not new_files and cur_files != absorbed):
-        merged = partials(read_snapshot(spark, source_root))
-        v = write_snapshot(merged, view_root, timestamp=timestamp, meta=meta)
-        return {"mode": "rebuild", "scanned_files": len(cur_files), "version": v}
-    if view_hist and not new_files:
-        return {"mode": "noop", "scanned_files": 0, "version": None}
-
-    delta = partials(read_parquet(spark, *new_files))
-    if view_hist:
-        prev = read_snapshot(spark, view_root)
-        merged = prev.unionByName(delta).groupBy(*keys).agg(
-            F.sum("n").alias("n"),
-            *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols],
-        )
-    else:
-        merged = delta
-    v = write_snapshot(merged, view_root, timestamp=timestamp, meta=meta)
-    return {"mode": "delta", "scanned_files": len(new_files), "version": v}

@@ -8,13 +8,9 @@ resets the clock. That is a per-model ordered fold over weekly metric rows
 window function (each decision depends on *prior decisions*, not prior
 rows).
 
-Three faithful forms, sharing one decision function:
+Two faithful forms, sharing one decision function:
 - ``decide_batch``: per-group ordered fold via ``applyInPandas`` (groups
   are (model)-sized — bounded by #weeks, never by data volume).
-- ``decide_stream``: the same fold as an ``applyInPandasWithState``
-  streaming operator; state = last retrain date per model. Survives
-  restarts via the checkpoint (replaces the reference's JSON file +
-  Airflow Variable state).
 - SQL oracle: a recursive CTE (see plans/lifecycle_queries.py) — proof
   the fold is deterministic and engine-independent.
 
@@ -24,12 +20,10 @@ aggregate (models × weeks), so this operator is never data-volume bound.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -48,8 +42,6 @@ DECISION_SCHEMA = StructType(
         StructField("reason", StringType(), False),
     ]
 )
-
-STATE_SCHEMA = StructType([StructField("last_retrain", StringType(), True)])
 
 
 def _decide(last_retrain: pd.Timestamp | None, week: pd.Timestamp, metric: float) -> str:
@@ -91,38 +83,3 @@ def decide_batch(metrics: DataFrame) -> DataFrame:
 
     return metrics.groupBy("model").applyInPandas(run, DECISION_SCHEMA)
 
-
-def decide_stream(metrics_stream: DataFrame) -> DataFrame:
-    """Streaming twin: per-model GroupState holds the last retrain date;
-    each micro-batch folds its rows in week order from the saved state."""
-
-    def run(
-        key: tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (model,) = key
-        last = pd.Timestamp(state.get[0]) if state.exists and state.get[0] else None
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        out, last = _fold(model, rows, last)
-        state.update((last.strftime("%Y-%m-%d") if last is not None else None,))
-        yield out
-
-    return metrics_stream.groupBy("model").applyInPandasWithState(
-        run,
-        outputStructType=DECISION_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# Note on transformWithStateInPandas (Spark 4's successor stateful API):
-# a twin of decide_stream on that surface existed through round 6, but
-# its Python state-server protocol requires google.protobuf at runtime,
-# which this environment cannot provide (no package installs) — the
-# parity tests could only ever skip. Per VERDICT r6 item 7 the twin was
-# dropped in favor of the applyInPandasWithState form above, which runs
-# and is parity-tested here; on a cluster with protobuf, the same _fold
-# drops into a StatefulProcessor.handleInputRows with one ValueState row
-# per model (see git history for the exact shape).

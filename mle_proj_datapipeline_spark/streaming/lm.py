@@ -6,8 +6,8 @@ The LM "model" is two count relations — unigrams (term, c1) and bigrams
 the CM-sketch pattern (streaming/sketch.py): each micro-batch commits
 its partial counts under a batch_id partition (idempotent dynamic
 overwrite on replay), and the served model is a groupBy-SUM over the
-partials. Bigrams are INTRA-document, so unlike the transition twin
-(streaming/transitions.py) there is no cross-batch boundary state.
+partials. Bigrams are INTRA-document, so there is no cross-batch
+boundary state.
 
 This is incremental tokenizer/LM-statistics training for a growing
 corpus: counts stay mergeable forever, vocabulary size |V| is a

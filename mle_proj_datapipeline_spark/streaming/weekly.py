@@ -1,40 +1,17 @@
-"""Structured Streaming equivalents of the reference's Airflow-driven
-weekly micro-batch machinery (SURVEY.md §2.K):
+"""Structured Streaming form of the reference's Airflow-driven weekly
+micro-batch machinery (SURVEY.md §2.K):
 
 | reference mechanism                          | here                       |
 |----------------------------------------------|----------------------------|
 | FileSensor gating (dags/dag.py:110-140)      | file-source stream         |
-| weekly Sunday..Saturday window               | 7-day tumbling window with |
-|   (utils/process_bronze_tables.py:50-69)     | Sunday-aligned startTime   |
 | strict sequential weeks / depends_on_past    | checkpointed micro-batches |
-| late data silently excluded                  | explicit watermark drop    |
-| catchup backfill (dags/dag.py:78)            | Trigger.AvailableNow       |
-| re-run dedup                                 | dropDuplicatesWithinWatermark |
-
-Epoch day 0 (1970-01-01) is a Thursday; ``startTime='3 days'`` aligns
-tumbling 7-day windows to Sundays (1970-01-04)."""
+| idempotent weekly re-runs                    | dynamic partition overwrite |"""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
-
-SUNDAY_ALIGN = "3 days"
-
-
-def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
-    """Watermarks require TIMESTAMP; parquet written with naive
-    ``timestamp[us]`` (the driver testdata, and any upstream that never
-    set isAdjustedToUTC) reads back as TIMESTAMP_NTZ, which
-    ``withWatermark`` rejects outright. Cast NTZ → TIMESTAMP here, only
-    when the column actually is NTZ — batch twins of these operators run
-    the same cast-free path, and sessions pin UTC so the NTZ→LTZ
-    reinterpretation is the identity on the epoch line."""
-    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
-        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df
 
 
 def file_stream(
@@ -51,92 +28,6 @@ def file_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(source_dir)
-
-
-def weekly_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    watermark: str = "7 days",
-) -> DataFrame:
-    """Sunday-anchored weekly tumbling aggregate with late-data watermark
-    — the declarative form of the bronze week filter. Identical code
-    works in batch (tests assert batch/stream agreement)."""
-    return (
-        ensure_event_time(events, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(F.col(ts_col), "7 days", "7 days", SUNDAY_ALIGN).alias("w"),
-            key_col,
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd").alias("week_start"),
-            key_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def sessionized(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Gap-based session windows (built-in session_window) — the
-    streaming twin of plans/pipeline_queries.user_sessions."""
-    return (
-        ensure_event_time(events, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("s"), key_col)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.date_format("s.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-        )
-    )
-
-
-def stream_dedup(
-    events: DataFrame, keys: list[str], ts_col: str = "ts", watermark: str = "1 hour"
-) -> DataFrame:
-    """Exactly-once keyed dedup within the watermark horizon — replaces
-    the reference's rely-on-idempotent-overwrite re-run semantics."""
-    return (
-        ensure_event_time(events, ts_col)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(keys)
-    )
-
-
-def run_available_now(
-    df: DataFrame, out_dir: str, checkpoint_dir: str, fmt: str = "parquet"
-) -> StreamingQuery:
-    """Backfill-everything-then-stop (Trigger.AvailableNow) — the
-    engine's Airflow catchup. Exactly-once via the checkpoint."""
-    return (
-        df.writeStream.format(fmt)
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> StreamingQuery:
-    """Test/debug sink."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def incremental_silver(

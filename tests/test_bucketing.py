@@ -78,7 +78,7 @@ def test_bucketed_band_self_join_has_no_exchange(spark):
     side. This is the repeated-dedup-runs strategy at 100 TB: pay the
     bucketed write once, run every subsequent candidate generation
     shuffle-free."""
-    from mle_proj_datapipeline_spark.operators.dedup import minhash_signature_table
+    from mle_proj_datapipeline_spark.operators.minhash import minhash_signature_table
 
     docs = load_table(spark, SF_ORACLE, "documents")
     banded = (

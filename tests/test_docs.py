@@ -39,28 +39,6 @@ def test_bench_headline_names_resolve():
     assert not missing, f"headline names not in registry: {missing}"
 
 
-def test_dedup_facade_not_imported_by_engine_code():
-    """operators/dedup.py is a compatibility facade over the split
-    kernels (VERDICT r6 item 6); engine modules must import the
-    specific kernel module, or one kernel edit re-couples every dedup
-    query's staleness closure through the facade."""
-    import pathlib
-
-    pkg = pathlib.Path("mle_proj_datapipeline_spark")
-    offenders = []
-    for py in pkg.rglob("*.py"):
-        if py.name in ("dedup.py", "similarity.py"):
-            continue
-        src = py.read_text()
-        for facade in ("dedup", "similarity"):
-            if (
-                f"operators.{facade} import" in src
-                or f"operators import {facade}" in src
-            ):
-                offenders.append(str(py))
-    assert not offenders, f"import the split kernel, not the facade: {offenders}"
-
-
 def test_customers_without_orders_is_date_bounded():
     """Round-9 fold-back of the round-8 hotfix_r8 overlay: the
     registration lives in plans/relational.py again and must keep the

@@ -28,7 +28,7 @@ def test_hash_sample_is_stable_under_repartition(spark):
 
     a = {r["o_orderkey"] for r in orders_hash_sample(spark, SF_ORACLE).collect()}
     o = load_table(spark, SF_ORACLE, "orders").repartition(7)
-    from mle_proj_datapipeline_spark.operators.dedup import h31
+    from mle_proj_datapipeline_spark.operators.hashing import h31
     from mle_proj_datapipeline_spark.plans.matching_queries import _RATES
 
     rate = F.lit(0)
@@ -43,25 +43,11 @@ def test_hash_sample_is_stable_under_repartition(spark):
     assert a == b and len(a) > 0
 
 
-def test_salted_join_equals_plain_join(spark):
-    """salted_join must be semantically identical to the plain inner
-    equi-join while spreading each key across n_salts shuffle keys."""
-    from mle_proj_datapipeline_spark.operators.joins import salted_join
-
-    o = load_table(spark, SF_ORACLE, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, SF_ORACLE, "customer").select("c_custkey", "c_mktsegment")
-    plain = o.join(c, o.o_custkey == c.c_custkey).select("o_orderkey", "c_mktsegment")
-    salted = salted_join(
-        o, c.withColumnRenamed("c_custkey", "o_custkey"), ["o_custkey"], "o_orderkey", 8
-    ).select("o_orderkey", "c_mktsegment")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
 def test_connected_components_chain_and_islands(spark):
     """Min-label propagation must produce the transitive closure: a
     4-node chain collapses to one component even though no pair spans
     it, and disjoint islands keep distinct ids."""
-    from mle_proj_datapipeline_spark.operators.dedup import connected_components
+    from mle_proj_datapipeline_spark.operators.cc import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20)],
@@ -165,30 +151,6 @@ def test_approx_cardinalities_within_rsd(spark):
         .collect()[0]["e"]
     )
     assert abs(est - exact["n_customers"]) / exact["n_customers"] <= 0.03
-
-
-def test_quality_keep_agrees_with_repetition_query(spark):
-    """Two independent implementations of the Gopher rules — the
-    explode+groupBy batch query and the expression-only streaming
-    variant — must produce identical ttr/top_ratio/keep per doc."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.plans.llm_text_queries import doc_repetition_quality
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.streaming.corpus import quality_keep
-
-    sf = "/root/testdata/sf0.01"
-    batch = {
-        r["doc_id"]: (r["ttr"], r["top_ratio"], r["keep"])
-        for r in doc_repetition_quality(spark, sf).collect()
-    }
-    stream_style = {
-        r["doc_id"]: (r["ttr"], r["top_ratio"], 1 if r["keep"] else 0)
-        for r in quality_keep(load_table(spark, sf, "documents"))
-        .select("doc_id", "ttr", "top_ratio", "keep")
-        .collect()
-    }
-    assert stream_style == batch
 
 
 def test_covariance_gramian_matches_explode_and_dispatch(spark):

@@ -1,6 +1,6 @@
-"""Stateful lifecycle operator tests: the streaming retraining trigger
-(applyInPandasWithState) agrees with its batch twin; state carries across
-micro-batches; decision properties hold."""
+"""Lifecycle operator tests: retraining-decision properties hold, the
+metrics store and model registry round-trip, and the recursive-CTE
+oracle matches the applyInPandas fold."""
 
 from __future__ import annotations
 
@@ -8,11 +8,9 @@ import pandas as pd
 import pytest
 
 from mle_proj_datapipeline_spark.plans.lifecycle_queries import weekly_model_metrics
-from mle_proj_datapipeline_spark.streaming import weekly as W
 from mle_proj_datapipeline_spark.streaming.lifecycle import (
     STALE_DAYS,
     decide_batch,
-    decide_stream,
 )
 from tests.conftest import SF_SMOKE
 
@@ -24,40 +22,6 @@ def metrics_pdf(spark):
 
 def _decisions_dict(rows):
     return {(r["model"], r["week"]): r["reason"] for r in rows}
-
-
-def test_stream_equals_batch(spark, metrics_pdf, tmp_path_factory):
-    """One micro-batch: streaming decisions == batch decisions."""
-    land = str(tmp_path_factory.mktemp("metrics_land"))
-    metrics = spark.createDataFrame(metrics_pdf)
-    metrics.coalesce(1).write.mode("overwrite").parquet(land)
-    stream = W.file_stream(spark, land, metrics.schema)
-    q = W.run_to_memory(decide_stream(stream), "lifecycle_mem", output_mode="append")
-    q.awaitTermination(120)
-    got = _decisions_dict(spark.table("lifecycle_mem").collect())
-    want = _decisions_dict(decide_batch(metrics).collect())
-    assert got == want and len(got) > 0
-
-
-def test_state_carries_across_microbatches(spark, metrics_pdf, tmp_path_factory):
-    """Split the panel at a week boundary into two files, force one file
-    per trigger: decisions in batch 2 must depend on state from batch 1
-    (identical to the single-batch run)."""
-    land = str(tmp_path_factory.mktemp("metrics_land2"))
-    metrics = spark.createDataFrame(metrics_pdf)
-    cut = sorted(metrics_pdf["week"].unique())[len(metrics_pdf["week"].unique()) // 2]
-    early = metrics.filter(metrics.week < cut).coalesce(1)
-    late = metrics.filter(metrics.week >= cut).coalesce(1)
-    early.write.mode("overwrite").parquet(land + "/b1")
-    late.write.mode("overwrite").parquet(land + "/b2")
-    stream = W.file_stream(
-        spark, land + "/*", metrics.schema, max_files_per_trigger=1
-    )
-    q = W.run_to_memory(decide_stream(stream), "lifecycle_mem2", output_mode="append")
-    q.awaitTermination(180)
-    got = _decisions_dict(spark.table("lifecycle_mem2").collect())
-    want = _decisions_dict(decide_batch(metrics).collect())
-    assert got == want and len(got) > 0
 
 
 def test_decision_properties(spark, metrics_pdf):

@@ -226,48 +226,3 @@ def test_training_frame_window_and_join(spark, domain, tmp_path_factory, pipelin
         | (~F.col("grade").isin("D", "E", "F", "G") & (F.col("target") != 0))
     )
     assert bad.count() == 0 and "target" in tf.columns
-
-
-def test_daily_bronze_mode(spark):
-    """Daily-mode bronze (reference process_bronze_tables.py:82-89):
-    single-date filtering, day partition column, and the weekly layer as
-    a strict rollup of daily partitions."""
-    import datetime as dt
-
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.plans.medallion import (
-        to_bronze,
-        to_bronze_daily,
-        week_of,
-    )
-    from mle_proj_datapipeline_spark.schemas import DOMAIN_TABLES
-    from tests.fixtures import gen_domain_tables
-
-    loans = spark.createDataFrame(
-        gen_domain_tables()["loan_terms"], schema=DOMAIN_TABLES["loan_terms"]
-    )
-
-    daily = to_bronze_daily(loans)
-    assert "snapshot_day" in daily.columns
-    # every row keeps its own date as the partition label
-    assert daily.filter(
-        F.col("snapshot_day") != F.date_format("snapshot_date", "yyyy-MM-dd")
-    ).count() == 0
-
-    some_day = daily.select("snapshot_day").first()["snapshot_day"]
-    one = to_bronze_daily(loans, day=some_day)
-    assert one.count() == loans.filter(
-        F.date_format("snapshot_date", "yyyy-MM-dd") == some_day
-    ).count() > 0
-
-    # weekly == union of that week's daily partitions
-    wk = week_of(F.lit(some_day).cast("date"))
-    week_label = spark.range(1).select(wk.alias("w")).first()["w"]
-    days = [
-        (dt.date.fromisoformat(week_label) + dt.timedelta(days=i)).isoformat()
-        for i in range(7)
-    ]
-    weekly_rows = to_bronze(loans, week_start=week_label).count()
-    daily_rows = sum(to_bronze_daily(loans, day=d).count() for d in days)
-    assert weekly_rows == daily_rows > 0

@@ -1,6 +1,6 @@
 """Pure-Python image codec (operators/multimodal): header parse for all
-four formats, PNG round-trip through every scanline filter, and the
-nearest-neighbor resize path — no PIL/libav anywhere."""
+four formats and PNG round-trip through every scanline filter — no
+PIL/libav anywhere."""
 
 from __future__ import annotations
 
@@ -95,22 +95,6 @@ def test_png_decode_all_filters(ftype):
     rng = np.random.default_rng(ftype)
     arr = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
     assert np.array_equal(png_decode(_filtered_png(arr, ftype)), arr)
-
-
-def test_resize_nearest_neighbor(spark):
-    from mle_proj_datapipeline_spark.operators.multimodal import resize
-
-    rng = np.random.default_rng(0)
-    arr = rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    df = spark.createDataFrame([(1, bytearray(png_encode(arr)))], "doc_id long, media binary")
-    [row] = resize(df, width=4, height=4).collect()
-    assert (row["width"], row["height"]) == (4, 4)
-    assert np.array_equal(png_decode(bytes(row["media"])), arr[::2, ::2])
-
-    # undecodable payload -> NULL media, job survives
-    bad = spark.createDataFrame([(2, bytearray(b"junk"))], "doc_id long, media binary")
-    [r2] = resize(bad, width=4, height=4).collect()
-    assert r2["media"] is None and r2["width"] is None
 
 
 def test_wav_roundtrip_mono():

@@ -1,8 +1,8 @@
 """Property-based tests (hypothesis) — the invariants SURVEY.md §5
-commits to: imputation leaves no nulls in declared columns; dedup is
-idempotent; the week partitioner maps every date to exactly one
-Sunday-anchored week; PSI(x, x) = 0; fingerprints are permutation-
-sensitive but duplication-stable."""
+commits to: imputation leaves no nulls in declared columns; the week
+partitioner maps every date to exactly one Sunday-anchored week;
+PSI(x, x) = 0; fingerprints are permutation-sensitive but
+duplication-stable."""
 
 from __future__ import annotations
 
@@ -19,7 +19,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mle_proj_datapipeline_spark.operators.dedup import exact_dedup
 from mle_proj_datapipeline_spark.operators.impute import ImputeSpec, compute_modes, impute
 from mle_proj_datapipeline_spark.operators.psi import psi
 from mle_proj_datapipeline_spark.plans.medallion import week_of
@@ -101,21 +100,6 @@ def test_compute_modes_matches_count_desc_string_asc(spark, rows, n_parts):
 
 
 @SLOW
-@given(rows=st.lists(st.sampled_from(["x", "y", "z"]), min_size=1, max_size=30))
-def test_exact_dedup_idempotent(spark, rows):
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(rows)], ["id", "content"])
-    once = exact_dedup(df, "content", ["id"])
-    twice = exact_dedup(once, "content", ["id"])
-    got_once = sorted(map(tuple, once.collect()))
-    assert got_once == sorted(map(tuple, twice.collect()))
-    # keeps exactly one row per distinct content, the min id
-    assert len(got_once) == len(set(rows))
-    for i, v in enumerate(rows):
-        if i == min(j for j, w in enumerate(rows) if w == v):
-            assert (i, v) in got_once
-
-
-@SLOW
 @given(
     d=st.dates(min_value=dt.date(1990, 1, 1), max_value=dt.date(2030, 12, 31)),
 )
@@ -151,7 +135,7 @@ EDGES = st.lists(
 def test_connected_components_matches_union_find(spark, edges):
     """Min-label propagation must agree with a reference union-find on
     arbitrary graphs (self-loops, duplicates, chains, cycles)."""
-    from mle_proj_datapipeline_spark.operators.dedup import connected_components
+    from mle_proj_datapipeline_spark.operators.cc import connected_components
 
     parent: dict[int, int] = {}
 
@@ -182,7 +166,7 @@ def test_connected_components_matches_union_find(spark, edges):
     }
     assert got == expected
 
-    from mle_proj_datapipeline_spark.operators.dedup import connected_components_star
+    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
 
     got_star = {
         r["node"]: r["comp"]
@@ -203,7 +187,7 @@ def test_driver_gate_counts_pairs_not_directed_rows(spark):
     pairs and silently halved the effective cap). A graph of exactly N
     unique pairs with driver_max_edges=N must take the driver
     union-find arm."""
-    from mle_proj_datapipeline_spark.operators.dedup import connected_components_star
+    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
 
     n_pairs = 10
     pairs = spark.createDataFrame(
@@ -227,7 +211,7 @@ def test_star_cc_chain_converges_logarithmically(spark):
     in O(log² n) rounds — far under the diameter bound."""
     import math
 
-    from mle_proj_datapipeline_spark.operators.dedup import connected_components_star
+    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
 
     n = 1000
     chain = spark.createDataFrame(
@@ -249,10 +233,8 @@ def test_ngram_blocking_bounded_under_hot_prefix(spark):
 
     import pyspark.sql.functions as F
 
-    from mle_proj_datapipeline_spark.operators.dedup import (
-        LEN_BAND_WIDTH,
-        ngram_jaccard_pairs,
-    )
+    from mle_proj_datapipeline_spark.operators.hashing import LEN_BAND_WIDTH
+    from mle_proj_datapipeline_spark.operators.simhash_ngram import ngram_jaccard_pairs
 
     n = 300
     docs = [
@@ -296,7 +278,7 @@ def test_ngram_blocking_bounded_under_hot_prefix(spark):
 
 def test_star_cc_snapshot_path_identical(spark, tmp_path):
     """Durable per-round checkpointing must not change the labeling."""
-    from mle_proj_datapipeline_spark.operators.dedup import connected_components_star
+    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
 
     edges = [(1, 2), (2, 3), (4, 5), (6, 6), (7, 8), (8, 9), (9, 10)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -342,32 +324,6 @@ def test_packing_matches_python_reference(spark, toks):
         want[i] = cum // budget
         cum += n
     assert got == want
-
-
-def test_lsh_geometry_for_targets_threshold():
-    """The derived (bands, rows) S-curve midpoint must land near the
-    requested Jaccard threshold across the practical range, midpoints
-    must track the target monotonically, and the fixed test geometry
-    must be recoverable as a special case."""
-    import math
-
-    from mle_proj_datapipeline_spark.operators.dedup import lsh_geometry_for
-
-    mids = []
-    for t in [0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]:
-        b, r, n = lsh_geometry_for(t)
-        assert b >= 2 and r >= 2 and n == b * r <= 256
-        mid = (1.0 / b) ** (1.0 / r)
-        assert abs(mid - t) < 0.05, (t, b, r, mid)
-        mids.append(mid)
-    assert mids == sorted(mids)
-    # budget cap respected
-    b, r, n = lsh_geometry_for(0.71, max_hashes=16)
-    assert n <= 16 and abs((1.0 / b) ** (1.0 / r) - 0.71) < 0.06
-    import pytest
-
-    with pytest.raises(ValueError):
-        lsh_geometry_for(0.99)
 
 
 def test_chunk_geometry_invariants():
@@ -777,7 +733,7 @@ def test_cc_fast_gate_selfloops_dups_and_rescue_arm(spark):
     immaterial. A duplicate-heavy list that fails the fast gate must
     still reach the driver arm through the exact unique-pair gate
     (ADVICE r7 semantics preserved)."""
-    from mle_proj_datapipeline_spark.operators.dedup import (
+    from mle_proj_datapipeline_spark.operators.cc import (
         connected_components,
         connected_components_star,
     )
@@ -804,45 +760,3 @@ def test_cc_fast_gate_selfloops_dups_and_rescue_arm(spark):
     stats2: dict = {}
     lbl = connected_components_star(dup, stats=stats2, driver_max_edges=10).collect()
     assert stats2["mode"] == "driver-union-find" and len(lbl) == 20
-
-
-def test_simhash_numpy_kernel_bit_identical_to_hof_fold(spark):
-    """r13 (re-adjudication of the r12 kernel): production ``simhash``
-    is the JVM HOF fold again — the NumPy kernel lost the driver's
-    full-bench methodology (1.2 → 2.1 s driver; r13 alternated 3-pair
-    A/B, environment-normalized, HOF ≈6% faster). The kernel stays
-    in-tree as the measured-and-rejected reference and must remain
-    BIT-identical to the production fold over the real sf0.01 corpus
-    plus dirty rows (null / empty / single-word text) — md5 hashing
-    stays in the JVM in both forms.
-
-    (The analogous minhash-signature kernel was prototyped and MEASURED
-    SLOWER in r12 — the 16-wide fold is too small to beat the Arrow
-    boundary — so minhash keeps the JVM fold; see OPTIMIZATION_r12.md.)"""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.operators.simhash_ngram import (
-        _simhash_numpy,
-        simhash,
-    )
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.01", "documents").select(
-        "doc_id", "text"
-    )
-    dirty = spark.createDataFrame(
-        [(900001, None), (900002, ""), (900003, "one"), (900004, "a b a b a")],
-        "doc_id long, text string",
-    )
-    df = docs.unionByName(dirty)
-
-    got = {r["doc_id"]: r["fp"] for r in df.select("doc_id", simhash("text").alias("fp")).collect()}
-    want = {r["doc_id"]: r["fp"] for r in df.select("doc_id", _simhash_numpy("text").alias("fp")).collect()}
-    assert got == want, {k: (got[k], want[k]) for k in got if got[k] != want.get(k)}
-
-    # Plan shape: the production fingerprint path is JVM-only — no
-    # Python evaluation node of any kind.
-    fp = docs.select("doc_id", simhash("text").alias("fp"))
-    plan = fp._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan

@@ -1,8 +1,8 @@
 """Scale-geometry guarantees for multi-band hyperplane LSH
-(operators/similarity.py): bucket sizes stay bounded as plane count
-scales with the corpus, the corpus-sizing helper behaves, and the
-durable snapshot-materialized path is result-identical to the
-localCheckpoint path."""
+(operators/veclib.py, operators/ann_lsh.py): bucket sizes stay bounded
+as plane count scales with the corpus, the corpus-sizing helper
+behaves, and the durable snapshot-materialized path is result-identical
+to the localCheckpoint path."""
 
 from __future__ import annotations
 
@@ -10,31 +10,31 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-import mle_proj_datapipeline_spark.operators.similarity as sim
+from mle_proj_datapipeline_spark.operators import ann_ivf, ann_lsh, kmeans, veclib
 
 
 @pytest.fixture(scope="module")
 def vectors(spark):
     rng = np.random.default_rng(7)
-    vecs = rng.normal(size=(512, sim.EMB_DIM))
+    vecs = rng.normal(size=(512, veclib.EMB_DIM))
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(512)]
     return spark.createDataFrame(rows, "vec_id int, embedding array<double>").cache()
 
 
 def _max_bucket(df, planes_per_band: int) -> int:
-    planes = sim.hyperplanes(planes_per_band)
-    bucketed = df.select(sim.plane_bucket(F.col("embedding"), planes).alias("bk"))
+    planes = veclib.hyperplanes(planes_per_band)
+    bucketed = df.select(veclib.plane_bucket(F.col("embedding"), planes).alias("bk"))
     return bucketed.groupBy("bk").count().agg(F.max("count")).collect()[0][0]
 
 
 def test_planes_per_band_for_scales_with_corpus():
     # expected bucket size constant => plane count grows with log(n)
-    assert sim.planes_per_band_for(1_000, target_bucket=64) < sim.planes_per_band_for(
+    assert veclib.planes_per_band_for(1_000, target_bucket=64) < veclib.planes_per_band_for(
         1_000_000, target_bucket=64
     )
     # 1M rows / 64-target: 2^b buckets with b = ceil(log2(1M/64)) = 14
-    assert sim.planes_per_band_for(1_000_000, target_bucket=64) == 14
-    assert sim.planes_per_band_for(10, target_bucket=64) >= 4  # floor
+    assert veclib.planes_per_band_for(1_000_000, target_bucket=64) == 14
+    assert veclib.planes_per_band_for(10, target_bucket=64) >= 4  # floor
 
 
 def test_bucket_bound_shrinks_with_plane_count(vectors):
@@ -44,7 +44,7 @@ def test_bucket_bound_shrinks_with_plane_count(vectors):
     geometry's."""
     n = vectors.count()
     coarse = _max_bucket(vectors, 2)  # 4 buckets — the pathological end
-    sized = _max_bucket(vectors, sim.planes_per_band_for(n, target_bucket=16))
+    sized = _max_bucket(vectors, veclib.planes_per_band_for(n, target_bucket=16))
     assert sized < coarse
     assert sized <= n // 4  # no bucket holds a quadratic-join-sized chunk
 
@@ -52,10 +52,10 @@ def test_bucket_bound_shrinks_with_plane_count(vectors):
 def test_lsh_topk_snapshot_path_identical(vectors, tmp_path):
     """Durable materialization (snapshot table instead of
     localCheckpoint) must not change a single result row."""
-    local = {tuple(r) for r in sim.lsh_topk(vectors).collect()}
+    local = {tuple(r) for r in ann_lsh.lsh_topk(vectors).collect()}
     durable = {
         tuple(r)
-        for r in sim.lsh_topk(
+        for r in ann_lsh.lsh_topk(
             vectors, snapshot_root=str(tmp_path / "lsh_base")
         ).collect()
     }
@@ -66,7 +66,7 @@ def test_lsh_topk_autosized_runs(vectors):
     """planes_per_band=None sizes the geometry from the corpus count and
     still produces top-1 rows with the exact-rerank contract (cosine in
     [-1, 1], no self-pairs)."""
-    rows = sim.lsh_topk(vectors, planes_per_band=None).collect()
+    rows = ann_lsh.lsh_topk(vectors, planes_per_band=None).collect()
     assert rows
     assert all(r["query_id"] != r["neighbor_id"] for r in rows)
     assert all(-1.000001 <= r["cosine"] <= 1.000001 for r in rows)
@@ -75,7 +75,7 @@ def test_lsh_topk_autosized_runs(vectors):
 def test_minhash_snapshot_path_identical(spark, tmp_path):
     """Durable signature materialization (snapshot table instead of
     localCheckpoint) must return the identical near-dup pair set."""
-    from mle_proj_datapipeline_spark.operators.dedup import minhash_lsh_pairs
+    from mle_proj_datapipeline_spark.operators.minhash import minhash_lsh_pairs
     from mle_proj_datapipeline_spark.sources.catalog import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -100,7 +100,7 @@ def test_kmeans_inertia_monotone(spark):
 
     def inertia(iters: int) -> float:
         return (
-            sim.kmeans_iterate(emb, iterations=iters)
+            kmeans.kmeans_iterate(emb, iterations=iters)
             .agg(F.sum("dist_sq"))
             .collect()[0][0]
         )
@@ -111,99 +111,6 @@ def test_kmeans_inertia_monotone(spark):
     assert i2 < i1  # the first update must actually improve on H31 init
 
 
-def test_incremental_minhash_delta(spark, tmp_path):
-    """Incremental dedup invariant: full-corpus pairs == old-corpus
-    pairs ∪ delta(new batch) pairs, with every delta pair touching at
-    least one new doc — history is never re-paired."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_delta,
-        minhash_signature_table,
-    )
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.sources.snapshots import (
-        read_snapshot,
-        write_snapshot,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    old = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    root = str(tmp_path / "sig_table")
-
-    write_snapshot(minhash_signature_table(old, "doc_id", "text"), root)
-    delta = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs_delta(new, "doc_id", "text", root).collect()
-    }
-    old_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(old, "doc_id", "text").collect()
-    }
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(docs, "doc_id", "text").collect()
-    }
-
-    new_ids = {r["doc_id"] for r in new.select("doc_id").collect()}
-    assert all(a in new_ids or b in new_ids for a, b in delta)
-    assert old_pairs | delta == full
-    assert delta  # the split actually produced cross-batch near-dups
-
-    # the snapshot absorbed the new signatures: table now covers the corpus
-    assert read_snapshot(spark, root).count() == docs.count()
-
-
-def test_incremental_minhash_delta_replay_idempotent(spark, tmp_path):
-    """ADVICE regression (r6 + r7): re-delivering the same batch (crash
-    replay / at-least-once upstream) must not duplicate signature rows
-    in the snapshot, AND must re-derive the batch's pairs from the
-    snapshot rather than return empty — a crash after the append commit
-    but before the caller durably consumed the first attempt's pairs
-    would otherwise silently lose them, breaking full == old ∪ delta
-    under at-least-once delivery."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.operators.dedup import (
-        minhash_lsh_pairs_delta,
-        minhash_signature_table,
-    )
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.sources.snapshots import (
-        history,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    old = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    root = str(tmp_path / "sig_table")
-
-    write_snapshot(minhash_signature_table(old, "doc_id", "text"), root)
-    first = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs_delta(new, "doc_id", "text", root).collect()
-    }
-    n_sigs = read_snapshot(spark, root).count()
-    n_versions = len(history(spark, root))
-
-    replay = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs_delta(new, "doc_id", "text", root).collect()
-    }
-    # The replayed batch's pairs are re-derived from the committed
-    # signatures — identical to the first attempt, never empty-on-data.
-    assert replay == first
-    sigs = read_snapshot(spark, root)
-    assert sigs.count() == n_sigs  # no duplicate signature rows
-    assert sigs.select("doc").distinct().count() == n_sigs
-    # A full replay appends nothing: the version history doesn't grow.
-    assert len(history(spark, root)) == n_versions
-
-
 def test_ivf_index_reuse_serves_without_training(spark, tmp_path_factory):
     """The persisted IVF index is the pay-training-once artifact: build
     commits codebook + assignment snapshots; every later query batch is
@@ -212,75 +119,25 @@ def test_ivf_index_reuse_serves_without_training(spark, tmp_path_factory):
     posexplode of the corpus, no avg-update aggregate)."""
     import pyspark.sql.functions as F
 
-    from mle_proj_datapipeline_spark.operators import similarity as sim
     from mle_proj_datapipeline_spark.sources.catalog import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     root = str(tmp_path_factory.mktemp("ivfidx"))
-    sim.ivf_index_build(emb, root)
+    ann_ivf.ivf_index_build(emb, root)
 
     q1 = emb.filter(F.col("vec_id") < 20)
     q2 = emb.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 40))
-    served = sim.ivf_index_topk(spark, q1, root, k=3)
-    trained = sim.ivf_trained_topk(q1, emb, k=3)
+    served = ann_ivf.ivf_index_topk(spark, q1, root, k=3)
+    trained = ann_ivf.ivf_trained_topk(q1, emb, k=3)
     assert sorted(map(tuple, served.collect())) == sorted(map(tuple, trained.collect()))
 
     # Second batch: index reused, no training in the serving plan.
-    out2 = sim.ivf_index_topk(spark, q2, root, k=3)
+    out2 = ann_ivf.ivf_index_topk(spark, q2, root, k=3)
     plan = out2._sc._jvm.PythonSQLUtils.explainString(
         out2._jdf.queryExecution(), "formatted"
     )
     assert "posexplode" not in plan and "Generate explode(posexplode" not in plan
     assert out2.count() > 0
-
-
-def test_ivf_index_append_frozen_codebook(spark, tmp_path_factory):
-    """Incremental ANN ingest: appending a second wave assigns it with
-    the FROZEN wave-1 codebook (no retraining, wave-1 rows untouched)
-    and the assignment table afterwards equals the closed-form
-    assignment of the full corpus under that same codebook."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.operators import similarity as sim
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.sources.snapshots import read_snapshot
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    w1 = emb.filter(F.col("vec_id") % 2 == 0)
-    w2 = emb.filter(F.col("vec_id") % 2 == 1)
-    root = str(tmp_path_factory.mktemp("ivfinc"))
-    sim.ivf_index_build(w1, root)
-    v_before = {
-        (r["vid"], r["cell"])
-        for r in read_snapshot(spark, f"{root}/assignment").select("vid", "cell").collect()
-    }
-    sim.ivf_index_append(spark, w2, root)
-
-    got = {
-        (r["vid"], r["cell"])
-        for r in read_snapshot(spark, f"{root}/assignment").select("vid", "cell").collect()
-    }
-    # wave-1 assignments unchanged
-    assert v_before <= got
-    # full corpus assigned under the frozen codebook == the table
-    book_rows = read_snapshot(spark, f"{root}/codebook").collect()
-    cells = sorted({r["cell"] for r in book_rows})
-    dim = max(r["i"] for r in book_rows)
-    pos = {c: p for p, c in enumerate(cells)}
-    book = [[0.0] * dim for _ in cells]
-    for r in book_rows:
-        book[pos[r["cell"]]][r["i"] - 1] = float(r["m"])
-    cell_ids = F.array(*[F.lit(c) for c in cells])
-    want = {
-        (r["vid"], r["cell"])
-        for r in emb.select(
-            F.col("vec_id").alias("vid"),
-            F.element_at(cell_ids, sim.ivf_cell("embedding", book, round_to=6)).alias("cell"),
-        ).collect()
-    }
-    assert got == want
-    # serving still works over the merged index
-    assert sim.ivf_index_topk(spark, emb.filter(F.col("vec_id") < 10), root, k=2).count() > 0
 
 
 def test_lsh_indexed_rebuilds_on_source_change(spark, tmp_path_factory, monkeypatch):
@@ -294,7 +151,6 @@ def test_lsh_indexed_rebuilds_on_source_change(spark, tmp_path_factory, monkeypa
 
     import pyspark.sql.functions as F
 
-    from mle_proj_datapipeline_spark.operators import similarity as sim
     from mle_proj_datapipeline_spark.plans.llm_ann_queries import ann_lsh_indexed_top1
     from mle_proj_datapipeline_spark.sources.snapshots import history
 
@@ -306,7 +162,7 @@ def test_lsh_indexed_rebuilds_on_source_change(spark, tmp_path_factory, monkeypa
 
     def corpus(id0: int):
         rows = [
-            (id0 + i, [rng.uniform(-1, 1) for _ in range(sim.EMB_DIM)], "a")
+            (id0 + i, [rng.uniform(-1, 1) for _ in range(veclib.EMB_DIM)], "a")
             for i in range(40)
         ]
         return spark.createDataFrame(
@@ -335,51 +191,3 @@ def test_lsh_indexed_rebuilds_on_source_change(spark, tmp_path_factory, monkeypa
     )
     r2 = {r["query_id"] for r in ann_lsh_indexed_top1(spark, sf_dir).collect()}
     assert r2 and min(r2) >= 1000, "index served the stale corpus after regeneration"
-
-
-def test_incremental_minhash_delta_partial_replay(spark, tmp_path):
-    """Partial re-delivery (an at-least-once upstream resends a batch
-    that grew): ids already committed by the earlier attempt are served
-    from the snapshot, genuinely-new ids are signed and appended, and
-    the returned pairs cover BOTH — the union of the two attempts'
-    pair sets equals the pairs of delivering the full batch once."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.operators.dedup import (
-        minhash_lsh_pairs_delta,
-        minhash_signature_table,
-    )
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.sources.snapshots import (
-        read_snapshot,
-        write_snapshot,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    old = docs.filter(F.col("doc_id") % 5 > 1)
-    batch_a = docs.filter(F.col("doc_id") % 5 == 0)  # first delivery
-    batch_ab = docs.filter(F.col("doc_id") % 5 <= 1)  # resend of A + new B
-    root = str(tmp_path / "sig_table")
-
-    write_snapshot(minhash_signature_table(old, "doc_id", "text"), root)
-    first = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs_delta(batch_a, "doc_id", "text", root).collect()
-    }
-    partial = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs_delta(batch_ab, "doc_id", "text", root).collect()
-    }
-    # Reference: one clean delivery of the union batch on a fresh root
-    root2 = str(tmp_path / "sig_table_ref")
-    write_snapshot(minhash_signature_table(old, "doc_id", "text"), root2)
-    ref = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs_delta(batch_ab, "doc_id", "text", root2).collect()
-    }
-    assert first | partial == ref
-    assert partial >= ref - first  # every new doc's pair was emitted
-    # no duplicate signatures after the partial replay
-    sigs = read_snapshot(spark, root)
-    assert sigs.count() == sigs.select("doc").distinct().count()
-    assert sigs.count() == old.count() + batch_ab.count()

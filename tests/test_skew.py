@@ -1,6 +1,6 @@
 """Skew realism for the LSH band join (VERDICT r4 item 6).
 
-The 100 TB claim of operators/dedup.minhash_lsh_pairs rests on the band
+The 100 TB claim of operators/minhash.minhash_lsh_pairs rests on the band
 equi-join staying bucketed: a boilerplate-heavy corpus concentrates one
 (band_idx, band_key) bucket, and that bucket's shuffle partition must be
 SPLIT across tasks by AQE skew-join handling — not serialized through
@@ -15,7 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from mle_proj_datapipeline_spark.operators import dedup as dd
+from mle_proj_datapipeline_spark.operators import minhash as dd
 
 # AQE skew-join only fires on shuffle joins with realistic thresholds;
 # scale them down to fixture size. autoBroadcastJoinThreshold=-1 keeps

@@ -1,6 +1,6 @@
 """Snapshot-table layer (sources/snapshots.py): versioned commits,
-time travel, merge-as-commit, compaction, and expiry over plain
-parquet + JSON manifests."""
+time travel, compaction, expiry and concurrent commits over plain
+parquet + JSON manifests, plus the ``materialize_frame`` lineage cut."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from mle_proj_datapipeline_spark.sources.snapshots import (
     compact,
     expire,
     history,
-    merge_snapshot,
     read_snapshot,
     write_snapshot,
 )
@@ -56,17 +55,6 @@ def test_versioned_commits_and_time_travel(spark, root):
     assert set(h[0]["files"]) < set(h[1]["files"])
 
 
-def test_merge_commit_preserves_history(spark, root):
-    write_snapshot(_df(spark, [(1, "a"), (2, "b")]), root, timestamp=100.0)
-    v = merge_snapshot(
-        spark, root, _df(spark, [(2, "B"), (3, "c")]), keys=["k"], timestamp=200.0
-    )
-    assert v == 2
-    assert _rows(read_snapshot(spark, root)) == _rows(_df(spark, [(1, "a"), (2, "B"), (3, "c")]))
-    # pre-merge version still readable (immutable data files)
-    assert _rows(read_snapshot(spark, root, version=1)) == _rows(_df(spark, [(1, "a"), (2, "b")]))
-
-
 def test_compact_and_expire(spark, root):
     for i in range(4):  # 4 tiny commits => many small files
         write_snapshot(
@@ -98,160 +86,6 @@ def test_timestamps_must_be_monotonic(spark, root):
     write_snapshot(_df(spark, [(1, "a")]), root, timestamp=100.0)
     with pytest.raises(ValueError):
         write_snapshot(_df(spark, [(2, "b")]), root, timestamp=50.0)
-
-
-def test_maintain_rollup_incremental(spark, root):
-    """The rollup view absorbs only newly committed source files on each
-    maintenance pass, always equals a full recompute, no-ops when the
-    source hasn't moved, and falls back to rebuild after a non-append
-    source change."""
-    from mle_proj_datapipeline_spark.sources.snapshots import maintain_rollup
-
-    src, view = f"{root}/src", f"{root}/view"
-
-    def odf(rows):
-        return spark.createDataFrame(rows, "seg string, price double")
-
-    write_snapshot(odf([("A", 10.0), ("B", 5.0)]), src, timestamp=100.0)
-    r1 = maintain_rollup(spark, src, view, ["seg"], ["price"], timestamp=101.0)
-    assert r1["mode"] == "delta"
-    assert _rows(read_snapshot(spark, view)) == _rows(
-        spark.createDataFrame([("A", 1, 10.0), ("B", 1, 5.0)], "seg string, n long, sum_price double")
-    )
-
-    # append: only the new files are scanned, merge matches full recompute
-    write_snapshot(odf([("A", 2.0), ("C", 7.0)]), src, mode="append", timestamp=200.0)
-    r2 = maintain_rollup(spark, src, view, ["seg"], ["price"], timestamp=201.0)
-    assert r2["mode"] == "delta"
-    n_total = len(history(spark, src)[-1]["files"])
-    assert 0 < r2["scanned_files"] < n_total
-    expected = spark.createDataFrame(
-        [("A", 2, 12.0), ("B", 1, 5.0), ("C", 1, 7.0)], "seg string, n long, sum_price double"
-    )
-    assert _rows(read_snapshot(spark, view)) == _rows(expected)
-
-    # no source movement => noop
-    assert maintain_rollup(spark, src, view, ["seg"], ["price"], timestamp=202.0)["mode"] == "noop"
-
-    # non-append source change (overwrite) => full rebuild
-    write_snapshot(odf([("Z", 1.0)]), src, timestamp=300.0)
-    r4 = maintain_rollup(spark, src, view, ["seg"], ["price"], timestamp=301.0)
-    assert r4["mode"] == "rebuild"
-    assert _rows(read_snapshot(spark, view)) == _rows(
-        spark.createDataFrame([("Z", 1, 1.0)], "seg string, n long, sum_price double")
-    )
-
-
-def test_snapshot_changes_append_fast_path(spark, root):
-    """CDF over an append-only chain: inserts == appended rows, and the
-    reader scans ONLY the delta files (file-level proof via inputFiles),
-    never the base version's data."""
-    from mle_proj_datapipeline_spark.sources.snapshots import snapshot_changes
-
-    write_snapshot(_df(spark, [(1, "a"), (2, "b")]), root, timestamp=100.0)
-    write_snapshot(_df(spark, [(3, "c")]), root, mode="append", timestamp=200.0)
-    write_snapshot(_df(spark, [(4, "d")]), root, mode="append", timestamp=300.0)
-
-    chg = snapshot_changes(spark, root, from_version=1, to_version=3)
-    assert _rows(chg) == _rows(
-        spark.createDataFrame(
-            [(3, "c", "insert"), (4, "d", "insert")],
-            "k long, v string, _change_type string",
-        )
-    )
-    v1_files = set(history(spark, root)[0]["files"])
-    assert not (set(chg.inputFiles()) & v1_files), "fast path read base files"
-
-    # same-version window and empty delta both yield an empty insert set
-    assert snapshot_changes(spark, root, 2, 2).count() == 0
-
-
-def test_snapshot_changes_general_path(spark, root):
-    """An overwrite in the chain forces the symmetric-difference path:
-    an update shows as delete(old)+insert(new); duplicates keep
-    multiplicity (exceptAll, not except)."""
-    from mle_proj_datapipeline_spark.sources.snapshots import snapshot_changes
-
-    write_snapshot(
-        _df(spark, [(1, "a"), (2, "b"), (2, "b")]), root, timestamp=100.0
-    )
-    write_snapshot(
-        _df(spark, [(1, "a"), (2, "B"), (3, "c")]), root, timestamp=200.0
-    )
-    chg = snapshot_changes(spark, root, from_version=1, to_version=2)
-    assert _rows(chg) == _rows(
-        spark.createDataFrame(
-            [
-                (2, "B", "insert"),
-                (3, "c", "insert"),
-                (2, "b", "delete"),
-                (2, "b", "delete"),
-            ],
-            "k long, v string, _change_type string",
-        )
-    )
-    with pytest.raises(ValueError):
-        snapshot_changes(spark, root, 2, 1)
-    with pytest.raises(ValueError):
-        snapshot_changes(spark, root, 9)
-
-
-def test_zorder_value_interleaves_bits(spark):
-    from mle_proj_datapipeline_spark.sources.snapshots import zorder_value
-
-    df = spark.createDataFrame([(0b101, 0b011)], "x long, y long")
-    [r] = df.select(zorder_value(["x", "y"], bits=3).alias("z")).collect()
-    # x bits (j at 2j): 1@0, 0@2, 1@4 ; y bits (j at 2j+1): 1@1, 1@3, 0@5
-    assert r["z"] == (1 << 0) + (1 << 4) + (1 << 1) + (1 << 3)
-
-
-def test_cluster_snapshot_zorder_layout(spark, tmp_path):
-    """Rows survive re-clustering, and the layout serves BOTH columns:
-    per-file min/max spans of x AND y shrink versus the unclustered
-    write (what lets footer pruning skip files on either predicate)."""
-    import pyarrow.parquet as pq
-
-    from mle_proj_datapipeline_spark.sources.snapshots import (
-        cluster_snapshot,
-        history,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    n = 4096
-    rows = [(i, (i * 2654435761) % n, (i * 40503) % n) for i in range(n)]
-    df = spark.createDataFrame(rows, "id long, x long, y long")
-    root = str(tmp_path / "ztab")
-    write_snapshot(df.repartition(8), root)
-
-    def avg_file_span(col: str) -> float:
-        files = history(spark, root)[-1]["files"]
-        spans = []
-        for f in files:
-            t = pq.read_table(f.removeprefix("file:"), columns=[col])[col].to_pylist()
-            spans.append(max(t) - min(t))
-        return sum(spans) / len(spans)
-
-    before_x, before_y = avg_file_span("x"), avg_file_span("y")
-    cluster_snapshot(spark, root, ["x", "y"], bits=12, n_files=8)
-    assert {tuple(r) for r in read_snapshot(spark, root).collect()} == set(rows)
-    after_x, after_y = avg_file_span("x"), avg_file_span("y")
-    # hash-scattered layout spans ~the full domain; z-order must shrink BOTH
-    assert after_x < before_x * 0.6 and after_y < before_y * 0.6
-
-
-def test_zorder_value_rejects_64bit_overflow():
-    """ADVICE regression: interleaving must stay inside a signed 64-bit
-    key — 6 columns x 12 bits would push bits past position 63 and wrap
-    negative, scrambling the curve."""
-    import pytest
-
-    from mle_proj_datapipeline_spark.sources.snapshots import zorder_value
-
-    with pytest.raises(ValueError, match="63"):
-        zorder_value([f"c{i}" for i in range(6)], bits=12)
-    # 5 cols x 12 bits = 60 positions still fits.
-    zorder_value([f"c{i}" for i in range(5)], bits=12)
 
 
 def test_concurrent_writers_never_lose_a_commit(spark, tmp_path_factory):

@@ -1,6 +1,6 @@
-"""Source/sink layer tests: declared-schema CSV with corrupt-record
-quarantine, FAILFAST mode, dynamic partition-overwrite writes, and the
-parquet reader's schema memory (hits, staleness, conf keying, bound)."""
+"""Source layer tests: declared-schema CSV with corrupt-record
+quarantine, FAILFAST mode, footer stats, and the parquet reader's
+schema memory (hits, staleness, conf keying, bound)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from mle_proj_datapipeline_spark.sources.readers import read_csv, read_parquet
-from mle_proj_datapipeline_spark.sources.writers import write_partitioned
 from tests.conftest import SF_SMOKE
 
 SCHEMA = StructType(
@@ -42,60 +41,6 @@ def test_failfast_raises(spark, csv_path):
         read_csv(spark, csv_path, SCHEMA, permissive=False).collect()
 
 
-def test_dynamic_partition_overwrite(spark, tmp_path_factory):
-    """Overwriting one partition must not clobber the others."""
-    out = str(tmp_path_factory.mktemp("pw") / "t")
-    df = spark.createDataFrame(
-        [(1, "2024-01-07"), (2, "2024-01-14")], ["v", "week"]
-    )
-    write_partitioned(df, out, ["week"])
-    # rewrite only week 2024-01-14 with a new value
-    df2 = spark.createDataFrame([(99, "2024-01-14")], ["v", "week"])
-    write_partitioned(df2, out, ["week"])
-    # partition values round-trip type-inferred (string -> date)
-    got = {(r["v"], str(r["week"])) for r in read_parquet(spark, out).collect()}
-    assert got == {(1, "2024-01-07"), (99, "2024-01-14")}
-
-
-def test_read_json_permissive(spark, tmp_path_factory):
-    from mle_proj_datapipeline_spark.sources.readers import read_json
-
-    p = tmp_path_factory.mktemp("json") / "data.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "alice", "score": 10}\n'
-        'not json at all\n'
-        '{"id": 3, "name": "carol", "score": 30}\n'
-    )
-    df = read_json(spark, str(p), SCHEMA).cache()
-    assert df.count() == 3
-    assert df.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-    good = df.filter(F.col("_corrupt_record").isNull())
-    assert {r["id"] for r in good.collect()} == {1, 3}
-
-
-def test_compact_partitioned_in_place(spark, tmp_path):
-    """Compaction collapses each partition dir to one data file without
-    changing rows or partition values."""
-    import glob
-
-    from mle_proj_datapipeline_spark.sources.writers import compact_partitioned
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(200).select(
-        (F.col("id") % 4).cast("string").alias("wk"), F.col("id").alias("v")
-    )
-    df.repartition(8).write.partitionBy("wk").parquet(path)
-    before_files = glob.glob(f"{path}/wk=*/*.parquet")
-    assert len(before_files) > 8  # small-file mess
-
-    compact_partitioned(spark, path, "wk", files_per_partition=1)
-    after_files = glob.glob(f"{path}/wk=*/*.parquet")
-    assert len(after_files) == 4  # one per partition
-    got = sorted(tuple(map(str, r)) for r in spark.read.parquet(path).select("wk", "v").collect())
-    want = sorted(tuple(map(str, r)) for r in df.select("wk", "v").collect())
-    assert got == want
-
-
 def test_parse_byte_size_suffixes():
     """maxPartitionBytes may be set as '128m'/'1gb' etc.; the fast
     file-metadata path in ensure_parallelism must parse all Spark byte
@@ -109,63 +54,6 @@ def test_parse_byte_size_suffixes():
     assert parse_byte_size("1g") == 1024**3
     assert parse_byte_size("512kb") == 512 * 1024
     assert parse_byte_size(" 2t ") == 2 * 1024**4
-
-
-def test_orc_partitioned_roundtrip(spark, tmp_path_factory):
-    """ORC sink/source through the same partitioned writer: rows
-    survive, partition pruning applies (format breadth beyond
-    parquet/csv/json — Spark ships ORC natively)."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.sources.writers import write_partitioned
-
-    df = spark.createDataFrame(
-        [(i, "w%d" % (i % 3), float(i)) for i in range(30)], "id int, wk string, v double"
-    )
-    out = str(tmp_path_factory.mktemp("orc") / "t")
-    write_partitioned(df, out, partition_cols=["wk"], fmt="orc")
-    back = spark.read.orc(out)
-    assert back.count() == 30
-    assert {tuple(sorted(r.asDict().items())) for r in back.collect()} == {
-        tuple(sorted(r.asDict().items())) for r in df.collect()
-    }
-    # partition pruning visible in the plan
-    plan = back.filter(F.col("wk") == "w1")._jdf.queryExecution().executedPlan().toString()
-    assert "w1" in plan
-
-
-def test_metrics_sink_dispatch(spark, tmp_path, monkeypatch):
-    """write_metrics_any routes a jdbc: URL over the wire and anything
-    else into the snapshot table; $SPARK_GRAFT_METRICS_URL flips the
-    resolved target without touching callers (no Postgres ships in this
-    container, so the JDBC branch is verified at the dispatch seam)."""
-    from mle_proj_datapipeline_spark.sources import metrics as M
-
-    panel = spark.createDataFrame(
-        [("m1", "2024-01-07", 0.91)], "model string, week string, metric double"
-    )
-
-    calls = {}
-    monkeypatch.setattr(
-        M,
-        "write_metrics_jdbc",
-        lambda df, url, table="model_metrics", **kw: calls.update(
-            url=url, table=table, n=df.count()
-        ),
-    )
-    assert M.write_metrics_any(panel, "jdbc:postgresql://db:5432/mlops") == -1
-    assert calls == {"url": "jdbc:postgresql://db:5432/mlops", "table": "model_metrics", "n": 1}
-
-    root = str(tmp_path / "panel_store")
-    v = M.write_metrics_any(panel, root)
-    assert v == 1
-    got = M.read_metrics(spark, root).collect()
-    assert [(r["model"], r["week"], r["metric"]) for r in got] == [("m1", "2024-01-07", 0.91)]
-
-    monkeypatch.setenv("SPARK_GRAFT_METRICS_URL", "jdbc:postgresql://db/x")
-    assert M.resolve_metrics_target(root) == "jdbc:postgresql://db/x"
-    monkeypatch.delenv("SPARK_GRAFT_METRICS_URL")
-    assert M.resolve_metrics_target(root) == root
 
 
 def test_footer_stats_pushdown_and_parity(spark):
@@ -198,55 +86,6 @@ def test_footer_stats_pushdown_and_parity(spark):
     with pytest.raises(ValueError, match="not pushed"):
         footer_stats(spark, path, min_cols=("o_orderdate",))
     assert spark.conf.get("spark.sql.sources.useV1SourceList", None) == before_v1
-
-
-def test_read_parquet_evolved_aligns_declared_schema(spark, tmp_path):
-    """Files from three schema generations (missing newer columns /
-    carrying dropped ones / type-widened) must all load into exactly
-    the declared schema: typed NULLs for absent columns, undeclared
-    columns dropped, casts applied."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from mle_proj_datapipeline_spark.sources.readers import read_parquet_evolved
-
-    root = str(tmp_path / "evolved")
-    # v1: (a int, b string) — before column c existed
-    spark.createDataFrame([(1, "x"), (2, "y")], "a INT, b STRING").write.mode(
-        "append"
-    ).parquet(root)
-    # v2: (a int, b string, c double, legacy string) — c added, plus a
-    # column later dropped from the declared schema. (Per-file TYPE
-    # changes are NOT mergeable by parquet schema merge — widening to
-    # the declared LongType happens in the post-scan cast instead.)
-    spark.createDataFrame(
-        [(3, "z", 1.5, "old")], "a INT, b STRING, c DOUBLE, legacy STRING"
-    ).write.mode("append").parquet(root)
-
-    declared = StructType(
-        [
-            StructField("a", LongType()),
-            StructField("b", StringType()),
-            StructField("c", DoubleType()),
-            StructField("d", StringType()),  # newest column: in no file yet
-        ]
-    )
-    got = read_parquet_evolved(spark, root, declared)
-    assert [f.name for f in got.schema.fields] == ["a", "b", "c", "d"]
-    assert dict((f.name, f.dataType) for f in got.schema.fields) == dict(
-        (f.name, f.dataType) for f in declared.fields
-    )
-    rows = {(r["a"], r["b"], r["c"], r["d"]) for r in got.collect()}
-    assert rows == {(1, "x", None, None), (2, "y", None, None), (3, "z", 1.5, None)}
-    # pruning survives evolution: selecting one column reads one column
-    plan = got.select("b")._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema: struct<b:string>" in plan
 
 
 def _jobs(spark, group, fn):

@@ -1,6 +1,6 @@
-"""Structured Streaming tests: file-source weekly windows agree with the
-batch computation; streaming dedup drops within-watermark duplicates;
-session windows run; checkpointed availableNow is exactly-once on rerun."""
+"""Structured Streaming tests: batch operators run unchanged on file
+streams and emit the batch result; the incremental sketch and LM
+maintenance and their compaction agree with the batch queries."""
 
 from __future__ import annotations
 
@@ -25,58 +25,27 @@ def _schema(spark, events_dir):
     return spark.read.parquet(events_dir).schema
 
 
-def test_weekly_counts_stream_equals_batch(spark, events_dir):
-    stream = W.file_stream(spark, events_dir, _schema(spark, events_dir))
-    q = W.run_to_memory(W.weekly_counts(stream), "weekly_mem")
-    q.awaitTermination(120)
-    got = {
-        (r["week_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.table("weekly_mem").collect()
-    }
-    batch = {
-        (r["week_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in W.weekly_counts(spark.read.parquet(events_dir)).collect()
-    }
-    assert got == batch and len(got) > 0
-    # Sunday alignment: every window start is a Sunday
-    import datetime as dt
-
-    assert all(dt.date.fromisoformat(w).weekday() == 6 for w, _ in got)
+def ensure_event_time(df, ts_col):
+    """Watermarks require TIMESTAMP; parquet written with naive
+    ``timestamp[us]`` (the driver testdata) reads back as TIMESTAMP_NTZ,
+    which ``withWatermark`` rejects. Cast NTZ → TIMESTAMP only when the
+    column is NTZ (sessions pin UTC, so the cast is the identity on the
+    epoch line)."""
+    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
+        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return df
 
 
-def test_stream_dedup(spark, events_dir, tmp_path_factory):
-    """Duplicate every event; streaming dedup must halve it."""
-    dup_dir = str(tmp_path_factory.mktemp("dup"))
-    e = spark.read.parquet(events_dir)
-    e.union(e).write.mode("overwrite").parquet(dup_dir)
-    stream = W.file_stream(spark, dup_dir, _schema(spark, events_dir))
-    out = str(tmp_path_factory.mktemp("dedup_out"))
-    ckpt = str(tmp_path_factory.mktemp("dedup_ckpt"))
-    q = W.run_available_now(W.stream_dedup(stream, ["event_id"]), out, ckpt)
-    q.awaitTermination(120)
-    n = spark.read.parquet(out).count()
-    assert n == e.count()
-
-
-def test_available_now_exactly_once(spark, events_dir, tmp_path_factory):
-    """Re-running with the same checkpoint must not duplicate output."""
-    out = str(tmp_path_factory.mktemp("eo_out"))
-    ckpt = str(tmp_path_factory.mktemp("eo_ckpt"))
-    schema = _schema(spark, events_dir)
-    for _ in range(2):
-        stream = W.file_stream(spark, events_dir, schema)
-        q = W.run_available_now(stream.select("event_id", "ts", "event_type"), out, ckpt)
-        q.awaitTermination(120)
-    assert spark.read.parquet(out).count() == spark.read.parquet(events_dir).count()
-
-
-def test_session_windows_run(spark, events_dir):
-    stream = W.file_stream(spark, events_dir, _schema(spark, events_dir))
-    q = W.run_to_memory(W.sessionized(stream), "sessions_mem")
-    q.awaitTermination(120)
-    rows = spark.table("sessions_mem")
-    assert rows.count() > 0
-    assert rows.agg(F.sum("n_events")).first()[0] == spark.read.parquet(events_dir).count()
+def run_to_memory(df, name, output_mode="complete"):
+    """Run ``df`` to a memory sink named ``name`` over the files
+    available now."""
+    return (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def test_stream_stream_interval_join(spark, events_dir):
@@ -96,20 +65,13 @@ def test_stream_stream_interval_join(spark, events_dir):
 
     sp, sc = split(W.file_stream(spark, events_dir, schema))
     joined = temporal_proximity_join(
-        W.ensure_event_time(sp, "ts").withWatermark("ts", "2 hours"),
-        W.ensure_event_time(sc, "click_ts").withWatermark("click_ts", "2 hours"),
+        ensure_event_time(sp, "ts").withWatermark("ts", "2 hours"),
+        ensure_event_time(sc, "click_ts").withWatermark("click_ts", "2 hours"),
         on=["user_id"],
         left_ts="ts",
         right_ts="click_ts",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_join_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    run_to_memory(joined, "ss_join_mem", output_mode="append").awaitTermination(120)
 
     bp, bc = split(spark.read.parquet(events_dir))
     batch = temporal_proximity_join(bp, bc, on=["user_id"], left_ts="ts", right_ts="click_ts")
@@ -129,7 +91,7 @@ def test_pii_scrub_stream_equals_batch(spark, tmp_path_factory):
 
     from mle_proj_datapipeline_spark.plans.llm_corpus_queries import pii_scrub_frame
     from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.streaming.weekly import file_stream, run_to_memory
+    from mle_proj_datapipeline_spark.streaming.weekly import file_stream
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     land = str(tmp_path_factory.mktemp("pii_land"))
@@ -142,314 +104,6 @@ def test_pii_scrub_stream_equals_batch(spark, tmp_path_factory):
     got = {tuple(r) for r in spark.table("pii_stream").collect()}
     want = {tuple(r) for r in pii_scrub_frame(docs).collect()}
     assert got == want and got
-
-
-def test_incremental_corpus_ingestion(spark, tmp_path_factory):
-    """Streaming corpus ingestion: two overlapping waves land; the sink
-    must hold exactly the quality-kept, exact-deduped canonical set of
-    the union — and a checkpointed re-run adds nothing."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.operators.dedup import exact_dedup
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.streaming.corpus import (
-        incremental_corpus,
-        quality_keep,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    land = str(tmp_path_factory.mktemp("corpus_land"))
-    sink = str(tmp_path_factory.mktemp("corpus_sink") / "corpus")
-    ckpt = str(tmp_path_factory.mktemp("corpus_ckpt"))
-
-    wave1 = docs.filter(F.col("doc_id") % 3 != 0)
-    wave2 = docs.filter(F.col("doc_id") % 3 != 1)  # overlaps wave1
-    wave1.coalesce(1).write.mode("overwrite").parquet(f"{land}/w1")
-    incremental_corpus(spark, f"{land}/*", sink, ckpt, docs.schema).awaitTermination(120)
-    wave2.coalesce(1).write.mode("overwrite").parquet(f"{land}/w2")
-    incremental_corpus(spark, f"{land}/*", sink, ckpt, docs.schema).awaitTermination(120)
-
-    got = {r["doc_id"] for r in spark.read.parquet(sink).collect()}
-
-    union = wave1.unionByName(wave2)
-    expected_all = exact_dedup(
-        quality_keep(union).filter(F.col("keep")), "text", ["doc_id"]
-    )
-    # same content set; doc_id may differ when waves disagree on which
-    # duplicate arrived first, so compare by content hash
-    got_hashes = {
-        r["content_hash"] for r in spark.read.parquet(sink).select("content_hash").collect()
-    }
-    want_hashes = {
-        r["h"] for r in expected_all.select(F.md5("text").alias("h")).collect()
-    }
-    assert got_hashes == want_hashes and got_hashes
-    # no content hash appears twice in the sink
-    assert spark.read.parquet(sink).groupBy("content_hash").count().filter(
-        "count > 1"
-    ).count() == 0
-
-    # idempotent re-run: checkpoint means no new files, sink unchanged
-    n_before = spark.read.parquet(sink).count()
-    incremental_corpus(spark, f"{land}/*", sink, ckpt, docs.schema).awaitTermination(120)
-    assert spark.read.parquet(sink).count() == n_before
-    assert got  # sanity: the sink is non-trivial
-
-
-def test_stream_asof_equals_batch(spark, events_dir):
-    """Streaming as-of (stateful, applyInPandasWithState over the tagged
-    union) reproduces the batch as-of fold exactly on a single
-    AvailableNow pass, and the batch fold itself agrees with the
-    operators/joins.asof_join result on the same data."""
-    from mle_proj_datapipeline_spark.operators.joins import asof_join
-    from mle_proj_datapipeline_spark.streaming import asof as A
-
-    schema = _schema(spark, events_dir)
-    stream = A.tag_sides(W.file_stream(spark, events_dir, schema))
-    q = (
-        A.stream_asof(stream)
-        .writeStream.format("memory")
-        .queryName("asof_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    def rows(df):
-        return sorted(
-            (r["user_id"], r["event_id"], str(r["ts"]), str(r["matched_ts"]))
-            for r in df.collect()
-        )
-
-    got = rows(spark.table("asof_mem"))
-    batch = rows(A.batch_asof_reference(spark.read.parquet(events_dir)))
-    assert got == batch and len(got) > 0
-
-    # Cross-check the fold against the declarative batch as-of join.
-    e = spark.read.parquet(events_dir)
-    purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"), F.col("ts").alias("payload_ts")
-    )
-    j = asof_join(purchases, clicks, on=["user_id"], left_ts="ts", right_ts="click_ts")
-    want = sorted(
-        (
-            r["user_id"],
-            r["event_id"],
-            r["ts"].strftime("%Y-%m-%d %H:%M:%S.%f"),
-            r["payload_ts"].strftime("%Y-%m-%d %H:%M:%S.%f") if r["payload_ts"] else "None",
-        )
-        for r in j.collect()
-    )
-    assert got == want
-
-
-def test_stream_asof_exact_tie_matches(spark):
-    """A right (click) at EXACTLY a left's (purchase's) timestamp must
-    attach — backward as-of with exact matches allowed. Regression test
-    for the side-sort direction: ASCII 'L' < 'R', so a plain ascending
-    sort processed lefts BEFORE rights at equal timestamps and silently
-    dropped exact matches. The stream==batch parity test cannot catch
-    this (both sides share _fold_group), so the tie case is pinned
-    against operators/joins.asof_join, which tags sides numerically."""
-    import datetime as dt
-
-    from mle_proj_datapipeline_spark.operators.joins import asof_join
-    from mle_proj_datapipeline_spark.streaming import asof as A
-
-    base = dt.datetime(2024, 3, 1, 9, 30, 0)
-    events = spark.createDataFrame(
-        [
-            # exact tie: click and purchase at the same instant
-            (10, base, 1, "click", 0.0, "{}"),
-            (11, base, 1, "purchase", 1.0, "{}"),
-            # control: ordinary strictly-before match
-            (12, base, 2, "click", 0.0, "{}"),
-            (13, base + dt.timedelta(seconds=5), 2, "purchase", 1.0, "{}"),
-            # control: click strictly after -> no match
-            (14, base + dt.timedelta(seconds=5), 3, "click", 0.0, "{}"),
-            (15, base, 3, "purchase", 1.0, "{}"),
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    got = {
-        r["user_id"]: r["matched_ts"]
-        for r in A.batch_asof_reference(events).collect()
-    }
-    ts_s = base.strftime("%Y-%m-%d %H:%M:%S.%f")
-    assert got[1] == ts_s, "exact-timestamp right must match the left"
-    assert got[2] == ts_s
-    assert got[3] is None
-
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"), F.col("ts").alias("payload_ts")
-    )
-    j = asof_join(purchases, clicks, on=["user_id"], left_ts="ts", right_ts="click_ts")
-    want = {
-        r["user_id"]: (
-            r["payload_ts"].strftime("%Y-%m-%d %H:%M:%S.%f")
-            if r["payload_ts"]
-            else None
-        )
-        for r in j.collect()
-    }
-    assert got == want
-
-
-def test_stream_asof_state_spans_batches(spark, tmp_path_factory):
-    """Rights seen in wave 1 persist in keyed state and match lefts
-    arriving in wave 2 — the property a per-batch join cannot give."""
-    import datetime as dt
-
-    from mle_proj_datapipeline_spark.streaming import asof as A
-    from mle_proj_datapipeline_spark.streaming import weekly as W
-
-    d = str(tmp_path_factory.mktemp("asof_waves"))
-    ck = str(tmp_path_factory.mktemp("asof_ck"))
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def frame(rows):
-        return spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-
-    # wave 1: clicks only
-    frame([(1, base, 7, "click", 0.0, "{}")]).write.mode("append").parquet(d)
-    schema = spark.read.parquet(d).schema
-    out_dir = str(tmp_path_factory.mktemp("asof_out"))
-
-    def run_wave():
-        q = (
-            A.stream_asof(A.tag_sides(W.file_stream(spark, d, schema)))
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def out_rows():
-        try:
-            return spark.read.parquet(out_dir).collect()
-        except Exception:
-            return []  # sink dir empty before first non-empty batch
-
-    run_wave()
-    assert len(out_rows()) == 0  # no lefts yet
-
-    # wave 2: a purchase AFTER the wave-1 click
-    frame([(2, base + dt.timedelta(minutes=5), 7, "purchase", 1.0, "{}")]).write.mode(
-        "append"
-    ).parquet(d)
-    run_wave()
-    rows = out_rows()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["user_id"] == 7 and r["event_id"] == 2
-    assert r["matched_ts"] is not None and r["matched_ts"].startswith("2024-01-01 12:00:00")
-
-
-def test_streaming_psi_equals_batch(spark, tmp_path_factory):
-    """Streaming drift twin (VERDICT r4 item 8): orders arriving in two
-    waves through the incremental foreachBatch PSI monitor must yield
-    EXACTLY the batch weekly_psi_drift trajectory — same pinned baseline
-    breakpoints, same fold — and a replayed pass with no new files must
-    not change the panel (idempotent batch commits)."""
-    from mle_proj_datapipeline_spark.plans.profile_queries import weekly_psi_drift
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.streaming import drift as D
-
-    sf = "/root/testdata/sf0.001"
-    orders = load_table(spark, sf, "orders")
-    bwk, bps = D.baseline_breakpoints(orders)
-
-    land = str(tmp_path_factory.mktemp("psi_land"))
-    counts = str(tmp_path_factory.mktemp("psi_counts"))
-    ck = str(tmp_path_factory.mktemp("psi_ck"))
-
-    # Two arrival waves split mid-history (both after the baseline week).
-    weeks = sorted(
-        r["wk"]
-        for r in orders.select(D.week_of_order().alias("wk")).distinct().collect()
-    )
-    cut = weeks[len(weeks) // 2]
-    wave1 = orders.filter(D.week_of_order() <= cut)
-    wave2 = orders.filter(D.week_of_order() > cut)
-    wave1.write.mode("append").parquet(land)
-    schema = spark.read.parquet(land).schema
-
-    def rows(df):
-        return sorted((r["wk"], r["psi"]) for r in df.collect())
-
-    D.incremental_psi_counts(spark, land, schema, counts, ck, bps)
-    got1 = rows(D.psi_series(spark, counts, bwk))
-    assert got1 and all(wk <= cut for wk, _ in got1)
-
-    wave2.write.mode("append").parquet(land)
-    D.incremental_psi_counts(spark, land, schema, counts, ck, bps)
-    got = rows(D.psi_series(spark, counts, bwk))
-
-    # Batch arm 1: identical fold over batch-computed counts.
-    want_counts = rows(D.psi_from_counts(D.week_bucket_counts(orders, bps), bwk))
-    assert got == want_counts
-
-    # Batch arm 2: the registered query (derives the same baseline
-    # breakpoints internally) — ties the twin to the oracle-gated path.
-    want_query = rows(weekly_psi_drift(spark, sf))
-    assert got == want_query
-
-    # Replay with no new files: checkpoint + idempotent per-batch
-    # partitions leave the panel unchanged.
-    D.incremental_psi_counts(spark, land, schema, counts, ck, bps)
-    assert rows(D.psi_series(spark, counts, bwk)) == got
-
-
-def test_streaming_psi_with_pinned_expected_fracs(spark, tmp_path_factory):
-    """The realistic monitor deploy: training (baseline) data is
-    historical and NEVER streamed — only post-baseline files land. With
-    pinned expected fractions the panel must still score every arriving
-    week (and match the full-history fold exactly); without them the
-    fold must refuse loudly rather than emit null PSI for every week."""
-    import pytest
-
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.streaming import drift as D
-
-    sf = "/root/testdata/sf0.001"
-    orders = load_table(spark, sf, "orders")
-    bwk, bps = D.baseline_breakpoints(orders)
-    efs = D.baseline_expected_fracs(orders, bwk, bps)
-
-    land = str(tmp_path_factory.mktemp("psi_land2"))
-    counts = str(tmp_path_factory.mktemp("psi_counts2"))
-    ck = str(tmp_path_factory.mktemp("psi_ck2"))
-
-    # Only post-baseline data is streamed.
-    orders.filter(D.week_of_order() != bwk).write.mode("append").parquet(land)
-    schema = spark.read.parquet(land).schema
-    D.incremental_psi_counts(spark, land, schema, counts, ck, bps)
-
-    def rows(df):
-        return sorted((r["wk"], r["psi"]) for r in df.collect())
-
-    got = rows(D.psi_series(spark, counts, bwk, expected_fracs=efs))
-    assert got and all(psi is not None for _, psi in got)
-
-    # Same trajectory as the full-history fold (baseline fractions are
-    # identical whether pinned or derived from streamed baseline rows).
-    want = rows(D.psi_from_counts(D.week_bucket_counts(orders, bps), bwk))
-    assert got == want
-
-    # Without pinned fractions and without streamed baseline rows the
-    # fold must raise, not silently null out.
-    with pytest.raises(ValueError, match="baseline week"):
-        D.psi_series(spark, counts, bwk).collect()
 
 
 def test_streaming_cm_sketch_equals_batch(spark, tmp_path_factory):
@@ -516,56 +170,6 @@ def test_streaming_cm_sketch_equals_batch(spark, tmp_path_factory):
     assert cells_rows(SS.served_cells(spark, cells_dir)) == got
 
 
-def test_streaming_transitions_equal_batch(spark, tmp_path_factory):
-    """Streaming transition-matrix twin: events in two event-time waves
-    through the incremental maintenance must yield EXACTLY the batch
-    event_transition_matrix over the union — including the pairs that
-    SPAN the wave boundary (first event of wave 2 pairs with the user's
-    last event of wave 1) — and a replayed pass with no new files must
-    change nothing."""
-    import pyspark.sql.functions as F
-
-    from mle_proj_datapipeline_spark.plans.stats_queries import (
-        event_transition_matrix,
-    )
-    from mle_proj_datapipeline_spark.sources.catalog import load_table
-    from mle_proj_datapipeline_spark.streaming import transitions as TR
-
-    sf = "/root/testdata/sf0.001"
-    ev = load_table(spark, sf, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-
-    land = str(tmp_path_factory.mktemp("tr_land"))
-    state = str(tmp_path_factory.mktemp("tr_state"))
-    ck = str(tmp_path_factory.mktemp("tr_ck"))
-
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cut = lo + (hi - lo) / 2
-    ev.filter(F.col("ts") <= F.lit(cut)).write.mode("append").parquet(land)
-    schema = spark.read.parquet(land).schema
-
-    def rows(df):
-        return sorted(
-            (r["prev"], r["next"], r["c"], str(r["p"])) for r in df.collect()
-        )
-
-    TR.incremental_transitions(spark, land, schema, state, ck)
-    wave1 = rows(TR.served_matrix(spark, state))
-    assert wave1
-
-    ev.filter(F.col("ts") > F.lit(cut)).write.mode("append").parquet(land)
-    TR.incremental_transitions(spark, land, schema, state, ck)
-    got = rows(TR.served_matrix(spark, state))
-
-    want = rows(event_transition_matrix(spark, sf))
-    assert got == want and got != wave1
-
-    # replay: no new files -> nothing changes
-    TR.incremental_transitions(spark, land, schema, state, ck)
-    assert rows(TR.served_matrix(spark, state)) == got
-
-
 def test_streaming_lm_counts_equal_batch(spark, tmp_path_factory):
     """Streaming bigram-LM twin: documents in two waves through the
     incremental count maintenance must yield a served model whose doc
@@ -615,33 +219,6 @@ def test_streaming_lm_counts_equal_batch(spark, tmp_path_factory):
         for r in LM.score_docs(docs, uni2, big2).collect()
     )
     assert got2 == got
-
-
-def test_streaming_transitions_corrupt_state_fails_loudly(spark, tmp_path_factory):
-    """Unreadable EXISTING state must fail the batch (so it replays),
-    never be mistaken for 'first batch' — that would drop cross-
-    boundary pairs and rewrite the snapshot from one batch's users,
-    permanently corrupting the counts (ADVICE r5). A genuinely absent
-    state dir still means first-batch."""
-    import os
-
-    import pytest
-
-    from mle_proj_datapipeline_spark.streaming import transitions as TR
-
-    state = str(tmp_path_factory.mktemp("tr_corrupt"))
-    # absent -> first batch
-    assert TR._latest_snapshot(spark, f"{state}/last", before=5) is None
-
-    part = os.path.join(state, "last", "batch_id=0")
-    os.makedirs(part)
-    with open(os.path.join(part, "data.parquet"), "wb") as fh:
-        fh.write(b"this is not a parquet file")
-    with pytest.raises(Exception) as ei:
-        df = TR._latest_snapshot(spark, f"{state}/last", before=5)
-        if df is not None:  # reads may be lazy — force them
-            df.collect()
-    assert ei.value is not None
 
 
 def test_lm_scores_out_of_corpus_docs_with_smoothing(spark, tmp_path_factory):
