@@ -39,6 +39,29 @@ def test_bench_headline_names_resolve():
     assert not missing, f"headline names not in registry: {missing}"
 
 
+def test_dedup_facade_not_imported_by_engine_code():
+    """The dedup kernels live in split modules (hashing, minhash,
+    simhash_ngram, cc, ...); engine modules must import the specific
+    kernel module, never a ``dedup``/``similarity`` re-export facade, or
+    one kernel edit re-couples every dedup query's staleness closure
+    through the facade. The facades were deleted, so none may return."""
+    import pathlib
+
+    pkg = pathlib.Path("mle_proj_datapipeline_spark")
+    facades = [f for f in ("dedup", "similarity") if (pkg / "operators" / f"{f}.py").exists()]
+    assert not facades, f"re-export facade reintroduced: {facades}"
+    offenders = []
+    for py in pkg.rglob("*.py"):
+        src = py.read_text()
+        for facade in ("dedup", "similarity"):
+            if (
+                f"operators.{facade} import" in src
+                or f"operators import {facade}" in src
+            ):
+                offenders.append(str(py))
+    assert not offenders, f"import the split kernel, not the facade: {offenders}"
+
+
 def test_customers_without_orders_is_date_bounded():
     """Round-9 fold-back of the round-8 hotfix_r8 overlay: the
     registration lives in plans/relational.py again and must keep the

@@ -153,6 +153,38 @@ def test_approx_cardinalities_within_rsd(spark):
     assert abs(est - exact["n_customers"]) / exact["n_customers"] <= 0.03
 
 
+def test_quality_keep_agrees_with_repetition_query(spark):
+    """Two independent implementations of the Gopher rules — the
+    explode+groupBy batch query and an expression-only per-doc variant
+    (array_distinct for the distinct count, one fold for the top count)
+    — must produce identical ttr/top_ratio/keep per doc."""
+    from mle_proj_datapipeline_spark.plans.llm_text_queries import doc_repetition_quality
+
+    toks = F.split(F.col("text"), " ")
+    total = F.size(toks)
+    top = F.expr(
+        "aggregate(array_distinct(split(text, ' ')), 0, (acc, t) -> "
+        "greatest(acc, size(filter(split(text, ' '), x -> x = t))))"
+    )
+    ttr = F.size(F.array_distinct(toks)).cast("double") / total
+    top_ratio = top.cast("double") / total
+    expr_only = load_table(spark, SF_ORACLE, "documents").select(
+        "doc_id",
+        F.round(ttr, 4).alias("ttr"),
+        F.round(top_ratio, 4).alias("top_ratio"),
+        ((ttr >= 0.3) & (top_ratio <= 0.2)).alias("keep"),
+    )
+    batch = {
+        r["doc_id"]: (r["ttr"], r["top_ratio"], r["keep"])
+        for r in doc_repetition_quality(spark, SF_ORACLE).collect()
+    }
+    stream_style = {
+        r["doc_id"]: (r["ttr"], r["top_ratio"], 1 if r["keep"] else 0)
+        for r in expr_only.collect()
+    }
+    assert stream_style == batch
+
+
 def test_covariance_gramian_matches_explode_and_dispatch(spark):
     """The two physical covariance strategies (d² JVM explode vs
     per-partition NumPy Gramian over mapInPandas) must produce the same

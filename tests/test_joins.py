@@ -215,6 +215,84 @@ def test_merge_upsert_keep_latest(spark):
     assert got == {(1, "old1"), (2, "newB"), (3, "new3")}
 
 
+def _asof_join_salted(left, right, on, left_ts, right_ts, salt_from, n_salts, **kw):
+    """Hot-key salting on top of asof_join: the left side adds a
+    deterministic salt from ``salt_from`` and the right side replicates
+    into every salt bucket, so each (key, salt) window holds the full
+    right history for the key but only ~1/n_salts of the left rows."""
+    import pyspark.sql.functions as F
+
+    lt = left.withColumn("__salt", F.pmod(F.xxhash64(F.col(salt_from)), F.lit(n_salts)))
+    rt = right.withColumn(
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>"))
+    )
+    return asof_join(
+        lt, rt, on=on + ["__salt"], left_ts=left_ts, right_ts=right_ts, **kw
+    ).drop("__salt")
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+def test_asof_salted_identical(spark, frames, direction):
+    """Salting must not change a single output row — same pandas
+    merge_asof semantics, windows just split by (key, salt)."""
+    left, right = frames
+    plain = {
+        (r["k"], r["ts"], r["payload"])
+        for r in asof_join(
+            left, right, on=["k"], left_ts="ts", right_ts="ts", direction=direction
+        ).collect()
+    }
+    salted = {
+        (r["k"], r["ts"], r["payload"])
+        for r in _asof_join_salted(
+            left,
+            right,
+            on=["k"],
+            left_ts="ts",
+            right_ts="ts",
+            salt_from="lval",
+            n_salts=4,
+            direction=direction,
+        ).collect()
+    }
+    assert salted == plain and plain
+
+
+def test_asof_salted_plan_splits_hot_key(spark):
+    """A salted composite key must actually split a hot key's window
+    across salt partitions — the Exchange feeding asof_join's window sort
+    partitions on (k, __salt), and every salt bucket is non-empty on a
+    synthetic 100%-hot-key fixture (so the window sort sees ~1/n_salts of
+    the rows per partition instead of all of them)."""
+    import pyspark.sql.functions as F
+
+    n_salts = 4
+    left = spark.createDataFrame(
+        [("hot", i, (i * 7) % 50) for i in range(200)], ["k", "lval", "ts"]
+    )
+    right = spark.createDataFrame(
+        [("hot", t, f"p{t}") for t in range(0, 50, 5)], ["k", "ts", "payload"]
+    )
+    out = _asof_join_salted(
+        left, right, on=["k"], left_ts="ts", right_ts="ts",
+        salt_from="lval", n_salts=n_salts,
+    )
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    shuffle_lines = [
+        ln for ln in plan.splitlines() if "hashpartitioning" in ln and "__salt" in ln
+    ]
+    assert shuffle_lines, f"window shuffle does not partition on __salt:\n{plan}"
+
+    # Runtime: the hot key's left rows land in every salt bucket.
+    buckets = (
+        left.withColumn("__salt", F.pmod(F.xxhash64(F.col("lval")), F.lit(n_salts)))
+        .select("__salt").distinct().count()
+    )
+    assert buckets == n_salts
+
+
 def test_asof_fuzz_matches_pandas(spark):
     """Randomized as-of parity: generated left/right tables across every
     (direction, exact, tolerance) combination must match pandas

@@ -1,18 +1,26 @@
-"""Lifecycle operator tests: retraining-decision properties hold, the
-metrics store and model registry round-trip, and the recursive-CTE
-oracle matches the applyInPandas fold."""
+"""Lifecycle operator tests: the decision fold resumes from saved state
+(a stateful streaming wrapper agrees with the batch fold, across
+micro-batches too); retraining-decision properties hold, the metrics
+store and model registry round-trip, and the recursive-CTE oracle
+matches the applyInPandas fold."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import StringType, StructField, StructType
 
 from mle_proj_datapipeline_spark.plans.lifecycle_queries import weekly_model_metrics
+from mle_proj_datapipeline_spark.streaming import weekly as W
 from mle_proj_datapipeline_spark.streaming.lifecycle import (
+    DECISION_SCHEMA,
     STALE_DAYS,
+    _fold,
     decide_batch,
 )
 from tests.conftest import SF_SMOKE
+from tests.test_streaming import run_to_memory
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +30,62 @@ def metrics_pdf(spark):
 
 def _decisions_dict(rows):
     return {(r["model"], r["week"]): r["reason"] for r in rows}
+
+
+def _decide_stream(metrics_stream):
+    """The decision fold as an ``applyInPandasWithState`` operator: the
+    per-model GroupState holds the last retrain date, and each
+    micro-batch folds its rows in week order from the saved state."""
+
+    def run(key, pdfs, state):
+        (model,) = key
+        last = pd.Timestamp(state.get[0]) if state.exists and state.get[0] else None
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        out, last = _fold(model, rows, last)
+        state.update((last.strftime("%Y-%m-%d") if last is not None else None,))
+        yield out
+
+    return metrics_stream.groupBy("model").applyInPandasWithState(
+        run,
+        outputStructType=DECISION_SCHEMA,
+        stateStructType=StructType([StructField("last_retrain", StringType(), True)]),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def test_stream_equals_batch(spark, metrics_pdf, tmp_path_factory):
+    """One micro-batch: streaming decisions == batch decisions."""
+    land = str(tmp_path_factory.mktemp("metrics_land"))
+    metrics = spark.createDataFrame(metrics_pdf)
+    metrics.coalesce(1).write.mode("overwrite").parquet(land)
+    stream = W.file_stream(spark, land, metrics.schema)
+    q = run_to_memory(_decide_stream(stream), "lifecycle_mem", output_mode="append")
+    q.awaitTermination(120)
+    got = _decisions_dict(spark.table("lifecycle_mem").collect())
+    want = _decisions_dict(decide_batch(metrics).collect())
+    assert got == want and len(got) > 0
+
+
+def test_state_carries_across_microbatches(spark, metrics_pdf, tmp_path_factory):
+    """Split the panel at a week boundary into two files, force one file
+    per trigger: decisions in batch 2 must depend on state from batch 1
+    (identical to the single-batch run)."""
+    land = str(tmp_path_factory.mktemp("metrics_land2"))
+    metrics = spark.createDataFrame(metrics_pdf)
+    cut = sorted(metrics_pdf["week"].unique())[len(metrics_pdf["week"].unique()) // 2]
+    early = metrics.filter(metrics.week < cut).coalesce(1)
+    late = metrics.filter(metrics.week >= cut).coalesce(1)
+    early.write.mode("overwrite").parquet(land + "/b1")
+    late.write.mode("overwrite").parquet(land + "/b2")
+    stream = W.file_stream(
+        spark, land + "/*", metrics.schema, max_files_per_trigger=1
+    )
+    q = run_to_memory(_decide_stream(stream), "lifecycle_mem2", output_mode="append")
+    q.awaitTermination(180)
+    got = _decisions_dict(spark.table("lifecycle_mem2").collect())
+    want = _decisions_dict(decide_batch(metrics).collect())
+    assert got == want and len(got) > 0
 
 
 def test_decision_properties(spark, metrics_pdf):

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -760,3 +762,61 @@ def test_cc_fast_gate_selfloops_dups_and_rescue_arm(spark):
     stats2: dict = {}
     lbl = connected_components_star(dup, stats=stats2, driver_max_edges=10).collect()
     assert stats2["mode"] == "driver-union-find" and len(lbl) == 20
+
+
+def _simhash_numpy(text_col, bits):
+    """Independent NumPy vote fold behind a pandas_udf: md5 token
+    hashing stays in the JVM (cross-engine H60 parity), votes fold in
+    NumPy with integer shifts/adds only; NULL and empty text fold to 0L,
+    the same as the production IF(NULL > 0, …, 0) arm."""
+    @F.pandas_udf("long")
+    def _fp(hs: pd.Series) -> pd.Series:
+        j = np.arange(bits, dtype=np.int64)
+        out = np.zeros(len(hs), dtype=np.int64)
+        for i, v in enumerate(hs.values):
+            if v is None or len(v) == 0:
+                continue
+            x = np.asarray(v, dtype=np.int64)[:, None]
+            votes = (2 * ((x >> j[None, :]) & np.int64(1)) - 1).sum(axis=0)
+            out[i] = ((votes > 0).astype(np.int64) << j).sum()
+        return pd.Series(out)
+
+    return _fp(
+        F.expr(
+            f"transform(split({text_col}, ' '), "
+            "t -> cast(conv(substring(md5(t),1,15),16,10) as bigint))"
+        )
+    )
+
+
+def test_simhash_numpy_kernel_bit_identical_to_hof_fold(spark):
+    """Production ``simhash`` is the JVM HOF fold (the NumPy-kernel form
+    lost the full-bench A/B, AB_SIMHASH_r13.json). The fold must stay
+    BIT-identical to an independent NumPy vote fold over the real sf0.01
+    corpus plus dirty rows (null / empty / single-word text), and its
+    plan must stay JVM-only."""
+    from mle_proj_datapipeline_spark.operators.hashing import SIMHASH_BITS
+    from mle_proj_datapipeline_spark.operators.simhash_ngram import simhash
+    from mle_proj_datapipeline_spark.sources.catalog import load_table
+    from tests.conftest import SF_ORACLE
+
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    dirty = spark.createDataFrame(
+        [(900001, None), (900002, ""), (900003, "one"), (900004, "a b a b a")],
+        "doc_id long, text string",
+    )
+    df = docs.unionByName(dirty)
+
+    got = {r["doc_id"]: r["fp"] for r in df.select("doc_id", simhash("text").alias("fp")).collect()}
+    want = {
+        r["doc_id"]: r["fp"]
+        for r in df.select("doc_id", _simhash_numpy("text", SIMHASH_BITS).alias("fp")).collect()
+    }
+    assert got == want, {k: (got[k], want[k]) for k in got if got[k] != want.get(k)}
+
+    # Plan shape: the production fingerprint path is JVM-only — no
+    # Python evaluation node of any kind.
+    fp = docs.select("doc_id", simhash("text").alias("fp"))
+    plan = fp._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
