@@ -11,18 +11,13 @@ table keyed by cell, appended map-only per batch.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
-from mle_proj_datapipeline_spark.operators.hashing import h31_py
 from mle_proj_datapipeline_spark.operators.kmeans import kmeans_fit
 from mle_proj_datapipeline_spark.operators.veclib import (
-    EMB_DIM,
-    NUM_CELLS,
     NUM_PROBES,
     cosine,
     ivf_cell,
-    ivf_centroids,
-    ivf_min_dist,
     ivf_probes,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
@@ -97,7 +92,7 @@ def ivf_trained_topk(
     _, cent = kmeans_fit(
         candidates, id_col, vec_col, iterations=iterations, round_to=round_to
     )
-    # kmeans_fit's final row-join assignment is lazy and never consumed —
+    # kmeans_fit's final assignment is lazy and never consumed —
     # only the (cell, i, m) codebook rows are evaluated here.
     book_rows = cent.collect()
     # A cell that lost every vector drops out of the trained codebook, so

@@ -1,10 +1,10 @@
-"""Connected-components kernels: min-label propagation and alternating
-large-star/small-star rounds. Turns near-dup PAIRS (MinHash/SimHash output) into
-near-dup CLUSTERS — the form a training-data pipeline actually consumes
-(keep one canonical doc per cluster).
+"""Connected components by alternating large-star/small-star rounds.
+Turns near-dup PAIRS (MinHash/SimHash output) into near-dup CLUSTERS —
+the form a training-data pipeline actually consumes (keep one canonical
+doc per cluster).
 
-Scale design (100 TB): each round is one equi-join shuffle + one
-partial-aggregated groupBy; node-sized frames are broadcast-hinted
+Scale design (100 TB): each round is one partial-aggregated groupBy-min
++ one equi-join + distinct; node-sized frames are broadcast-hinted
 below a declared gate (checkpointed frames carry no stats); graphs
 below ``driver_max_edges`` skip the round loop for a driver union-find
 (operators/cc_local.py — same canonical labels).
@@ -22,109 +22,6 @@ def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
-    broadcast_nodes_max: int = 1_000_000,
-    driver_max_edges: int = 100_000,
-) -> DataFrame:
-    """Connected components over an undirected pair list by min-label
-    propagation: every node repeatedly takes the smallest component id
-    among itself and its neighbors until a fixpoint. Returns
-    ``(node, comp)`` with ``comp`` = smallest node id in the component.
-
-    This turns near-dup PAIRS (MinHash/SimHash output) into near-dup
-    CLUSTERS — the form a training-data pipeline actually consumes
-    (keep one canonical doc per cluster).
-
-    Scale design (100 TB):
-    - Each round is one equi-join shuffle + one partial-aggregated
-      groupBy on node id — no driver materialization; the per-round
-      convergence probe is ``limit(1).count()`` (stops at first diff).
-    - ``localCheckpoint`` truncates lineage so the physical plan stays
-      constant-size across rounds instead of doubling.
-    - Rounds are bounded by component diameter. LSH near-dup graphs are
-      unions of near-cliques (bucket co-membership), so 2-3 rounds in
-      practice; for adversarial chain graphs swap in alternating
-      large-star/small-star (same join primitive, O(log^2 n) rounds).
-    """
-    # Materialize the input pair list ONCE before anything consumes it
-    # twice: the symmetrizing union below references the pair plan in
-    # BOTH branches, so without this cut the caller's full candidate-
-    # generation subtree (MinHash shingle/sig/band work) executes twice
-    # inside one job (r12 — the same double-eval the star kernel fixed
-    # in round 12 prep; guide §2.4). The cut is pair-list-sized.
-    raw = materialize_frame(pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    # Small-graph arm: below the gate, per-round shuffle/checkpoint
-    # overhead dwarfs the work — one driver union-find replaces the
-    # whole iteration (operators/cc_local.py; same canonical labels).
-    # Fast gate: raw pair rows bound unique pairs from above, so
-    # raw_count ≤ cap proves the graph small WITHOUT building the
-    # symmetrized frame at all (union-find needs neither orientation
-    # nor dedup — r12: saves the sym shuffle + materialization on the
-    # arm where they are pure overhead). Above the fast gate, the exact
-    # unique-pair count still decides (ADVICE r7 semantics: the gate
-    # counts UNDIRECTED pairs incl. self-loops, never 2x directed rows).
-    from mle_proj_datapipeline_spark.operators.cc_local import union_find_labels
-
-    if driver_max_edges and raw.count() <= driver_max_edges:
-        return union_find_labels(raw, "a", "b")
-    edges = materialize_frame(
-        raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .dropDuplicates(["a", "b"])
-    )
-    if (
-        driver_max_edges
-        and edges.filter(F.col("a") <= F.col("b")).count() <= driver_max_edges
-    ):
-        return union_find_labels(edges, "a", "b")
-    labels = materialize_frame(
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    # Label/min frames are node-sized; checkpointed frames carry no
-    # size stats, so without a hint Catalyst reshuffles the EDGE list
-    # against them every round. One |V| count decides: small graphs
-    # broadcast the node-keyed side of every per-round join (edges are
-    # materialized once, never reshuffled), big graphs keep plain
-    # shuffle joins — identical results either way.
-    small_graph = labels.count() <= broadcast_nodes_max
-
-    def hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df
-
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                hint(labels.select(F.col("node").alias("b"), F.col("comp").alias("bc"))),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("bc").alias("nbr_comp"))
-            .select(F.col("a").alias("node"), "nbr_comp")
-        )
-        updated = materialize_frame(
-            labels.join(hint(nbr_min), "node", "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-            )
-        )
-        changed = (
-            updated.join(hint(labels.select("node", F.col("comp").alias("old"))), "node")
-            .filter(F.col("comp") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = updated
-        if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iter: int = 50,
     stats: dict | None = None,
     snapshot_root: str | None = None,
@@ -134,8 +31,8 @@ def connected_components_star(
     """Connected components by alternating LARGE-STAR / SMALL-STAR
     rounds (Kiveris et al., "Connected Components in MapReduce and
     Beyond" — public algorithm): converges in O(log² n) rounds on ANY
-    graph shape, including the long chains where plain min-label
-    propagation needs O(diameter) rounds.
+    graph shape, including long chains, where min-label propagation
+    would need O(diameter) rounds.
 
     large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u}).
     small-star(u): connect every neighbor v < u, and u itself, to m.
@@ -143,10 +40,10 @@ def connected_components_star(
     component's minimum node; labels read off as min(neighbor ∪ self).
 
     Per round: one groupBy-min on node (map-side combinable) + one
-    equi-join + distinct — same primitives as the label-prop kernel, so
-    the 100 TB shuffle story is unchanged; only the ROUND COUNT bound
-    improves. ``stats['rounds']`` reports rounds used (tested ≤ ~log² n
-    on an adversarial path graph). Returns (node, comp).
+    equi-join + distinct. ``stats['rounds']`` reports rounds used
+    (tested ≤ ~log² n on an adversarial path graph) and
+    ``stats['mode']`` the arm taken. Returns (node, comp), comp = the
+    smallest node id of the component.
 
     ``snapshot_root``: per-round edge sets commit to the snapshot layer
     instead of executor-local ``localCheckpoint`` — the durable path
@@ -209,8 +106,8 @@ def connected_components_star(
     if stats is not None:
         stats["mode"] = "star"
     # Per-round min frames are node-sized; materialized frames carry no
-    # size stats, so hint them (same gate as connected_components) to
-    # keep the edge set from reshuffling every round on small graphs.
+    # size stats, so hint them to keep the edge set from reshuffling
+    # every round on small graphs.
     small_graph = nodes.count() <= broadcast_nodes_max
 
     def hint(df: DataFrame) -> DataFrame:

@@ -1,11 +1,11 @@
 """Driver-local union-find for SMALL edge lists.
 
-The distributed connected-components kernels (operators/cc.py) pay
+The distributed connected-components kernel (operators/cc.py) pays
 several shuffle/checkpoint jobs PER ROUND — the right trade when the
 pair list is millions of rows, pure overhead when it is hundreds (a
-near-dup pair list is usually a tiny fraction of the corpus). Both
-kernels therefore gate on their already-computed deduped edge count and
-route small graphs here: one collect of (u, v) ids, a path-compressed
+near-dup pair list is usually a tiny fraction of the corpus). The
+kernel therefore gates on its pair count and routes small graphs
+here: one collect of (u, v) ids, a path-compressed
 union-find (O(E α(E)) — microseconds at the gate size), one
 createDataFrame back. Same adaptive philosophy as a broadcast join —
 ship the small side to one node because distribution costs more than it
@@ -26,7 +26,7 @@ def union_find_labels(
 ) -> DataFrame:
     """(node, comp) for every node appearing in ``edges``; comp = the
     smallest node id of its component (the same canonical labeling the
-    distributed kernels produce). Caller gates on edge count."""
+    distributed kernel produces). Caller gates on edge count."""
     node_type = dict(edges.dtypes)[src]
     rows = edges.select(src, dst).collect()  # gated small (see module doc)
 

@@ -40,7 +40,6 @@ def cooccurrence_pairs(
     val_col: str,
     max_set: int = MAX_COOCCUR_SET,
     directed: bool = False,
-    bounded_build: bool = False,
 ) -> DataFrame:
     """(src, dst) pairs of values that co-occur under the same key —
     the edge build shared by the graph family (PageRank / triangles /
@@ -62,37 +61,11 @@ def cooccurrence_pairs(
     ``directed=False`` emits both orientations of each unordered pair
     (the symmetric graph pagerank's contract wants); ``directed=True``
     emits only src < dst (oriented, for triangle/rule counting).
-
-    ``bounded_build=True`` selects the window-capped set build: the cap
-    applies BEFORE any per-key set materializes (dedup → row_number ≤
-    max_set per key → collect_list over at most max_set rows), so a
-    pathological key with 10⁸ members never inflates an aggregation
-    buffer — the default in-row build caps the fan-out but still
-    collects the full set first. Costs one extra shuffle (the dedup),
-    identical output (tested), so it is the arm to pick when per-key
-    cardinality is unknown; order-shaped data keeps the 1-shuffle
-    default.
     """
     pred = "y > x" if directed else "y != x"
-    if bounded_build:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(key_col).orderBy(val_col)
-        capped = (
-            df.select(key_col, val_col)
-            .dropDuplicates([key_col, val_col])
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_set)
-        )
-        # groupBy shares the window's hash partitioning on key_col —
-        # no third exchange; collect_list sees ≤ max_set rows per key.
-        sets = capped.groupBy(key_col).agg(
-            F.sort_array(F.collect_list(val_col)).alias("ss")
-        )
-    else:
-        sets = df.groupBy(key_col).agg(
-            F.slice(F.sort_array(F.collect_set(val_col)), 1, max_set).alias("ss")
-        )
+    sets = df.groupBy(key_col).agg(
+        F.slice(F.sort_array(F.collect_set(val_col)), 1, max_set).alias("ss")
+    )
     return sets.select(
         F.explode(
             F.expr(

@@ -272,26 +272,14 @@ def merge_upsert(
     target: DataFrame,
     updates: DataFrame,
     keys: list[str],
-    order_col: str | None = None,
 ) -> DataFrame:
     """MERGE INTO emulation without Delta (v1 image has no lake-format
     jars): updates win on key collision, unmatched target rows survive —
-    updates ∪ (target ⟕anti updates). With ``order_col``, intra-update
-    duplicates resolve to the greatest order value first (window
-    keep-first), so the operator is deterministic under at-least-once
-    delivery.
+    updates ∪ (target ⟕anti updates).
 
-    Scale: one broadcast-able anti join (updates are normally ≪ target)
-    + optional keyed window over the (small) update set. The target
-    never shuffles when updates broadcast. Rewriting only affected
-    partitions is the sink's job (dynamic partition overwrite)."""
-    if order_col is not None:
-        w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-        updates = (
-            updates.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-        )
+    Scale: one broadcast-able anti join (updates are normally ≪ target).
+    The target never shuffles when updates broadcast. Rewriting only
+    affected partitions is the sink's job (dynamic partition overwrite)."""
     survivors = target.join(F.broadcast(updates.select(*keys)), keys, "left_anti")
     return survivors.unionByName(updates)
 

@@ -40,16 +40,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_META = StructType(
-    [
-        StructField("kind", StringType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_frames", IntegerType(), True),
-    ]
-)
-
 BYTE_STATS_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),

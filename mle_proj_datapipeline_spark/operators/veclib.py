@@ -197,10 +197,9 @@ def valid_embeddings(
       side, engine-dependent garbage elsewhere. Moment queries
       (covariance, drift) keep zeros: they carry real mass.
 
-    Every SQL oracle mirrors this WHERE clause verbatim
-    (plans/llm_common.py: emb_valid_sql), so the contract is parity-
-    tested, not an implementation accident. Narrow map-side filter —
-    pushes to the scan, no shuffle."""
+    Every embedding oracle spells out this WHERE clause verbatim, so
+    the contract is parity-tested, not an implementation accident.
+    Narrow map-side filter — pushes to the scan, no shuffle."""
     cond = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
     if require_nonzero:
         cond = cond & F.exists(F.col(vec_col), lambda x: x != F.lit(0.0))

@@ -21,7 +21,7 @@ cross-engine hash."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from mle_proj_datapipeline_spark.operators.graph import (
     MAX_COOCCUR_SET,

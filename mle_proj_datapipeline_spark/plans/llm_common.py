@@ -91,23 +91,3 @@ _COSINE = (
     " / (sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (acc, v) -> acc + v))"
     " * sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (acc, v) -> acc + v)))"
 )
-
-
-def emb_valid_sql(require_nonzero: bool = True, vec: str = "embedding") -> str:
-    """DuckDB twin of operators/veclib.valid_embeddings — the declared
-    dirty-input contract for embedding consumers (NULL / wrong-length
-    always dropped; all-zero additionally for the similarity family).
-    Appears verbatim in every embedding oracle so the contract is
-    parity-tested on fuzzed data, not just clean fixtures."""
-    base = f"{vec} IS NOT NULL AND len({vec}) = {sim.EMB_DIM}"
-    if require_nonzero:
-        base += f" AND list_bool_or([x <> 0 for x in {vec}])"
-    return base
-
-
-# Guarded relation to swap in for a bare `embeddings` table reference in
-# FROM/JOIN clauses (keeps the original table name visible to aliases).
-EMB_VALID_REL = f"(SELECT * FROM embeddings WHERE {emb_valid_sql()}) embeddings"
-EMB_WELLFORMED_REL = (
-    f"(SELECT * FROM embeddings WHERE {emb_valid_sql(require_nonzero=False)}) embeddings"
-)

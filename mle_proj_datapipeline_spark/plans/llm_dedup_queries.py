@@ -87,15 +87,14 @@ def minhash_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs folded into clusters via alternating
-    large-star/small-star rounds (operators/cc
-    .connected_components_star, O(log² n) rounds on any graph shape —
-    chains included, unlike plain min-label propagation);
+    large-star/small-star rounds (operators/cc.connected_components,
+    O(log² n) rounds on any graph shape, chains included);
     cluster_id = smallest doc_id in the component. The oracle computes
     the same transitive closure with a recursive CTE. This is the
     consumable dedup artifact: keep one canonical doc per cluster_id."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = _mh.minhash_lsh_pairs(docs, "doc_id", "text", shingle_k=3, threshold=0.5)
-    comps = _cc.connected_components_star(pairs)
+    comps = _cc.connected_components(pairs)
     return comps.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 

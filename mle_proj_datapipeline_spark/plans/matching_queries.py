@@ -283,7 +283,7 @@ def customer_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     with executor-local per-round cuts (no snapshot root) over a pair
     list materialized ONCE, and survivorship is one window + one groupBy on the cluster
     id."""
-    from mle_proj_datapipeline_spark.operators import cc as dd
+    from mle_proj_datapipeline_spark.operators.cc import connected_components
     from mle_proj_datapipeline_spark.operators.symspell import symspell_pairs
     from pyspark.sql import Window
 
@@ -294,7 +294,7 @@ def customer_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = symspell_pairs(
         c, "c_custkey", "c_name", block_cols=("c_nationkey", "ln")
     ).select("id_a", "id_b")
-    comps = dd.connected_components_star(pairs)
+    comps = connected_components(pairs)
     enr = comps.join(
         c.select("c_custkey", "c_name", "c_acctbal"),
         comps.node == F.col("c_custkey"),

@@ -12,7 +12,7 @@ cross-engine hash."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from mle_proj_datapipeline_spark.plans.llm_common import _h31  # noqa: F401
 from mle_proj_datapipeline_spark.plans.registry import register

@@ -62,7 +62,6 @@ def get_spark(
         .config("spark.sql.adaptive.localShuffleReader.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -137,8 +136,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Python data sources may implement pushFilters
-        "spark.sql.python.filterPushdown.enabled": "true",
     }
     for k, v in runtime.items():
         try:

@@ -171,7 +171,6 @@ def footer_stats(
     path: str,
     min_cols: tuple[str, ...] = (),
     max_cols: tuple[str, ...] = (),
-    require_pushdown: bool = True,
 ) -> DataFrame:
     """Metadata-only table stats: COUNT(*) plus MIN/MAX of the given
     columns served from parquet FOOTER statistics via DSv2 aggregate
@@ -183,8 +182,7 @@ def footer_stats(
     stays the v1 reader, whose plan shapes the rest of the engine is
     guarded against); the one-row result is materialized inside that
     window via an eager ``localCheckpoint``, then the confs are
-    restored. With ``require_pushdown`` (the default) the call FAILS
-    LOUDLY if the optimizer could not push the aggregate (e.g. a
+    restored. The call FAILS LOUDLY if the optimizer could not push the aggregate (e.g. a
     timestamp column, a filter, or a non-parquet source) — silently
     falling back to a full scan would defeat the point.
     """
@@ -205,16 +203,15 @@ def footer_stats(
         aggs += [F.min(c).alias(f"min_{c}") for c in min_cols]
         aggs += [F.max(c).alias(f"max_{c}") for c in max_cols]
         out = df.agg(*aggs)
-        if require_pushdown:
-            plan = out._sc._jvm.PythonSQLUtils.explainString(
-                out._jdf.queryExecution(), "simple"
+        plan = out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "simple"
+        )
+        if "PushedAggregation: [COUNT" not in plan:
+            raise ValueError(
+                f"footer_stats: aggregate was not pushed to the parquet "
+                f"footer for {path} (unsupported column type or source); "
+                f"use a plain agg instead of silently full-scanning"
             )
-            if "PushedAggregation: [COUNT" not in plan:
-                raise ValueError(
-                    f"footer_stats: aggregate was not pushed to the parquet "
-                    f"footer for {path} (unsupported column type or source); "
-                    f"use a plain agg instead of silently full-scanning"
-                )
         try:
             return materialize_frame(out)
         except Exception as exc:  # zero-row-group file: no footer stats

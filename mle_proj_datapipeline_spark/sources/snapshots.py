@@ -12,8 +12,8 @@ designs of both inform the layout):
                                   {version, timestamp, parent, files[]}
       data/c17-<uuid>/part-*.parquet   immutable per-commit file sets
 
-- A reader resolves exactly one manifest (latest, by version, or
-  latest-at-timestamp) and scans only the files it lists — data files
+- A reader resolves exactly one manifest (latest, or a pinned
+  version) and scans only the files it lists — data files
   are never mutated, so every historical version stays readable until
   expired.
 - A writer stages data files first, then commits by CLAIMING its
@@ -35,23 +35,20 @@ designs of both inform the layout):
   repair a just-committed version may be briefly visible before its
   writer retracts it.
 - OVERWRITE lists only new files; APPEND lists parent files + new.
-  COMPACT (small-file bin-packing) is a rewrite committed as a new
-  version, so it is time-travel-safe.
 - All filesystem access goes through the Hadoop FileSystem API of the
   active session, so the layout works unchanged on HDFS/S3A/local.
 
 Scale notes (100 TB): manifests hold file paths only (KBs per commit);
 the expensive part of a snapshot table — per-file column stats for
 pruning — is delegated to parquet footers, which Spark already reads.
-`compact` exists because streaming/incremental commits accrete small
-files and 100 TB scans pay per-file open costs; `expire` bounds
-storage growth by dropping manifests and any file no live version
-references.
+`expire` bounds storage growth by dropping manifests and any file no
+live version references.
 """
 
 from __future__ import annotations
 
 import json
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -150,14 +147,12 @@ def _fork_conflict(snaps: list[dict], version: int, parent: int | None) -> bool:
 def _claim_age(spark: SparkSession, path: str) -> float:
     """Seconds since the claim file at ``path`` was written; -1.0 if it
     does not exist (the version is claimable)."""
-    import time as _time
-
     fs, _ = _fs(spark, path)
     jpath = _jpath(spark, path)
     try:
         if not fs.exists(jpath):
             return -1.0
-        return _time.time() - fs.getFileStatus(jpath).getModificationTime() / 1000.0
+        return time.time() - fs.getFileStatus(jpath).getModificationTime() / 1000.0
     except Exception as ex:
         # Deleted between exists() and getFileStatus() == claim released
         # — genuinely claimable. Anything else (a transient FS error)
@@ -238,9 +233,7 @@ def history(spark: SparkSession, root: str) -> list[dict]:
     ]
 
 
-def _resolve(
-    spark: SparkSession, root: str, version: int | None, as_of: float | None
-) -> dict:
+def _resolve(spark: SparkSession, root: str, version: int | None) -> dict:
     snaps = history(spark, root)
     if not snaps:
         raise FileNotFoundError(f"no snapshots under {root}")
@@ -249,11 +242,6 @@ def _resolve(
             if s["version"] == version:
                 return s
         raise ValueError(f"version {version} not found (have {[s['version'] for s in snaps]})")
-    if as_of is not None:
-        live = [s for s in snaps if s["timestamp"] <= as_of]
-        if not live:
-            raise ValueError(f"no snapshot at or before timestamp {as_of}")
-        return live[-1]
     return snaps[-1]
 
 
@@ -261,7 +249,6 @@ def write_snapshot(
     df: DataFrame,
     root: str,
     mode: str = "overwrite",
-    timestamp: float | None = None,
     meta: dict | None = None,
 ) -> int:
     """Commit ``df`` as the next version. ``mode='overwrite'`` replaces
@@ -269,9 +256,8 @@ def write_snapshot(
     fresh per-commit directory; the version becomes visible only at the
     final atomic manifest rename. Returns the committed version.
 
-    ``timestamp`` orders versions for time travel; pass an explicit
-    event/processing time for reproducible pipelines (defaults to wall
-    clock)."""
+    The manifest's timestamp is the wall clock, never earlier than the
+    parent's."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     spark = df.sparkSession
@@ -315,29 +301,18 @@ def write_snapshot(
         # possibly-live writer: wait for it rather than fork.
         while _claim_age(spark, f"{root}/{SNAP_DIR}/.v{version:08d}.claim") > CLAIM_STALL_SECONDS:
             version += 1
-        if timestamp is None:
-            # default wall clock is re-read per attempt so a losing
-            # writer can't stamp behind the winner it retries after
-            import time as _time
-
-            ts = _time.time()
-            if parent:
-                ts = max(ts, parent["timestamp"])
-        else:
-            ts = timestamp
-            if parent and ts < parent["timestamp"]:
-                raise ValueError(
-                    f"timestamp {ts} precedes parent snapshot {parent['timestamp']}"
-                )
+        # The wall clock is re-read per attempt so a losing writer
+        # can't stamp behind the winner it retries after.
+        ts = time.time()
+        if parent:
+            ts = max(ts, parent["timestamp"])
         files = new_files
         if mode == "append" and parent:
             files = sorted(set(parent["files"]) | set(new_files))
         claim = f"{root}/{SNAP_DIR}/.v{version:08d}.claim"
         if not _create_exclusive(spark, claim):
             # claim taken — another writer owns this version; back off
-            import time as _time
-
-            _time.sleep(0.2)
+            time.sleep(0.2)
             continue
         manifest = {
             "version": version,
@@ -386,37 +361,19 @@ def read_snapshot(
     spark: SparkSession,
     root: str,
     version: int | None = None,
-    as_of: float | None = None,
 ) -> DataFrame:
-    """Read one table version: latest by default, a pinned ``version``,
-    or time travel to the latest snapshot with timestamp ≤ ``as_of``.
+    """Read one table version: latest by default, or a pinned
+    ``version``.
 
     The version's files go through ``readers.read_parquet``, keyed on
     the manifest's file tuple and the inference confs: the first read
     of a version infers its schema, later reads of the same files
     (same paths, sizes and mtimes) declare it and run no job. A new
     commit lists new files, so it is inferred again."""
-    snap = _resolve(spark, root, version, as_of)
+    snap = _resolve(spark, root, version)
     if not snap["files"]:
         raise ValueError(f"snapshot v{snap['version']} is empty")
     return read_parquet(spark, *snap["files"])
-
-
-def compact(
-    spark: SparkSession,
-    root: str,
-    target_files: int,
-    timestamp: float | None = None,
-) -> int:
-    """Bin-pack the latest version into ``target_files`` data files and
-    commit as a new version (rows unchanged). Run after many small
-    incremental commits: scan cost at scale is dominated by per-file
-    opens, and time travel to pre-compaction versions still works
-    because the small files aren't touched until ``expire``."""
-    latest = read_snapshot(spark, root)
-    return write_snapshot(
-        latest.coalesce(target_files), root, mode="overwrite", timestamp=timestamp
-    )
 
 
 def expire(spark: SparkSession, root: str, keep_last: int) -> list[int]:

@@ -44,7 +44,7 @@ def test_hash_sample_is_stable_under_repartition(spark):
 
 
 def test_connected_components_chain_and_islands(spark):
-    """Min-label propagation must produce the transitive closure: a
+    """Connected components must produce the transitive closure: a
     4-node chain collapses to one component even though no pair spans
     it, and disjoint islands keep distinct ids."""
     from mle_proj_datapipeline_spark.operators.cc import connected_components

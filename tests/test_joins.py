@@ -1,6 +1,6 @@
 """Join-operator edge paths: as-of direction/exact-match variants
 (validated against pandas merge_asof — the semantics the operator
-claims), range-join boundary inclusion, merge_upsert keep-latest."""
+claims) and range-join boundary inclusion."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 
 from mle_proj_datapipeline_spark.operators.joins import (
     asof_join,
-    merge_upsert,
     range_join_bucketed,
 )
 
@@ -195,24 +194,6 @@ def test_range_join_huge_finite_endpoints(spark):
     )
     assert got == ref
     assert (2, 200) in got and (1, 300) in got and (2, 300) in got and (3, 300) in got
-
-
-def test_merge_upsert_keep_latest(spark):
-    target = spark.createDataFrame([(1, "old1"), (2, "old2")], ["id", "v"])
-    updates = spark.createDataFrame(
-        [(2, "newA", 5), (2, "newB", 9), (3, "new3", 1)], ["id", "v", "version"]
-    )
-    got = {
-        (r["id"], r["v"])
-        for r in merge_upsert(
-            target.withColumn("version", target.id * 0),
-            updates,
-            ["id"],
-            order_col="version",
-        ).select("id", "v").collect()
-    }
-    # id=2: highest version wins; id=1 survives; id=3 inserted
-    assert got == {(1, "old1"), (2, "newB"), (3, "new3")}
 
 
 def _asof_join_salted(left, right, on, left_ts, right_ts, salt_from, n_salts, **kw):

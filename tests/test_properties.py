@@ -135,8 +135,9 @@ EDGES = st.lists(
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(edges=EDGES)
 def test_connected_components_matches_union_find(spark, edges):
-    """Min-label propagation must agree with a reference union-find on
-    arbitrary graphs (self-loops, duplicates, chains, cycles)."""
+    """The large-star/small-star kernel must agree with a reference
+    union-find on arbitrary graphs (self-loops, duplicates, chains,
+    cycles)."""
     from mle_proj_datapipeline_spark.operators.cc import connected_components
 
     parent: dict[int, int] = {}
@@ -168,17 +169,9 @@ def test_connected_components_matches_union_find(spark, edges):
     }
     assert got == expected
 
-    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
-
-    got_star = {
-        r["node"]: r["comp"]
-        for r in connected_components_star(pairs, driver_max_edges=0).collect()
-    }
-    assert got_star == expected
-
-    # the gated driver arm must agree with the distributed kernels
+    # the gated driver arm must agree with the distributed kernel
     got_local = {
-        r["node"]: r["comp"] for r in connected_components_star(pairs).collect()
+        r["node"]: r["comp"] for r in connected_components(pairs).collect()
     }
     assert got_local == expected
 
@@ -189,21 +182,21 @@ def test_driver_gate_counts_pairs_not_directed_rows(spark):
     pairs and silently halved the effective cap). A graph of exactly N
     unique pairs with driver_max_edges=N must take the driver
     union-find arm."""
-    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
+    from mle_proj_datapipeline_spark.operators.cc import connected_components
 
     n_pairs = 10
     pairs = spark.createDataFrame(
         [(i, i + 100) for i in range(n_pairs)], "id_a long, id_b long"
     )
     stats: dict = {}
-    labels = connected_components_star(
+    labels = connected_components(
         pairs, stats=stats, driver_max_edges=n_pairs
     ).collect()
     assert stats["mode"] == "driver-union-find"
     assert len(labels) == 2 * n_pairs  # every node labeled
     # and strictly above the cap the distributed kernel runs
     stats2: dict = {}
-    connected_components_star(pairs, stats=stats2, driver_max_edges=n_pairs - 1).collect()
+    connected_components(pairs, stats=stats2, driver_max_edges=n_pairs - 1).collect()
     assert stats2["mode"] == "star"
 
 
@@ -213,14 +206,14 @@ def test_star_cc_chain_converges_logarithmically(spark):
     in O(log² n) rounds — far under the diameter bound."""
     import math
 
-    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
+    from mle_proj_datapipeline_spark.operators.cc import connected_components
 
     n = 1000
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     stats: dict = {}
-    labels = connected_components_star(chain, stats=stats, driver_max_edges=0).collect()
+    labels = connected_components(chain, stats=stats, driver_max_edges=0).collect()
     assert len(labels) == n
     assert all(r["comp"] == 0 for r in labels)
     assert stats["rounds"] <= math.ceil(math.log2(n)) + 3  # ≈ log² head-room
@@ -280,17 +273,17 @@ def test_ngram_blocking_bounded_under_hot_prefix(spark):
 
 def test_star_cc_snapshot_path_identical(spark, tmp_path):
     """Durable per-round checkpointing must not change the labeling."""
-    from mle_proj_datapipeline_spark.operators.cc import connected_components_star
+    from mle_proj_datapipeline_spark.operators.cc import connected_components
 
     edges = [(1, 2), (2, 3), (4, 5), (6, 6), (7, 8), (8, 9), (9, 10)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     local = {
         tuple(r)
-        for r in connected_components_star(pairs, driver_max_edges=0).collect()
+        for r in connected_components(pairs, driver_max_edges=0).collect()
     }
     durable = {
         tuple(r)
-        for r in connected_components_star(
+        for r in connected_components(
             pairs, snapshot_root=str(tmp_path / "cc"), driver_max_edges=0
         ).collect()
     }
@@ -728,17 +721,14 @@ def test_covariance_arms_agree_on_dirty_vectors(spark):
 
 
 def test_cc_fast_gate_selfloops_dups_and_rescue_arm(spark):
-    """r12: both CC kernels gate first on the RAW pair count (an upper
+    """r12: the CC kernel gates first on the RAW pair count (an upper
     bound on unique pairs) so small graphs skip the node/symmetrized-
     edge builds entirely — the union-find consumes the raw list, where
     self-loops keep singleton nodes in the universe and duplicates are
     immaterial. A duplicate-heavy list that fails the fast gate must
     still reach the driver arm through the exact unique-pair gate
     (ADVICE r7 semantics preserved)."""
-    from mle_proj_datapipeline_spark.operators.cc import (
-        connected_components,
-        connected_components_star,
-    )
+    from mle_proj_datapipeline_spark.operators.cc import connected_components
 
     rows = [(1, 2), (2, 1), (1, 2), (3, 3), (4, 5)]  # dups + self-loop
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
@@ -746,13 +736,9 @@ def test_cc_fast_gate_selfloops_dups_and_rescue_arm(spark):
     stats: dict = {}
     got = {
         (r["node"], r["comp"])
-        for r in connected_components_star(pairs, stats=stats).collect()
+        for r in connected_components(pairs, stats=stats).collect()
     }
     assert got == want and stats["mode"] == "driver-union-find"
-    got_ml = {
-        (r["node"], r["comp"]) for r in connected_components(pairs).collect()
-    }
-    assert got_ml == want
 
     # 10 unique pairs duplicated 3x: raw=30 fails a cap of 10, but the
     # exact gate (unique pairs = 10 <= 10) must rescue the driver arm.
@@ -760,7 +746,7 @@ def test_cc_fast_gate_selfloops_dups_and_rescue_arm(spark):
         [(i, i + 100) for i in range(10)] * 3, "id_a long, id_b long"
     )
     stats2: dict = {}
-    lbl = connected_components_star(dup, stats=stats2, driver_max_edges=10).collect()
+    lbl = connected_components(dup, stats=stats2, driver_max_edges=10).collect()
     assert stats2["mode"] == "driver-union-find" and len(lbl) == 20
 
 

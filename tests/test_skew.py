@@ -141,37 +141,3 @@ def test_cooccurrence_fanout_capped_on_hot_container(spark):
     o = [(r["src"], r["dst"]) for r in oriented.collect() if r["src"] < 1000]
     assert len(o) == MAX_COOCCUR_SET * (MAX_COOCCUR_SET - 1) // 2
     assert all(a < b for a, b in o)
-
-
-def test_cooccurrence_bounded_build_identical_and_no_full_set(spark):
-    """bounded_build=True must produce the identical edge set through
-    the window-capped build (the cap lands BEFORE any per-key set
-    materializes — no aggregation buffer ever holds the hot container's
-    full membership), for both orientations, including duplicate input
-    rows (the dedup is part of the bounded arm)."""
-    from mle_proj_datapipeline_spark.operators.graph import cooccurrence_pairs
-
-    hot = spark.range(600).select(F.lit(0).alias("k"), F.col("id").alias("v"))
-    cold = spark.range(3).select(F.lit(1).alias("k"), (F.col("id") + 1000).alias("v"))
-    df = hot.unionByName(cold).unionByName(cold)  # duplicates too
-
-    for directed in (False, True):
-        a = sorted(
-            map(tuple, cooccurrence_pairs(df, "k", "v", directed=directed).collect())
-        )
-        b = sorted(
-            map(
-                tuple,
-                cooccurrence_pairs(
-                    df, "k", "v", directed=directed, bounded_build=True
-                ).collect(),
-            )
-        )
-        assert a == b and a
-    # the bounded arm's plan caps per-key rows with a rank filter before
-    # any collect aggregate appears
-    plan = (
-        cooccurrence_pairs(df, "k", "v", bounded_build=True)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "collect_list" in plan and "collect_set" not in plan

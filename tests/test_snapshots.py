@@ -1,13 +1,12 @@
 """Snapshot-table layer (sources/snapshots.py): versioned commits,
-time travel, compaction, expiry and concurrent commits over plain
-parquet + JSON manifests, plus the ``materialize_frame`` lineage cut."""
+version pinning, expiry and concurrent commits over plain parquet +
+JSON manifests, plus the ``materialize_frame`` lineage cut."""
 
 from __future__ import annotations
 
 import pytest
 
 from mle_proj_datapipeline_spark.sources.snapshots import (
-    compact,
     expire,
     history,
     read_snapshot,
@@ -29,42 +28,33 @@ def _df(spark, pairs):
 
 
 def test_versioned_commits_and_time_travel(spark, root):
-    v1 = write_snapshot(_df(spark, [(1, "a"), (2, "b")]), root, timestamp=100.0)
-    v2 = write_snapshot(_df(spark, [(3, "c")]), root, mode="append", timestamp=200.0)
-    v3 = write_snapshot(_df(spark, [(9, "z")]), root, timestamp=300.0)
+    v1 = write_snapshot(_df(spark, [(1, "a"), (2, "b")]), root)
+    v2 = write_snapshot(_df(spark, [(3, "c")]), root, mode="append")
+    v3 = write_snapshot(_df(spark, [(9, "z")]), root)
     assert (v1, v2, v3) == (1, 2, 3)
 
     assert _rows(read_snapshot(spark, root)) == _rows(_df(spark, [(9, "z")]))
     assert _rows(read_snapshot(spark, root, version=2)) == _rows(
         _df(spark, [(1, "a"), (2, "b"), (3, "c")])
     )
-    # time travel: as_of between v1 and v2 resolves v1; exact hit resolves v2
-    assert _rows(read_snapshot(spark, root, as_of=150.0)) == _rows(_df(spark, [(1, "a"), (2, "b")]))
-    assert _rows(read_snapshot(spark, root, as_of=200.0)) == _rows(
-        _df(spark, [(1, "a"), (2, "b"), (3, "c")])
-    )
-    with pytest.raises(ValueError):
-        read_snapshot(spark, root, as_of=50.0)
     with pytest.raises(ValueError):
         read_snapshot(spark, root, version=7)
 
     h = history(spark, root)
     assert [s["version"] for s in h] == [1, 2, 3]
     assert [s["parent"] for s in h] == [None, 1, 2]
+    # manifest timestamps never run backwards along the lineage
+    assert [s["timestamp"] for s in h] == sorted(s["timestamp"] for s in h)
     # append manifests carry the parent's files forward
     assert set(h[0]["files"]) < set(h[1]["files"])
 
 
 def test_compact_and_expire(spark, root):
     for i in range(4):  # 4 tiny commits => many small files
-        write_snapshot(
-            _df(spark, [(i, f"v{i}")]).repartition(4),
-            root,
-            mode="append",
-            timestamp=100.0 + i,
-        )
+        write_snapshot(_df(spark, [(i, f"v{i}")]).repartition(4), root, mode="append")
     before = history(spark, root)[-1]
-    v = compact(spark, root, target_files=1, timestamp=200.0)
+    # compaction is an overwrite commit of the coalesced latest version
+    v = write_snapshot(read_snapshot(spark, root).coalesce(1), root)
     after = history(spark, root)[-1]
     assert after["version"] == v and len(after["files"]) < len(before["files"])
     expected = _rows(_df(spark, [(0, "v0"), (1, "v1"), (2, "v2"), (3, "v3")]))
@@ -80,12 +70,6 @@ def test_compact_and_expire(spark, root):
     assert _rows(read_snapshot(spark, root)) == expected
     with pytest.raises(ValueError):
         read_snapshot(spark, root, version=2)
-
-
-def test_timestamps_must_be_monotonic(spark, root):
-    write_snapshot(_df(spark, [(1, "a")]), root, timestamp=100.0)
-    with pytest.raises(ValueError):
-        write_snapshot(_df(spark, [(2, "b")]), root, timestamp=50.0)
 
 
 def test_concurrent_writers_never_lose_a_commit(spark, tmp_path_factory):
