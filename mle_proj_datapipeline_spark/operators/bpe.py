@@ -40,6 +40,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from mle_proj_datapipeline_spark.sources.readers import local_frame
 from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 DELIM = "||"
@@ -248,8 +249,8 @@ def bpe_learn(
         if pending >= MAX_EXPR_CHAIN // 2:
             corpus = materialize_frame(corpus)
             pending = 0
-    return spark.createDataFrame(
-        merges, "step INT, left STRING, right STRING, pair_count BIGINT"
+    return local_frame(
+        spark, merges, "step INT, left STRING, right STRING, pair_count BIGINT"
     )
 
 

@@ -15,6 +15,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from mle_proj_datapipeline_spark.operators.cc_local import (
+    DRIVER_MAX_EDGES,
+    union_find_labels,
+)
 from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 
@@ -26,7 +30,7 @@ def connected_components(
     stats: dict | None = None,
     snapshot_root: str | None = None,
     broadcast_nodes_max: int = 1_000_000,
-    driver_max_edges: int = 100_000,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR
     rounds (Kiveris et al., "Connected Components in MapReduce and
@@ -81,8 +85,6 @@ def connected_components(
     # were pure overhead. Above the fast gate the exact symmetrized
     # count still decides (ADVICE r7 semantics: the gate counts unique
     # input pairs, never 2x directed rows).
-    from mle_proj_datapipeline_spark.operators.cc_local import union_find_labels
-
     if driver_max_edges and raw.count() <= driver_max_edges:
         if stats is not None:
             stats["rounds"] = 0

@@ -14,9 +14,13 @@ Scale design (100 TB):
 - The edge list is joined with out-degrees ONCE and localCheckpoint-ed,
   so per-iteration lineage stays constant-size (same discipline as
   connected_components).
-- No driver-side data: the only actions are a |V| count (a scalar) and
-  the caller's own sink. Rank vectors are |V|-sized DataFrames, never
-  collected.
+- Small symmetric graphs solve on the driver: when the degree table's
+  sum (|E|) is within operators/cc_local.PAGERANK_DRIVER_MAX_EDGES, one
+  Arrow fetch of the edge list feeds the same recurrence in NumPy.
+  Otherwise no edge or rank data reaches the driver: the only actions
+  are a |V| count (a scalar; on the symmetric arm |V| and |E| in one
+  row) and the caller's own sink. Rank vectors are |V|-sized
+  DataFrames, never collected.
 - Iteration count is fixed (power iteration converges geometrically at
   rate ``damping``; 5-20 rounds is the production norm) so the job
   graph is static and AQE can plan each round.
@@ -29,6 +33,7 @@ import functools
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from mle_proj_datapipeline_spark.operators import cc_local
 from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 MAX_COOCCUR_SET = 64
@@ -142,7 +147,11 @@ def pagerank(
     round is the one broadcast-hash contribution join + one
     partial-aggregated shuffle, and the edge list is cached once as
     bare (src, dst). Values are bit-identical: the same
-    ``teleport + damping * m`` expression over the same m.
+    ``teleport + damping * m`` expression over the same m. The degree
+    table's one pre-loop action also sums |E|; at most
+    ``cc_local.PAGERANK_DRIVER_MAX_EDGES`` edges run the rounds on the
+    driver instead (cc_local.local_pagerank: equal to summation order,
+    ValueError when a destination is not a source).
 
     ``assume_distinct=True`` skips the defensive dropDuplicates on the
     input — for callers whose edge relation is distinct by construction
@@ -173,9 +182,14 @@ def pagerank(
         # off it directly — no separate distinct-nodes shuffle, no
         # second count job.
         deg = cut(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-        n = deg.count()
+        # |V| and |E| (the degree sum) in the one action this arm takes
+        # before its rounds; an edge list within the gate solves on the
+        # driver (operators/cc_local.local_pagerank, same recurrence).
+        n, n_edges = deg.agg(F.count(F.lit(1)), F.sum("deg")).first()
         if n == 0:
             return deg.select(F.col("src").alias("node"), F.lit(0.0).alias("r"))
+        if n_edges <= cc_local.PAGERANK_DRIVER_MAX_EDGES:
+            return cc_local.local_pagerank(e, iterations, damping)
         small = n <= broadcast_nodes_max
 
         def hint(df: DataFrame) -> DataFrame:

@@ -14,6 +14,7 @@ from mle_proj_datapipeline_spark.operators.veclib import (
     ivf_min_dist,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
+from mle_proj_datapipeline_spark.sources.readers import local_frame
 
 
 def kmeans_fit(
@@ -84,7 +85,8 @@ def kmeans_fit(
         cell_col().alias("cell"),
         ivf_min_dist(vec_col, book, round_to=round_to).alias("dist_sq"),
     )
-    cent = vecs.sparkSession.createDataFrame(
+    cent = local_frame(
+        vecs.sparkSession,
         [
             (cell, i + 1, m)
             for ci, cell in enumerate(cells)

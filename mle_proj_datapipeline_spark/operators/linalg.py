@@ -24,6 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from mle_proj_datapipeline_spark.sources.readers import local_frame
 from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 # Above this dimensionality the d² in-row explode (n·d² cell rows
@@ -204,8 +205,8 @@ def top_eigvec(
             # CTE oracle both produce the empty relation; the zero
             # matrix here would instead power-iterate to a d-row NaN
             # vector (empty-table fuzz find, round 7).
-            return cov.sparkSession.createDataFrame(
-                [], "j INT, v DOUBLE, eigval DOUBLE"
+            return local_frame(
+                cov.sparkSession, [], "j INT, v DOUBLE, eigval DOUBLE"
             )
         c = np.zeros((dim, dim))
         for r in rows:
@@ -216,7 +217,8 @@ def top_eigvec(
             u = c @ v
             v = u / float(np.sqrt((u * u).sum()))
         eigval = float((v * u).sum())
-        return cov.sparkSession.createDataFrame(
+        return local_frame(
+            cov.sparkSession,
             [(int(j), float(v[j]), eigval) for j in range(dim)],
             "j INT, v DOUBLE, eigval DOUBLE",
         )

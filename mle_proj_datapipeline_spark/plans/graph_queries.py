@@ -27,7 +27,6 @@ from mle_proj_datapipeline_spark.operators.graph import (
     MAX_COOCCUR_SET,
     cooccurrence_pairs,
 )
-from mle_proj_datapipeline_spark.plans.llm_common import _h31  # noqa: F401
 from mle_proj_datapipeline_spark.plans.registry import register
 from mle_proj_datapipeline_spark.sources.catalog import load_table
 
@@ -97,7 +96,9 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the graph is symmetric by construction and the pagerank dangling
     guard is safely skipped (validate=False).
     Iteration: see operators/graph.pagerank (one shuffle per round,
-    partial aggregation, checkpointed lineage).
+    partial aggregation, checkpointed lineage; an edge list within
+    operators/cc_local.PAGERANK_DRIVER_MAX_EDGES solves on the driver
+    instead).
 
     Float parity: teleport is 1-0.85 computed in binary vs the
     oracle's 0.15 decimal literal — ≤1 ulp apart, invisible at the

@@ -14,7 +14,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from mle_proj_datapipeline_spark.plans.llm_common import _h31  # noqa: F401
 from mle_proj_datapipeline_spark.operators.veclib import valid_embeddings
 from mle_proj_datapipeline_spark.plans.registry import register
 from mle_proj_datapipeline_spark.sources.catalog import load_table

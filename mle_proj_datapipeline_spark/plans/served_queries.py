@@ -1,24 +1,25 @@
-"""Serve-path queries answered from PERSISTED incremental state.
+"""Serve-path queries answered from PERSISTED count state.
 
-The streaming twins (streaming/lm.py, streaming/sketch.py) maintain
-mergeable count state batch-by-batch; these queries complete the
+The count twins (streaming/lm.py, streaming/sketch.py) keep mergeable
+count state as per-batch partials; these queries complete the
 fit-once/serve-many story the ANN family already has
 (ann_lsh_indexed_top1 / ann_ivf_indexed_topk): the registered query
-ENSURES the state exists for the requested corpus — running the
-AvailableNow maintenance stream only when the state is absent or the
-source files changed (the same file-stat fingerprint pinning the LSH
-index uses) — and then answers purely from the committed state.
+ENSURES the state exists for the requested corpus — folding the whole
+source table into it as one batch (``batch_id=0``) only when the state
+is absent or the source files changed (the same file-stat fingerprint
+pinning the LSH index uses) — and then answers purely from the
+committed state.
 
 Each serves under the SAME oracle as its build-path sibling, because
-serving from incrementally maintained counts must be bit-identical to
-the one-shot batch computation (counts merge by plain SUM).
+serving from maintained counts must be bit-identical to the one-shot
+batch computation (counts merge by plain SUM).
 
-Scale: steady state never touches the maintenance stream — the served
-model is a groupBy-SUM over bounded state partitions (vocabulary-sized
-for the LM, d×w for the sketch), broadcast onto the scoring scan. The
-rebuild trigger is a file-stat fingerprint (no data scan); at 100 TB
-the stream's checkpointed file log makes each maintenance pass
-incremental over NEW files only.
+Scale: steady state never touches the source table's count pass — the
+served model is a groupBy-SUM over bounded state partitions
+(vocabulary-sized for the LM, d×w for the sketch), broadcast onto the
+scoring scan. The rebuild trigger is a file-stat fingerprint (no data
+scan); a fingerprint change rebuilds the state from scratch with one
+batch fold, so no stream, checkpoint or file log is involved.
 """
 
 from __future__ import annotations
@@ -39,15 +40,15 @@ from mle_proj_datapipeline_spark.sources.catalog import load_table, source_finge
 from mle_proj_datapipeline_spark.sources.metrics import warehouse_root
 
 
-def _ensure_stream_state(
-    spark: SparkSession, sf_dir: str, table: str, name: str, run_pass
+def _ensure_count_state(
+    spark: SparkSession, sf_dir: str, table: str, name: str, build
 ) -> str:
-    """Fingerprint-pinned streaming state under the warehouse: run the
-    AvailableNow maintenance pass (``run_pass(source, schema, state,
-    checkpoint)``) only when the committed state is absent or the
-    source table's files changed; return the state directory. A changed
-    corpus wipes state + checkpoint together — the file log and the
-    partials must describe the same file set."""
+    """Fingerprint-pinned count state under the warehouse: fold the
+    source table into state (``build(source_df, state)``) only when the
+    committed state is absent or the table's files changed; return the
+    state directory. A fingerprint change rebuilds from scratch: the
+    old state is deleted and the whole table is folded again as batch
+    0."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
     root = os.path.join(warehouse_root(), f"{name}_{tag}")
     meta_path = os.path.join(root, "meta.json")
@@ -64,15 +65,7 @@ def _ensure_stream_state(
         if os.path.exists(root):
             shutil.rmtree(root)
         os.makedirs(root, exist_ok=True)
-        schema = load_table(spark, sf_dir, table).schema
-        # glob, not a bare file path: the file streaming source requires
-        # a directory or glob (basePath must be a directory)
-        run_pass(
-            os.path.join(sf_dir, f"{table}.parque[t]"),
-            schema,
-            state,
-            os.path.join(root, "ck"),
-        )
+        build(load_table(spark, sf_dir, table), state)
         with open(meta_path, "w") as f:
             json.dump(want, f)
     return state
@@ -80,25 +73,22 @@ def _ensure_stream_state(
 
 @register("bigram_lm_scores_served", oracle=ORACLES["bigram_lm_doc_scores"])
 def bigram_lm_scores_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM quality scores served from the INCREMENTALLY
-    MAINTAINED count state (streaming/lm.py) instead of retraining
-    in-query: the maintenance stream has folded the corpus into
-    per-batch unigram/bigram partials; serving merges them (two
+    """Bigram-LM quality scores served from the PERSISTED count state
+    (streaming/lm.py) instead of retraining in-query: the corpus is
+    folded once per fingerprint into batch-0 unigram/bigram partials; serving merges them (two
     vocabulary-sized groupBy-SUMs) and scores every document with the
     identical smoothed arithmetic. Same oracle as
-    ``bigram_lm_doc_scores`` — incremental counts summed over batches
-    MUST equal the one-shot batch counts. ``bigram_lm_doc_scores``
+    ``bigram_lm_doc_scores`` — counts summed over batch partials MUST
+    equal the one-shot batch counts. ``bigram_lm_doc_scores``
     stays registered as the train-path measurement."""
     from mle_proj_datapipeline_spark.streaming import lm
 
-    state = _ensure_stream_state(
+    state = _ensure_count_state(
         spark,
         sf_dir,
         "documents",
         "lm_counts",
-        lambda src, schema, st, ck: lm.incremental_lm_counts(
-            spark, src, schema, st, ck
-        ),
+        lambda df, st: lm.merge_batch_counts(df, 0, st),
     )
     uni, big = lm.served_counts(spark, state)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -107,9 +97,9 @@ def bigram_lm_scores_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("cm_heavy_hitters_served", oracle=ORACLES["cm_sketch_heavy_hitters"])
 def cm_heavy_hitters_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min heavy-hitter estimates served from the INCREMENTALLY
-    MAINTAINED sketch (streaming/sketch.py): the maintenance stream has
-    committed per-batch d×w cell partials; serving merges them (one
+    """Count-Min heavy-hitter estimates served from the PERSISTED
+    sketch (streaming/sketch.py): orders are folded once per
+    fingerprint into batch-0 d×w cell partials; serving merges them (one
     bounded groupBy-SUM) and answers the top-10 point queries against
     the maintained sketch. The exact counts ride along from one scan of
     orders — they are part of the output contract (estimate vs truth) —
@@ -119,14 +109,12 @@ def cm_heavy_hitters_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mle_proj_datapipeline_spark.operators import sketch
     from mle_proj_datapipeline_spark.streaming import sketch as stream_sketch
 
-    state = _ensure_stream_state(
+    state = _ensure_count_state(
         spark,
         sf_dir,
         "orders",
         "cm_cells",
-        lambda src, schema, st, ck: stream_sketch.incremental_cm_cells(
-            spark, src, schema, st, ck, "o_custkey"
-        ),
+        lambda df, st: stream_sketch.merge_batch_cells(df, 0, st, "o_custkey"),
     )
     cells = stream_sketch.served_cells(spark, state)
     o = load_table(spark, sf_dir, "orders")

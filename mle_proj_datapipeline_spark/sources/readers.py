@@ -159,11 +159,34 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     df = spark.read.parquet(*paths)
     if state is not None:
         with _schemas_lock:
+            # Evict before inserting, so even a reader that does not
+            # take the lock never sees more than _SCHEMA_MEMORY_SIZE.
+            if key not in _schemas:
+                while len(_schemas) >= _SCHEMA_MEMORY_SIZE:
+                    _schemas.popitem(last=False)
             _schemas[key] = (state, df.schema)
             _schemas.move_to_end(key)
-            while len(_schemas) > _SCHEMA_MEMORY_SIZE:
-                _schemas.popitem(last=False)
     return df
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame of driver-held ``rows`` (tuples in the field order of
+    the DDL ``schema``), shipped to the JVM as one Arrow table.
+    ``createDataFrame(list)`` pickles the rows into a PythonRDD, so
+    every job over its frame starts Python workers; the Arrow table
+    lands as a plain JVM collection. The engine's one
+    ``createDataFrame`` call."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def footer_stats(

@@ -36,7 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from mle_proj_datapipeline_spark.sources.readers import read_parquet
+from mle_proj_datapipeline_spark.sources.readers import local_frame, read_parquet
 from mle_proj_datapipeline_spark.sources.snapshots import (
     delete_dir,
     expire,
@@ -116,7 +116,7 @@ def served_state(
         frames.append(base.select(*cols))
     if not frames:
         if empty_schema is not None:
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         raise FileNotFoundError(
             f"no streaming state under {partials_dir} (no partials, no "
             "compact snapshot) — run the maintenance pass first"

@@ -14,6 +14,14 @@ corpus: counts stay mergeable forever, vocabulary size |V| is a
 count(*) over the served unigram relation, and any document set can be
 scored against the model as of ANY batch — the quality gate keeps
 re-scoring with fresher statistics at zero retraining cost.
+
+plans/served_queries.py writes the partials: it folds the whole
+documents table as batch 0 with one call to ``merge_batch_counts`` and
+rebuilds from scratch when the table's files change.
+``incremental_lm_counts`` (an AvailableNow stream, one partial per
+micro-batch over new files) has no package caller; it stays only
+because the benchmark's tracing (perfbench/tracing.py) wraps it by
+name, and goes with that span.
 """
 
 from __future__ import annotations
@@ -30,7 +38,9 @@ def _tok(df: DataFrame) -> DataFrame:
 
 
 def merge_batch_counts(batch_df: DataFrame, batch_id: int, state_root: str) -> None:
-    """foreachBatch body: commit this batch's unigram/bigram partials."""
+    """Commit this batch's unigram/bigram partials: the foreachBatch
+    body of ``incremental_lm_counts``, and the served build's one
+    batch fold."""
     tok = _tok(batch_df)
     uni = (
         tok.select(F.explode("t").alias("term"))

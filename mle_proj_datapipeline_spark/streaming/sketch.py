@@ -1,36 +1,39 @@
-"""Incremental Count-Min sketch maintenance.
+"""Count-Min sketch state kept as mergeable per-batch partials.
 
 The batch twin is plans/rollup_queries.cm_sketch_heavy_hitters
 (oracle-gated); the sketch core is operators/sketch.py. Because cells
-merge by plain SUM, the streaming form is just: each micro-batch commits
-its own partial cells under a batch_id partition (idempotent on replay —
-a retried batch dynamically overwrites ITS OWN partition only), and the
+merge by plain SUM, the state is just: each batch commits its own
+partial cells under a batch_id partition (idempotent on replay — a
+retried batch dynamically overwrites ITS OWN partition only), and the
 served sketch is ``groupBy(j, bucket).sum`` over the partials. No state
 store is needed: the cells directory IS the state. ``compact_cells``
 folds history into a committed watermarked base snapshot
 (streaming/compaction.py — atomic, crash-safe), bounding state at
 O(d×w) + live deltas instead of batches × d × w.
 
-tests/test_streaming_medallion.py proves stream==batch: cells maintained
-over two file waves equal cm_cells over the union, and the heavy-hitter
-estimates served from the maintained sketch equal the batch query's.
+plans/served_queries.py writes the partials: it folds the whole orders
+table as batch 0 with one call to ``merge_batch_cells`` and rebuilds
+from scratch when the table's files change.
+
+tests/test_streaming.py proves partials==batch: cells folded from two
+batches equal cm_cells over their union, and the heavy-hitter
+estimates served from the folded sketch equal the batch query's.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from mle_proj_datapipeline_spark.operators import sketch
-from mle_proj_datapipeline_spark.streaming.weekly import file_stream
 
 
 def merge_batch_cells(
     batch_df: DataFrame, batch_id: int, cells_dir: str, key_col: str
 ) -> None:
-    """foreachBatch body: fold the batch's rows into partial CM cells
-    and commit them under a batch_id partition."""
+    """Fold the batch's rows into partial CM cells and commit them
+    under a batch_id partition (a retried batch overwrites only its
+    own partition)."""
     (
         sketch.cm_cells(batch_df, key_col)
         .withColumn("batch_id", F.lit(int(batch_id)))
@@ -39,38 +42,6 @@ def merge_batch_cells(
         .partitionBy("batch_id")
         .parquet(cells_dir)
     )
-
-
-def incremental_cm_cells(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    cells_dir: str,
-    checkpoint_dir: str,
-    key_col: str,
-    timeout_s: int = 120,
-) -> None:
-    """One AvailableNow maintenance pass: new files → their partial
-    cells, exactly once per file (checkpointed source + idempotent batch
-    commits). Raises on timeout instead of leaving a silently-partial
-    sketch; completed batches are checkpointed, so the next pass
-    resumes exactly where this one stopped."""
-    q = (
-        file_stream(spark, source_dir, schema)
-        .writeStream.foreachBatch(
-            lambda b, i: merge_batch_cells(b, i, cells_dir, key_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"CM-sketch maintenance pass over {source_dir} exceeded "
-            f"{timeout_s}s; stopped — completed batches are checkpointed, "
-            "re-run to resume"
-        )
 
 
 def served_cells(spark: SparkSession, cells_dir: str) -> DataFrame:

@@ -41,19 +41,20 @@ COLLECT_ALLOWED = {
     "operators/ann_ivf.py",  # trained/pinned codebook collect (k·dim)
     "streaming/gold.py",  # partition-value listings
     "operators/bpe.py",  # per-step merge rule argmax (1 row, driver-held)
-    "operators/cc_local.py",  # gated small-graph union-find (edge-count gate)
+    "operators/cc_local.py",  # gated small-graph union-find + PageRank (edge-count gate)
     "operators/linalg.py",  # d²-bounded spectral solve (declared-dim gate)
 }
 
 
 def test_collect_sites_are_allowlisted():
-    """.collect()/.toPandas() must not appear in data paths — only in
-    the known scalar/dictionary sites — and every allowlisted file must
-    still hold one, so the list cannot outlive the sites it names."""
+    """.collect()/.toPandas()/.toArrow() must not appear in data paths —
+    only in the known scalar/dictionary sites — and every allowlisted
+    file must still hold one, so the list cannot outlive the sites it
+    names."""
     found = {
         name
         for name, text in _sources().items()
-        if ".collect()" in text or ".toPandas()" in text
+        if any(f".{m}()" in text for m in ("collect", "toPandas", "toArrow"))
     }
     assert found == COLLECT_ALLOWED
 

@@ -600,17 +600,21 @@ def test_golden_records_no_block_self_join(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_pagerank_symmetric_arm_identical_and_leaner(spark):
+def test_pagerank_symmetric_arm_identical_and_leaner(spark, monkeypatch):
     """r12 optimization: on a symmetric edge list (both orientations
     present) the per-round teleport left-join back onto the node frame
     is an identity, so ``symmetric=True`` drops it — ranks must be
     bit-identical to the default arm, and the full iteration plan (via
     the identity checkpointer) must carry exactly one join per round
     (edges x ranks) plus the one-time degree join, with no left joins
-    at all."""
+    at all. The driver arm's gate is set to 0 so the distributed
+    rounds run."""
     import pyspark.sql.functions as F
 
+    from mle_proj_datapipeline_spark.operators import cc_local
     from mle_proj_datapipeline_spark.operators.graph import pagerank
+
+    monkeypatch.setattr(cc_local, "PAGERANK_DRIVER_MAX_EDGES", 0)
 
     # symmetric 4-node graph with unequal degrees (star + chord)
     und = [(1, 2), (1, 3), (1, 4), (2, 3)]

@@ -577,6 +577,51 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         assert abs(got[v] - r[idx[v]]) < 1e-12, v
 
 
+PR_EDGES = st.lists(
+    st.tuples(st.integers(0, 7), st.integers(0, 7)), min_size=0, max_size=24
+)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(edges=PR_EDGES, duplicated=st.booleans())
+def test_pagerank_driver_arm_matches_distributed(spark, monkeypatch, edges, duplicated):
+    """Within its edge gate the symmetric arm solves on the driver
+    (operators/cc_local.local_pagerank); its ranks must equal the
+    distributed rounds (gate 0) within 1e-12 on symmetric edge lists,
+    with and without duplicate rows."""
+    from mle_proj_datapipeline_spark.operators import cc_local
+    from mle_proj_datapipeline_spark.operators.graph import pagerank
+
+    edges = edges + [(b, a) for a, b in edges]
+    if duplicated:
+        edges = edges + edges[: len(edges) // 2]
+    df = spark.createDataFrame(edges, "src INT, dst INT")
+
+    def ranks(gate):
+        with monkeypatch.context() as m:
+            m.setattr(cc_local, "PAGERANK_DRIVER_MAX_EDGES", gate)
+            out = pagerank(df, iterations=4, validate=False, symmetric=True)
+            return {r["node"]: r["r"] for r in out.collect()}
+
+    drv, dist = ranks(1000), ranks(0)
+    srcs = {a for a, _ in edges}
+    assert set(drv) == set(dist) == srcs
+    for v in srcs:
+        assert abs(drv[v] - dist[v]) < 1e-12, v
+
+
+def test_pagerank_driver_arm_rejects_asymmetric_edges(spark):
+    """A list declared symmetric whose destination 3 is not a source
+    raises on the driver arm instead of leaking rank mass."""
+    import pytest
+
+    from mle_proj_datapipeline_spark.operators.graph import pagerank
+
+    df = spark.createDataFrame([(1, 2), (2, 1), (2, 3)], "src INT, dst INT")
+    with pytest.raises(ValueError, match="not symmetric"):
+        pagerank(df, iterations=2, validate=False, symmetric=True)
+
+
 def test_pca_power_converges_on_gapped_spectrum(spark):
     """On data with a dominant direction (large spectral gap), 8 power
     iterations from the uniform start must align with numpy's exact top

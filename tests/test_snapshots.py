@@ -202,3 +202,33 @@ def test_pagerank_default_cuts_stay_lazy(spark):
     n_read, rows = _jobs(spark, "pagerank:read", ranks.collect)
     assert (n_call, n_read) == (23, 1)
     assert len(rows) == n
+
+
+def test_pagerank_symmetric_gate_adds_no_job(spark, monkeypatch):
+    """The symmetric arm reads |E| off the degree-table action it takes
+    anyway. On a symmetric 7-node cycle (14 edges, 4 rounds) a gate one
+    below |E| runs the distributed call in 12 jobs plus 1 to read the
+    ranks, the same as without a driver arm; a gate of |E| solves on
+    the driver in 5 jobs and reads a local frame with none."""
+    from mle_proj_datapipeline_spark.operators import cc_local
+    from mle_proj_datapipeline_spark.operators.graph import pagerank
+    from tests.test_sources import _jobs
+
+    n = 7
+    cyc = [(i, (i + 1) % n) for i in range(n)]
+    edges = spark.createDataFrame(cyc + [(b, a) for a, b in cyc], "src INT, dst INT")
+    counts, ranks = {}, {}
+    for gate in (2 * n - 1, 2 * n):
+        monkeypatch.setattr(cc_local, "PAGERANK_DRIVER_MAX_EDGES", gate)
+        n_call, out = _jobs(
+            spark,
+            f"pagerank-sym:call:{gate}",
+            lambda: pagerank(edges, iterations=4, validate=False, symmetric=True),
+        )
+        n_read, rows = _jobs(spark, f"pagerank-sym:read:{gate}", out.collect)
+        counts[gate] = (n_call, n_read)
+        ranks[gate] = {r["node"]: r["r"] for r in rows}
+    assert counts == {2 * n - 1: (12, 1), 2 * n: (5, 0)}
+    assert ranks[2 * n - 1].keys() == ranks[2 * n].keys() == set(range(n))
+    for v in range(n):
+        assert abs(ranks[2 * n - 1][v] - ranks[2 * n][v]) < 1e-12

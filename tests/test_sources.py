@@ -331,3 +331,81 @@ def test_parquet_reads_go_through_read_parquet():
         if "spark.read.parquet(" in p.read_text()
     }
     assert found == {"sources/readers.py", "plans/medallion.py"}
+
+
+def _driver_built_frames(spark, tmp_path):
+    """Every frame the engine builds from driver-held rows, by name."""
+    from mle_proj_datapipeline_spark.operators.bpe import bpe_learn
+    from mle_proj_datapipeline_spark.operators.cc_local import union_find_labels
+    from mle_proj_datapipeline_spark.operators.graph import pagerank
+    from mle_proj_datapipeline_spark.operators.kmeans import kmeans_fit
+    from mle_proj_datapipeline_spark.operators.linalg import top_eigvec
+    from mle_proj_datapipeline_spark.streaming.compaction import served_state
+
+    cov = spark.createDataFrame(
+        [(0, 0, 2.0), (0, 1, 0.5), (1, 0, 0.5), (1, 1, 1.0)], "i INT, j INT, c DOUBLE"
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 2)]) for i in range(12)],
+        "vec_id INT, embedding ARRAY<FLOAT>",
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "u BIGINT, v BIGINT")
+    cycle = spark.createDataFrame([(i, (i + 1) % 5) for i in range(5)], "src INT, dst INT")
+    docs = spark.createDataFrame([("abab ab",), ("abc abc",)], "text STRING")
+    return {
+        "top_eigvec": lambda: top_eigvec(cov, 2),
+        "top_eigvec_empty": lambda: top_eigvec(cov.filter("false"), 2),
+        "kmeans_centroids": lambda: kmeans_fit(
+            vecs, init_centroids=[[0.0, 0.0], [2.0, 1.0]]
+        )[1],
+        "union_find_labels": lambda: union_find_labels(pairs),
+        "pagerank_driver_arm": lambda: pagerank(cycle, iterations=3),
+        "bpe_merges": lambda: bpe_learn(docs, "text", n_merges=2),
+        "served_state_empty": lambda: served_state(
+            spark, str(tmp_path / "none"), ["k"], "v", empty_schema="k STRING, v BIGINT"
+        ),
+    }
+
+
+def test_driver_built_frames_start_no_python_worker(spark, tmp_path):
+    """Frames built from driver-held rows go through
+    ``readers.local_frame`` (Arrow), so no job over them runs a
+    PythonRDD: ``createDataFrame(list)`` would pickle the rows and
+    start Python workers for a few dozen rows."""
+    built = {}
+    for name, build in _driver_built_frames(spark, tmp_path).items():
+        df = build()
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        built[name] = ("PythonRDD" in lineage, len(df.collect()))
+    assert {k: v[0] for k, v in built.items()} == dict.fromkeys(built, False)
+    assert built["top_eigvec"][1] == 2 and built["top_eigvec_empty"][1] == 0
+    assert built["union_find_labels"][1] == 5 and built["pagerank_driver_arm"][1] == 5
+
+
+def test_create_dataframe_only_in_local_frame():
+    """``createDataFrame`` is called in the package only inside
+    ``readers.local_frame``, the Arrow path for driver-held rows."""
+    import ast
+    import pathlib
+
+    import mle_proj_datapipeline_spark as pkg
+
+    def owners(node, owner):
+        """Enclosing function name of every createDataFrame call."""
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "createDataFrame"
+            ):
+                yield owner
+            inner = child.name if isinstance(child, ast.FunctionDef) else owner
+            yield from owners(child, inner)
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = {
+        (str(p.relative_to(root)), owner)
+        for p in root.rglob("*.py")
+        for owner in owners(ast.parse(p.read_text()), "<module>")
+    }
+    assert found == {("sources/readers.py", "local_frame")}

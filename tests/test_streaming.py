@@ -107,12 +107,11 @@ def test_pii_scrub_stream_equals_batch(spark, tmp_path_factory):
 
 
 def test_streaming_cm_sketch_equals_batch(spark, tmp_path_factory):
-    """Streaming CM-sketch twin: orders arriving in two waves through
-    the incremental foreachBatch maintenance must yield EXACTLY the
-    cells of cm_cells over the union (mergeability, tested not
-    asserted), heavy-hitter estimates served from the maintained sketch
-    must equal the oracle-gated batch query's, and a replayed pass with
-    no new files must not change the cells (idempotent batch commits)."""
+    """CM-sketch partials: orders folded as two batches must yield
+    EXACTLY the cells of cm_cells over the union (mergeability, tested
+    not asserted), heavy-hitter estimates served from the folded sketch
+    must equal the oracle-gated batch query's, and a replayed batch
+    must not change the cells (idempotent batch commits)."""
     import pyspark.sql.functions as F
 
     from mle_proj_datapipeline_spark.operators import sketch as SK
@@ -125,23 +124,19 @@ def test_streaming_cm_sketch_equals_batch(spark, tmp_path_factory):
     sf = "/root/testdata/sf0.001"
     orders = load_table(spark, sf, "orders")
 
-    land = str(tmp_path_factory.mktemp("cm_land"))
     cells_dir = str(tmp_path_factory.mktemp("cm_cells"))
-    ck = str(tmp_path_factory.mktemp("cm_ck"))
 
     cut = orders.agg(F.expr("percentile(o_orderkey, 0.5)")).collect()[0][0]
-    orders.filter(F.col("o_orderkey") <= cut).write.mode("append").parquet(land)
-    schema = spark.read.parquet(land).schema
+    wave2 = orders.filter(F.col("o_orderkey") > cut)
 
     def cells_rows(df):
         return sorted((r["j"], r["bucket"], r["cell_n"]) for r in df.collect())
 
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
+    SS.merge_batch_cells(orders.filter(F.col("o_orderkey") <= cut), 0, cells_dir, "o_custkey")
     wave1_cells = cells_rows(SS.served_cells(spark, cells_dir))
     assert wave1_cells
 
-    orders.filter(F.col("o_orderkey") > cut).write.mode("append").parquet(land)
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
+    SS.merge_batch_cells(wave2, 1, cells_dir, "o_custkey")
     got = cells_rows(SS.served_cells(spark, cells_dir))
 
     # Mergeability: maintained cells == cells of the union, computed flat.
@@ -165,8 +160,8 @@ def test_streaming_cm_sketch_equals_batch(spark, tmp_path_factory):
     }
     assert served == batch and len(served) == 10
 
-    # Replay with no new files: cells unchanged.
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
+    # Replay of batch 1: it overwrites its own partition, cells unchanged.
+    SS.merge_batch_cells(wave2, 1, cells_dir, "o_custkey")
     assert cells_rows(SS.served_cells(spark, cells_dir)) == got
 
 
@@ -265,40 +260,83 @@ def test_served_queries_pin_state_and_rebuild_on_source_change(
     spark, tmp_path_factory, monkeypatch
 ):
     """The serve-path queries (plans/served_queries.py) must build their
-    streaming state ONCE per corpus fingerprint: a second call serves
-    from the committed state without touching the maintenance stream,
-    and a corrupt/mismatched meta triggers a full rebuild (state + file
-    log wiped together)."""
+    count state ONCE per corpus fingerprint: a second call serves from
+    the committed state without folding the source again, and a
+    corrupt/mismatched meta triggers a full rebuild from scratch (the
+    old state is wiped first)."""
     import json
     import os
 
     from mle_proj_datapipeline_spark.plans import served_queries as SQ
+    from mle_proj_datapipeline_spark.streaming import lm as LM
 
     wh = str(tmp_path_factory.mktemp("served_wh"))
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", wh)
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
 
     calls = []
 
-    def run_pass(src, schema, state, ck):
-        calls.append(src)
-        from mle_proj_datapipeline_spark.streaming import lm as LM
+    def build(df, state):
+        calls.append(os.path.exists(state))
+        LM.merge_batch_counts(df, 0, state)
 
-        LM.incremental_lm_counts(spark, src, schema, state, ck)
-
-    s1 = SQ._ensure_stream_state(spark, sf, "documents", "lm_counts", run_pass)
-    assert len(calls) == 1 and os.path.isdir(s1)
-    # fresh fingerprint: second call is a pure serve, no stream run
-    s2 = SQ._ensure_stream_state(spark, sf, "documents", "lm_counts", run_pass)
+    s1 = SQ._ensure_count_state(spark, sf, "documents", "lm_counts", build)
+    assert calls == [False] and os.path.isdir(s1)
+    # fresh fingerprint: second call is a pure serve, no fold
+    s2 = SQ._ensure_count_state(spark, sf, "documents", "lm_counts", build)
     assert s2 == s1 and len(calls) == 1
     # corrupt meta == unknown provenance -> rebuild from scratch
     meta = os.path.join(os.path.dirname(s1), "meta.json")
     with open(meta, "w") as f:
         json.dump({"source": "stale"}, f)
-    SQ._ensure_stream_state(spark, sf, "documents", "lm_counts", run_pass)
-    assert len(calls) == 2
+    SQ._ensure_count_state(spark, sf, "documents", "lm_counts", build)
+    assert calls == [False, False]
     with open(meta) as f:
         assert json.load(f)["source"] != "stale"
+    # one fold = one batch partial per relation
+    parts = [d for d in os.listdir(os.path.join(s1, "uni")) if d.startswith("batch_id=")]
+    assert parts == ["batch_id=0"]
+
+
+def test_served_build_starts_no_stream(spark, tmp_path_factory, monkeypatch):
+    """A cold served build folds its source table in one batch write:
+    no streaming query starts and no checkpoint directory is left."""
+    import os
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from mle_proj_datapipeline_spark.plans import served_queries as SQ
+
+    class Starts(StreamingQueryListener):
+        def __init__(self):
+            self.started = []
+
+        def onQueryStarted(self, event):
+            self.started.append(event.id)
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    wh = str(tmp_path_factory.mktemp("served_nostream"))
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", wh)
+    sf = SF_SMOKE
+    listener = Starts()
+    spark.streams.addListener(listener)
+    try:
+        SQ.bigram_lm_scores_served(spark, sf).count()
+        SQ.cm_heavy_hitters_served(spark, sf).count()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.started == []
+    assert not spark.streams.active
+    dirs = {d for root, ds, _ in os.walk(wh) for d in ds}
+    assert "ck" not in dirs and {"state", "batch_id=0"} <= dirs
 
 
 def test_cm_compaction_preserves_serving_and_watermark(spark, tmp_path_factory):
@@ -315,19 +353,15 @@ def test_cm_compaction_preserves_serving_and_watermark(spark, tmp_path_factory):
 
     sf = "/root/testdata/sf0.001"
     orders = load_table(spark, sf, "orders")
-    land = str(tmp_path_factory.mktemp("cmc_land"))
     cells_dir = str(tmp_path_factory.mktemp("cmc_cells")) + "/cells"
-    ck = str(tmp_path_factory.mktemp("cmc_ck"))
 
     def rows(df):
         return sorted((r["j"], r["bucket"], r["cell_n"]) for r in df.collect())
 
     cut = orders.agg(F.expr("percentile(o_orderkey, 0.5)")).collect()[0][0]
     wave1 = orders.filter(F.col("o_orderkey") <= cut)
-    wave1.write.mode("append").parquet(land)
-    schema = spark.read.parquet(land).schema
 
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
+    SS.merge_batch_cells(wave1, 0, cells_dir, "o_custkey")
     want1 = rows(SK.cm_cells(wave1, "o_custkey"))
     assert rows(SS.served_cells(spark, cells_dir)) == want1
 
@@ -347,8 +381,7 @@ def test_cm_compaction_preserves_serving_and_watermark(spark, tmp_path_factory):
     assert rows(SS.served_cells(spark, cells_dir)) == want1
 
     # new batches land ABOVE the watermark and merge with the base
-    orders.filter(F.col("o_orderkey") > cut).write.mode("append").parquet(land)
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
+    SS.merge_batch_cells(orders.filter(F.col("o_orderkey") > cut), 1, cells_dir, "o_custkey")
     want_all = rows(SK.cm_cells(orders, "o_custkey"))
     assert rows(SS.served_cells(spark, cells_dir)) == want_all
 

@@ -77,18 +77,15 @@ def test_cm_sketch_serve_equals_batch_on_mutated_orders(
     from mle_proj_datapipeline_spark.streaming import sketch as SS
 
     orders = spark.read.parquet(f"{fuzz_dir}/orders.parquet")
-    land = str(tmp_path_factory.mktemp("fcm_land"))
     cells_dir = str(tmp_path_factory.mktemp("fcm_state")) + "/cells"
-    ck = str(tmp_path_factory.mktemp("fcm_ck"))
+    odd = orders.filter(F.col("o_orderkey") % 2 == 1)
 
     def cells_rows(df):
         return sorted(
             (r["j"], r["bucket"], r["cell_n"]) for r in df.collect()
         )
 
-    orders.filter(F.col("o_orderkey") % 2 == 0).write.mode("append").parquet(land)
-    schema = spark.read.parquet(land).schema
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
+    SS.merge_batch_cells(orders.filter(F.col("o_orderkey") % 2 == 0), 0, cells_dir, "o_custkey")
 
     # crash mid-compaction: the fold computes but the snapshot commit
     # never happens — the previous (empty) watermark must keep serving
@@ -103,17 +100,13 @@ def test_cm_sketch_serve_equals_batch_on_mutated_orders(
     finally:
         C.write_snapshot = real_write
 
-    orders.filter(F.col("o_orderkey") % 2 == 1).write.mode("append").parquet(land)
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
+    SS.merge_batch_cells(odd, 1, cells_dir, "o_custkey")
     want = cells_rows(SK.cm_cells(orders, "o_custkey"))
     assert cells_rows(SS.served_cells(spark, cells_dir)) == want
 
-    # the real fold after the crash, plus GC and a no-new-files replay:
-    # serving never changes
+    # the real fold after the crash, plus GC: serving never changes
     SS.compact_cells(spark, cells_dir)
     SS.gc_cells(spark, cells_dir)
-    assert cells_rows(SS.served_cells(spark, cells_dir)) == want
-    SS.incremental_cm_cells(spark, land, schema, cells_dir, ck, "o_custkey")
     assert cells_rows(SS.served_cells(spark, cells_dir)) == want
 
 
