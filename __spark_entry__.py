@@ -8,6 +8,7 @@
 from __future__ import annotations
 
 import functools
+import math
 import os
 import sys
 from collections.abc import Callable
@@ -128,9 +129,11 @@ def _coverage_order(names: list[str]) -> list[str]:
     def _blame_line_times(path: str) -> list[float]:
         """Per-line last-change committer times for ``path`` (git blame,
         first-parent), used by the per-QUERY tie-break clock below.
-        Uncommitted working-tree lines blame to the zero commit, whose
-        committer-time git reports as "now" — exactly right (an edited
-        query is maximally unverified).  One subprocess per plan module,
+        Uncommitted working-tree lines blame to the all-zero sha, whose
+        committer-time git reports as "now" — a moving clock, so two
+        uncached rotations could disagree; they read as ``math.inf``
+        instead (an edited query is the most recently changed, and
+        maximally unverified).  One subprocess per plan module,
         cached; [] on any failure (tie-break then falls back to the
         module clock)."""
         import subprocess
@@ -178,7 +181,9 @@ def _coverage_order(names: list[str]) -> list[str]:
                     cur_sha = parts[0]
                     cur_final = int(parts[2])
                 elif line.startswith("committer-time ") and cur_sha:
-                    sha_time[cur_sha] = float(parts[1])
+                    sha_time[cur_sha] = (
+                        math.inf if cur_sha == "0" * 40 else float(parts[1])
+                    )
                 elif line.startswith("\t") and cur_final:
                     while len(times) < cur_final:
                         times.append(0.0)

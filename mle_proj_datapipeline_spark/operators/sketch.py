@@ -5,7 +5,8 @@ cross-engine H31 hash family (operators/hashing.h31) — not opaque bits, so
 it hash-verifies against a SQL oracle, merges by plain SUM (map-side
 combinable, batch or streaming), and point estimates are a broadcast
 join + MIN. Used by plans/rollup_queries.cm_sketch_heavy_hitters
-(batch, oracle-gated) and streaming/sketch.py (incremental maintenance).
+(batch, oracle-gated) and plans/served_queries.cm_heavy_hitters_served
+(cells pinned as a fingerprint-keyed snapshot).
 
 At 100 TB: raw rows collapse to per-key counts first (one partial-agg
 shuffle — the explode factor then applies to |keys|, not |rows|), the

@@ -345,37 +345,24 @@ def ensure_cooccurrence_edges(
     pair and w = number of orders whose capped set contains both — the
     one relation every family member derives from: pagerank drops w,
     triangles/rules filter src < dst (w IS the pair support). Built
-    once per (corpus fingerprint, cap) through the snapshot layer's
-    atomic commit; steady state is one manifest read + a parquet scan
-    of the |E|-sized snapshot, no lineitem pass. Same pinning
-    discipline as the LSH/IVF indexes and the served count models
-    (plans/served_queries.py)."""
-    import os
-
+    once per (corpus fingerprint, cap) by ``snapshots.pinned_snapshot``;
+    steady state is one manifest listing + a parquet scan of the
+    |E|-sized snapshot, no lineitem pass. The served count models
+    (plans/served_queries.py) pin the same way."""
     from mle_proj_datapipeline_spark.sources.catalog import source_fingerprint
-    from mle_proj_datapipeline_spark.sources.metrics import warehouse_root
-    from mle_proj_datapipeline_spark.sources.snapshots import (
-        expire,
-        history,
-        read_snapshot,
-        write_snapshot,
-    )
+    from mle_proj_datapipeline_spark.sources.metrics import table_root
+    from mle_proj_datapipeline_spark.sources.snapshots import pinned_snapshot
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    root = os.path.join(warehouse_root(), f"{name}_{tag}")
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", val_col)
+        return (
+            cooccurrence_pairs(li, "l_orderkey", val_col, directed=False)
+            .groupBy("src", "dst")
+            .agg(F.count(F.lit(1)).alias("w"))
+        )
+
     want = f"{source_fingerprint(sf_dir, 'lineitem')}|cap={MAX_COOCCUR_SET}"
-    snaps = history(spark, root)
-    if snaps and (snaps[-1].get("meta") or {}).get("source") == want:
-        return read_snapshot(spark, root)
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", val_col)
-    edges = (
-        cooccurrence_pairs(li, "l_orderkey", val_col, directed=False)
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    write_snapshot(edges, root, mode="overwrite", meta={"source": want})
-    expire(spark, root, keep_last=2)
-    return read_snapshot(spark, root)
+    return pinned_snapshot(spark, table_root(name, sf_dir), want, build)
 
 
 def ensure_pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -386,45 +373,34 @@ def ensure_pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is one manifest read + a |V|-row parquet scan (r13, VERDICT
     r12 item 6: the serve path was re-running all five iterations per
     invocation, ~3 s warm for an artifact that never changes between
-    corpus versions). Same pinning discipline as the LSH/IVF indexes
-    and the bigram count state; any input or hyper-parameter change
-    misses the fingerprint and retrains through the edge snapshot."""
-    import os
-
+    corpus versions). Pinned by ``snapshots.pinned_snapshot``, like the
+    edge snapshot and the served count models; any input or
+    hyper-parameter change misses the key and retrains through the
+    edge snapshot."""
     from mle_proj_datapipeline_spark.operators.graph import pagerank
     from mle_proj_datapipeline_spark.sources.catalog import source_fingerprint
-    from mle_proj_datapipeline_spark.sources.metrics import warehouse_root
-    from mle_proj_datapipeline_spark.sources.snapshots import (
-        expire,
-        history,
-        read_snapshot,
-        write_snapshot,
-    )
+    from mle_proj_datapipeline_spark.sources.metrics import table_root
+    from mle_proj_datapipeline_spark.sources.snapshots import pinned_snapshot
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    root = os.path.join(warehouse_root(), f"pagerank_supp_{tag}")
+    def build() -> DataFrame:
+        edges = ensure_cooccurrence_edges(spark, sf_dir, "l_suppkey", "cooccur_supp")
+        # symmetric (both orientations persisted) + distinct by construction
+        # (the snapshot aggregates on (src, dst)): the train pass skips the
+        # defensive |E| dedup shuffle and the per-round node-frame join (r12).
+        return pagerank(
+            edges,
+            iterations=_PR_ITERS,
+            damping=_PR_DAMPING,
+            validate=False,
+            symmetric=True,
+            assume_distinct=True,
+        )
+
     want = (
         f"{source_fingerprint(sf_dir, 'lineitem')}|cap={MAX_COOCCUR_SET}"
         f"|it={_PR_ITERS}|d={_PR_DAMPING}"
     )
-    snaps = history(spark, root)
-    if snaps and (snaps[-1].get("meta") or {}).get("source") == want:
-        return read_snapshot(spark, root)
-    edges = ensure_cooccurrence_edges(spark, sf_dir, "l_suppkey", "cooccur_supp")
-    # symmetric (both orientations persisted) + distinct by construction
-    # (the snapshot aggregates on (src, dst)): the train pass skips the
-    # defensive |E| dedup shuffle and the per-round node-frame join (r12).
-    ranks = pagerank(
-        edges,
-        iterations=_PR_ITERS,
-        damping=_PR_DAMPING,
-        validate=False,
-        symmetric=True,
-        assume_distinct=True,
-    )
-    write_snapshot(ranks, root, mode="overwrite", meta={"source": want})
-    expire(spark, root, keep_last=2)
-    return read_snapshot(spark, root)
+    return pinned_snapshot(spark, table_root("pagerank_supp", sf_dir), want, build)
 
 
 @register("supplier_pagerank_served", oracle=_pagerank_oracle())

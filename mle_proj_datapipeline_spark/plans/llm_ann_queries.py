@@ -382,22 +382,23 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_ivf_indexed_topk", oracle=_ivf_trained_oracle())
 def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k served from a PERSISTED IVF index: ivf_index_build
-    trains the k-means codebook once and commits codebook + assignment
-    as snapshot tables; ivf_index_topk then serves queries with ZERO
-    training work (bounded codebook collect + equi-join on the
-    committed assignment). Same oracle as ann_ivf_trained_topk — the
-    persisted path must reproduce the in-query training path exactly.
-    tests/test_similarity_scale.py proves the reuse property: a second
-    query batch against the same index runs no kmeans jobs."""
-    import os
-
-    from mle_proj_datapipeline_spark.sources.metrics import warehouse_root
+    """ANN top-k through the PERSISTED IVF index layout: ivf_index_build
+    trains the k-means codebook and commits codebook + assignment as
+    snapshot tables; ivf_index_topk then answers the queries from the
+    committed pair (bounded codebook collect + equi-join on the
+    committed assignment). This query calls ivf_index_build on EVERY
+    call, so each call retrains k-means and commits two new versions;
+    the index is not pinned to its source yet (pinning needs the
+    codebook/assignment pair kept as one unit). Same oracle as
+    ann_ivf_trained_topk — the persisted path must reproduce the
+    in-query training path exactly. tests/test_similarity_scale.py
+    proves the reuse property of the layout: a second query batch
+    against the same committed index runs no kmeans jobs."""
+    from mle_proj_datapipeline_spark.sources.metrics import table_root
     from mle_proj_datapipeline_spark.sources.snapshots import expire
 
     emb = _vl.valid_embeddings(load_table(spark, sf_dir, "embeddings"))
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    root = os.path.join(warehouse_root(), f"ivf_index_{tag}")
+    root = table_root("ivf_index", sf_dir)
     _ivf.ivf_index_build(emb, root)
     expire(spark, f"{root}/codebook", keep_last=3)
     expire(spark, f"{root}/assignment", keep_last=3)
@@ -494,14 +495,11 @@ def ann_lsh_indexed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern that buys back the 2-band recall fix's per-call signature
     cost (VERDICT r4 item 5). ann_lsh_top1 stays registered as the
     build-path measurement."""
-    import os
-
-    from mle_proj_datapipeline_spark.sources.metrics import warehouse_root
+    from mle_proj_datapipeline_spark.sources.metrics import table_root
     from mle_proj_datapipeline_spark.sources.snapshots import expire
 
     emb = _vl.valid_embeddings(load_table(spark, sf_dir, "embeddings"))
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    root = os.path.join(warehouse_root(), f"lsh_index_{tag}")
+    root = table_root("lsh_index", sf_dir)
     want = {
         "bands": _vl.BANDS,
         "planes_per_band": _vl.PLANES_PER_BAND,

@@ -40,7 +40,9 @@ def warehouse_root() -> str:
     return os.path.join(os.path.dirname(pkg_dir), "spark-warehouse")
 
 
-def _table_root(name: str, sf_dir: str) -> str:
+def table_root(name: str, sf_dir: str) -> str:
+    """Warehouse directory of table ``name`` for the corpus at
+    ``sf_dir``, tagged by the corpus directory's name."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
     return os.path.join(warehouse_root(), f"{name}_{tag}")
 
@@ -64,7 +66,7 @@ def stored_metrics(spark: SparkSession, sf_dir: str, panel: DataFrame) -> DataFr
     return the READ-BACK frame — downstream lifecycle analytics run over
     the stored table, not the in-flight plan, exactly like the
     reference's Postgres write→query flow."""
-    root = _table_root("metrics_store", sf_dir)
+    root = table_root("metrics_store", sf_dir)
     write_metrics(panel, root)
     return read_metrics(spark, root)
 
@@ -77,14 +79,14 @@ def stored_grade_metrics(spark: SparkSession, sf_dir: str, panel: DataFrame) -> 
     recover the typed MapType view with ``from_json`` (SURVEY §1.2's
     JSONB → MapType mapping). Same durable write→read-back contract as
     the scalar panel."""
-    root = _table_root("grade_metrics_store", sf_dir)
+    root = table_root("grade_metrics_store", sf_dir)
     write_metrics(panel, root)
     return read_metrics(spark, root)
 
 
 def write_registry(registry: DataFrame, sf_dir: str) -> int:
     """Commit the model-registry table (one row per promoted version)."""
-    root = _table_root("model_registry", sf_dir)
+    root = table_root("model_registry", sf_dir)
     v = write_snapshot(registry, root, mode="overwrite")
     expire(registry.sparkSession, root, keep_last=KEEP_VERSIONS)
     return v
@@ -92,4 +94,4 @@ def write_registry(registry: DataFrame, sf_dir: str) -> int:
 
 def read_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest committed registry table."""
-    return read_snapshot(spark, _table_root("model_registry", sf_dir))
+    return read_snapshot(spark, table_root("model_registry", sf_dir))

@@ -73,7 +73,7 @@ def _hadoop_file_listing(path: str, spark: SparkSession | None) -> list[str]:
     """``path:size:mtime_ms`` per file under a schemed ``path``
     (recursive, sorted), through the session's Hadoop FileSystem — the
     same listing every other storage-layer operation uses (the
-    snapshots.list_subdirs pattern), so hdfs:// and s3a:// paths are
+    sources/snapshots.py pattern), so hdfs:// and s3a:// paths are
     keyed by real file state. Raises when no SparkSession is active: a
     constant listing would pin persisted state to stale sources (silent
     stale serving), strictly worse than failing."""

@@ -50,6 +50,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -187,30 +188,6 @@ def _read_text(spark: SparkSession, path: str) -> str:
         return "\n".join(lines)
     finally:
         stream.close()
-
-
-def list_subdirs(spark: SparkSession, path: str) -> list[str]:
-    """Names of the immediate child DIRECTORIES of ``path`` ([] when
-    absent), via the session's Hadoop FileSystem — never os.listdir,
-    so partitioned-state roots on hdfs://, s3a://, etc. resolve the
-    same way every other storage-layer listing here does."""
-    fs, _ = _fs(spark, path)
-    jpath = _jpath(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return sorted(
-        st.getPath().getName() for st in fs.listStatus(jpath) if st.isDirectory()
-    )
-
-
-def delete_dir(spark: SparkSession, path: str) -> bool:
-    """Recursive delete through the Hadoop FileSystem (idempotent;
-    False when the path was already absent)."""
-    fs, _ = _fs(spark, path)
-    jpath = _jpath(spark, path)
-    if not fs.exists(jpath):
-        return False
-    return bool(fs.delete(jpath, True))
 
 
 def _list(spark: SparkSession, path: str, suffix: str) -> list[str]:
@@ -370,10 +347,35 @@ def read_snapshot(
     of a version infers its schema, later reads of the same files
     (same paths, sizes and mtimes) declare it and run no job. A new
     commit lists new files, so it is inferred again."""
-    snap = _resolve(spark, root, version)
+    return _scan(spark, _resolve(spark, root, version))
+
+
+def _scan(spark: SparkSession, snap: dict) -> DataFrame:
     if not snap["files"]:
         raise ValueError(f"snapshot v{snap['version']} is empty")
     return read_parquet(spark, *snap["files"])
+
+
+def pinned_snapshot(
+    spark: SparkSession, root: str, key: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The engine's one reuse-a-committed-artifact primitive: the table
+    at ``root`` holds ``build()`` as of ``key`` (a source fingerprint
+    plus whatever else the artifact depends on).
+
+    When the latest manifest was committed under ``key``, its files are
+    read straight from the one history listing. Otherwise ``build()``
+    is committed with ``meta={"source": key}`` (atomic, like every
+    snapshot commit, so two concurrent builders never lose work or
+    serve a half-written artifact), versions beyond the last two are
+    expired, and the new commit is read. An empty frame commits one
+    schema-only file, so an empty source serves an empty artifact."""
+    snaps = history(spark, root)
+    if snaps and (snaps[-1].get("meta") or {}).get("source") == key:
+        return _scan(spark, snaps[-1])
+    write_snapshot(build(), root, mode="overwrite", meta={"source": key})
+    expire(spark, root, keep_last=2)
+    return read_snapshot(spark, root)
 
 
 def expire(spark: SparkSession, root: str, keep_last: int) -> list[int]:

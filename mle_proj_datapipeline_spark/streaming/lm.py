@@ -1,27 +1,22 @@
-"""Incremental bigram-LM count maintenance.
+"""Bigram-LM counts: the model, its serve-time scoring, and the
+incremental maintenance stream.
 
 Batch twin: plans/featurize_queries.bigram_lm_doc_scores (oracle-gated).
 The LM "model" is two count relations — unigrams (term, c1) and bigrams
-(w1, w2, c2) — and both merge by plain SUM, so the streaming form is
-the CM-sketch pattern (streaming/sketch.py): each micro-batch commits
-its partial counts under a batch_id partition (idempotent dynamic
-overwrite on replay), and the served model is a groupBy-SUM over the
-partials. Bigrams are INTRA-document, so there is no cross-batch
-boundary state.
+(w1, w2, c2), built by ``lm_counts`` — and both merge by plain SUM.
+Bigrams are INTRA-document, so counts of disjoint document sets sum to
+the counts of their union with no boundary state: vocabulary size |V|
+is a count(*) over the unigram relation, and any document set can be
+scored against the model (``score_docs``) at zero retraining cost.
 
-This is incremental tokenizer/LM-statistics training for a growing
-corpus: counts stay mergeable forever, vocabulary size |V| is a
-count(*) over the served unigram relation, and any document set can be
-scored against the model as of ANY batch — the quality gate keeps
-re-scoring with fresher statistics at zero retraining cost.
-
-plans/served_queries.py writes the partials: it folds the whole
-documents table as batch 0 with one call to ``merge_batch_counts`` and
-rebuilds from scratch when the table's files change.
-``incremental_lm_counts`` (an AvailableNow stream, one partial per
-micro-batch over new files) has no package caller; it stays only
-because the benchmark's tracing (perfbench/tracing.py) wraps it by
-name, and goes with that span.
+plans/served_queries.py pins the two relations of the whole documents
+table as fingerprint-keyed snapshots (``snapshots.pinned_snapshot``)
+and rebuilds them from scratch when the table's files change.
+``incremental_lm_counts`` (an AvailableNow stream that commits one
+``merge_batch_counts`` partial per micro-batch over new files) has no
+package caller; it stays only because the benchmark's tracing
+(perfbench/tracing.py) wraps it and ``merge_batch_counts`` by name,
+and goes with those spans.
 """
 
 from __future__ import annotations
@@ -37,11 +32,11 @@ def _tok(df: DataFrame) -> DataFrame:
     return df.select("doc_id", F.split("text", " ").alias("t"))
 
 
-def merge_batch_counts(batch_df: DataFrame, batch_id: int, state_root: str) -> None:
-    """Commit this batch's unigram/bigram partials: the foreachBatch
-    body of ``incremental_lm_counts``, and the served build's one
-    batch fold."""
-    tok = _tok(batch_df)
+def lm_counts(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The model of a document set: unigram (term, c1) and bigram
+    (w1, w2, c2) counts. Counts of disjoint document sets merge by
+    plain SUM into the counts of their union."""
+    tok = _tok(docs)
     uni = (
         tok.select(F.explode("t").alias("term"))
         .groupBy("term")
@@ -57,6 +52,14 @@ def merge_batch_counts(batch_df: DataFrame, batch_id: int, state_root: str) -> N
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c2"))
     )
+    return uni, big
+
+
+def merge_batch_counts(batch_df: DataFrame, batch_id: int, state_root: str) -> None:
+    """Commit this batch's unigram/bigram partials under a batch_id
+    partition (a replayed batch overwrites only its own partition): the
+    foreachBatch body of ``incremental_lm_counts``."""
+    uni, big = lm_counts(batch_df)
     for name, df in (("uni", uni), ("big", big)):
         (
             df.withColumn("batch_id", F.lit(int(batch_id)))
@@ -91,48 +94,6 @@ def incremental_lm_counts(
             f"LM-count maintenance pass over {source_dir} exceeded "
             f"{timeout_s}s; completed batches are checkpointed, re-run to resume"
         )
-
-
-def served_counts(spark: SparkSession, state_root: str) -> tuple[DataFrame, DataFrame]:
-    """The maintained model: merged (term, c1) and (w1, w2, c2) —
-    compact base (if any) plus the partials above its watermark."""
-    from mle_proj_datapipeline_spark.streaming.compaction import served_state
-
-    # empty_schema: a maintenance pass over an empty corpus commits no
-    # partials — the served model is then the empty vocabulary, and
-    # scoring any docs against it degrades per the smoothing contract.
-    uni = served_state(
-        spark, f"{state_root}/uni", ["term"], "c1",
-        empty_schema="term string, c1 bigint",
-    )
-    big = served_state(
-        spark, f"{state_root}/big", ["w1", "w2"], "c2",
-        empty_schema="w1 string, w2 string, c2 bigint",
-    )
-    return uni, big
-
-
-def compact_counts(spark: SparkSession, state_root: str) -> tuple[int, int]:
-    """Fold both count changelogs into committed vocabulary-sized base
-    snapshots (streaming/compaction.py — atomic, watermarked) so model
-    size is bounded by |V| / |bigram vocab|, not by stream lifetime.
-    Returns the (uni, big) snapshot versions (-1 = nothing to fold)."""
-    from mle_proj_datapipeline_spark.streaming.compaction import compact_state
-
-    return (
-        compact_state(spark, f"{state_root}/uni", ["term"], "c1"),
-        compact_state(spark, f"{state_root}/big", ["w1", "w2"], "c2"),
-    )
-
-
-def gc_counts(spark: SparkSession, state_root: str) -> tuple[list[int], list[int]]:
-    """Delete folded partial partitions of both changelogs."""
-    from mle_proj_datapipeline_spark.streaming.compaction import gc_state
-
-    return (
-        gc_state(spark, f"{state_root}/uni"),
-        gc_state(spark, f"{state_root}/big"),
-    )
 
 
 def score_docs(docs: DataFrame, uni: DataFrame, big: DataFrame) -> DataFrame:

@@ -111,16 +111,6 @@ UNREACHED_ALLOWED = {
     "sources/observe.py:ExpectationError",
     "sources/observe.py:enforce_expectations",
     "sources/observe.py:observed_write",
-    # State compaction: the benchmarked served_state reads the compacted
-    # layout these write.
-    "streaming/compaction.py:compact_state",
-    "streaming/compaction.py:gc_state",
-    "streaming/lm.py:compact_counts",
-    "streaming/lm.py:gc_counts",
-    "streaming/sketch.py:compact_cells",
-    "streaming/sketch.py:gc_cells",
-    "sources/snapshots.py:delete_dir",
-    "streaming/compaction.py:KEEP_COMPACT_VERSIONS",
     # The package version string, read by packaging tools, not by code.
     "__init__.py:__version__",
     # The table list the oracle test harness registers as DuckDB views.
@@ -198,24 +188,27 @@ def _unreached_definitions() -> set[str]:
     """Top-level package definitions (``def``, ``class`` and
     ``NAME = ...``) not reached by name from the roots: ``@register``
     queries, other module-level code (decorators included), and every
-    name in cli.py, __spark_entry__.py, bench.py and perfbench/ apart
-    from names those files bind only as locals or parameters. A reached
+    name in cli.py, __spark_entry__.py, bench.py and perfbench/. A name
+    a file binds only as a local or parameter refers to that local, in
+    package files as in the entry files, so it reaches nothing. A reached
     definition reaches every same-named definition its body mentions.
     Name-based, so it over-approximates what is reached: it never flags
     live code, and it misses dead code only when the name is used
     somewhere live."""
-    defs: dict[str, ast.AST] = {}
+    defs: dict[str, tuple[ast.AST, frozenset[str]]] = {}
     by_name: dict[str, list[str]] = {}
     seed: set[str] = set()
     for path in sorted(PKG.rglob("*.py")):
         mod = str(path.relative_to(PKG))
-        for st in ast.parse(path.read_text()).body:
+        tree = ast.parse(path.read_text())
+        skip = _local_only(tree)
+        for st in tree.body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 key = f"{mod}:{st.name}"
-                defs[key] = st
+                defs[key] = (st, skip)
                 by_name.setdefault(st.name, []).append(key)
                 for deco in st.decorator_list:
-                    seed |= _names(deco)
+                    seed |= _names(deco, skip=skip)
                     if "register" in _names(deco):
                         seed.add(st.name)
             elif isinstance(st, (ast.Import, ast.ImportFrom)):
@@ -224,10 +217,10 @@ def _unreached_definitions() -> set[str]:
                 continue
             elif name is not None:
                 key = f"{mod}:{name}"
-                defs[key] = st.value
+                defs[key] = (st.value, skip)
                 by_name.setdefault(name, []).append(key)
             else:
-                seed |= _names(st)
+                seed |= _names(st, skip=skip)
     entry_files = [REPO / "__spark_entry__.py", REPO / "bench.py", PKG / "cli.py"]
     for path in entry_files + sorted((REPO / "perfbench").glob("*.py")):
         tree = ast.parse(path.read_text())
@@ -239,7 +232,8 @@ def _unreached_definitions() -> set[str]:
         if key in reached:
             continue
         reached.add(key)
-        todo += [k for name in _names(defs[key]) for k in by_name.get(name, [])]
+        node, skip = defs[key]
+        todo += [k for name in _names(node, skip=skip) for k in by_name.get(name, [])]
     return set(defs) - reached
 
 

@@ -1,6 +1,7 @@
 """Snapshot-table layer (sources/snapshots.py): versioned commits,
 version pinning, expiry and concurrent commits over plain parquet +
-JSON manifests, plus the ``materialize_frame`` lineage cut."""
+JSON manifests, the ``pinned_snapshot`` reuse primitive, plus the
+``materialize_frame`` lineage cut."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pytest
 from mle_proj_datapipeline_spark.sources.snapshots import (
     expire,
     history,
+    pinned_snapshot,
     read_snapshot,
     write_snapshot,
 )
@@ -70,6 +72,36 @@ def test_compact_and_expire(spark, root):
     assert _rows(read_snapshot(spark, root)) == expected
     with pytest.raises(ValueError):
         read_snapshot(spark, root, version=2)
+
+
+def test_pinned_snapshot_builds_once_per_key(spark, root):
+    """``pinned_snapshot`` builds once per key and serves the commit
+    after that; a changed key rebuilds; at most 2 versions survive; an
+    empty build reads back empty with its schema."""
+    builds = []
+
+    def build(pairs):
+        def run():
+            builds.append(pairs)
+            return _df(spark, pairs)
+
+        return run
+
+    first = [(1, "a"), (2, "b")]
+    assert _rows(pinned_snapshot(spark, root, "k1", build(first))) == _rows(_df(spark, first))
+    assert _rows(pinned_snapshot(spark, root, "k1", build([(9, "z")]))) == _rows(
+        _df(spark, first)
+    )
+    assert builds == [first]
+
+    pinned_snapshot(spark, root, "k2", build([(3, "c")]))
+    empty = pinned_snapshot(spark, root, "k3", build([]))
+    assert len(builds) == 3
+    assert [s["meta"]["source"] for s in history(spark, root)] == ["k2", "k3"]
+    assert empty.count() == 0 and empty.schema == _df(spark, []).schema
+    # a pinned empty artifact is served, not rebuilt
+    assert pinned_snapshot(spark, root, "k3", build([(4, "d")])).count() == 0
+    assert len(builds) == 3
 
 
 def test_concurrent_writers_never_lose_a_commit(spark, tmp_path_factory):

@@ -294,7 +294,7 @@ WARM_JOB_BUDGET = {
     "feature_store_build": 11,
     "asof_purchase_click": 2,
     "embedding_pca_power": 3,
-    "bigram_lm_scores_served": 9,
+    "bigram_lm_scores_served": 6,
     "supplier_pagerank_served": 1,
 }
 
@@ -333,14 +333,13 @@ def test_parquet_reads_go_through_read_parquet():
     assert found == {"sources/readers.py", "plans/medallion.py"}
 
 
-def _driver_built_frames(spark, tmp_path):
+def _driver_built_frames(spark):
     """Every frame the engine builds from driver-held rows, by name."""
     from mle_proj_datapipeline_spark.operators.bpe import bpe_learn
     from mle_proj_datapipeline_spark.operators.cc_local import union_find_labels
     from mle_proj_datapipeline_spark.operators.graph import pagerank
     from mle_proj_datapipeline_spark.operators.kmeans import kmeans_fit
     from mle_proj_datapipeline_spark.operators.linalg import top_eigvec
-    from mle_proj_datapipeline_spark.streaming.compaction import served_state
 
     cov = spark.createDataFrame(
         [(0, 0, 2.0), (0, 1, 0.5), (1, 0, 0.5), (1, 1, 1.0)], "i INT, j INT, c DOUBLE"
@@ -361,19 +360,16 @@ def _driver_built_frames(spark, tmp_path):
         "union_find_labels": lambda: union_find_labels(pairs),
         "pagerank_driver_arm": lambda: pagerank(cycle, iterations=3),
         "bpe_merges": lambda: bpe_learn(docs, "text", n_merges=2),
-        "served_state_empty": lambda: served_state(
-            spark, str(tmp_path / "none"), ["k"], "v", empty_schema="k STRING, v BIGINT"
-        ),
     }
 
 
-def test_driver_built_frames_start_no_python_worker(spark, tmp_path):
+def test_driver_built_frames_start_no_python_worker(spark):
     """Frames built from driver-held rows go through
     ``readers.local_frame`` (Arrow), so no job over them runs a
     PythonRDD: ``createDataFrame(list)`` would pickle the rows and
     start Python workers for a few dozen rows."""
     built = {}
-    for name, build in _driver_built_frames(spark, tmp_path).items():
+    for name, build in _driver_built_frames(spark).items():
         df = build()
         lineage = df._jdf.queryExecution().toRdd().toDebugString()
         built[name] = ("PythonRDD" in lineage, len(df.collect()))

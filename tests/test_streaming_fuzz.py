@@ -4,9 +4,10 @@ The batch registry is fuzz-covered by tests/test_oracle_fuzz.py, but the
 stream==batch parity tests ran only on clean fixtures. Here the SAME
 seeded mutated tables (row-sampled + injected edge-case rows: empty
 docs, exact duplicates, tied event timestamps) are fed through the
-AvailableNow maintenance streams in waves, and the served state must
-equal the batch computation over the mutated corpus — plus a
-crash-mid-compaction replay on mutated state.
+AvailableNow maintenance stream in waves, and the model folded from
+its partials must equal the batch computation over the mutated corpus;
+the CM-sketch cells of the mutated orders must merge by SUM and survive
+a crash mid-rebuild of their pinned snapshot.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from tests.test_oracle_fuzz import _mutate
+from tests.test_streaming import fold_lm_partials
 
 SEED, RATE = 11, 60
 
@@ -29,9 +31,9 @@ def fuzz_dir(tmp_path_factory):
 
 
 def test_lm_serve_equals_batch_on_mutated_corpus(spark, fuzz_dir, tmp_path_factory):
-    """LM maintenance over the mutated documents (two waves, compaction
-    between them) must serve scores identical to the one-shot batch
-    query on the same mutated corpus — including the injected empty /
+    """LM maintenance over the mutated documents (two waves) must fold
+    into a model whose scores are identical to the one-shot batch query
+    on the same mutated corpus — including the injected empty /
     single-token / duplicate docs."""
     from mle_proj_datapipeline_spark.plans.featurize_queries import (
         bigram_lm_doc_scores,
@@ -48,12 +50,10 @@ def test_lm_serve_equals_batch_on_mutated_corpus(spark, fuzz_dir, tmp_path_facto
     docs.filter(F.col("doc_id") % 2 == 0).write.mode("append").parquet(land)
     schema = spark.read.parquet(land).schema
     LM.incremental_lm_counts(spark, land, schema, state, ck)
-    LM.compact_counts(spark, state)
-    LM.gc_counts(spark, state)
     docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(land)
     LM.incremental_lm_counts(spark, land, schema, state, ck)
 
-    uni, big = LM.served_counts(spark, state)
+    uni, big = fold_lm_partials(spark, state)
     got = sorted(
         (r["doc_id"], r["n_bigrams"], str(r["avg_logprob"]))
         for r in LM.score_docs(docs, uni, big).collect()
@@ -66,48 +66,44 @@ def test_lm_serve_equals_batch_on_mutated_corpus(spark, fuzz_dir, tmp_path_facto
 
 
 def test_cm_sketch_serve_equals_batch_on_mutated_orders(
-    spark, fuzz_dir, tmp_path_factory
+    spark, fuzz_dir, tmp_path_factory, monkeypatch
 ):
-    """Sketch maintenance over the mutated orders must serve cells equal
-    to the batch sketch of the union, surviving a CRASH mid-compaction
-    (write_snapshot dies before the manifest commit) and serving
-    correctly from the previous watermark until a later fold lands."""
+    """The CM cells of the mutated orders' two halves, summed, must equal
+    the cells of the union; pinned as a snapshot, a CRASH in a rebuild
+    (write_snapshot dies before the manifest commit) must leave the
+    previously pinned cells serving until a later rebuild lands."""
     from mle_proj_datapipeline_spark.operators import sketch as SK
-    from mle_proj_datapipeline_spark.streaming import compaction as C
-    from mle_proj_datapipeline_spark.streaming import sketch as SS
+    from mle_proj_datapipeline_spark.sources import snapshots as S
 
     orders = spark.read.parquet(f"{fuzz_dir}/orders.parquet")
-    cells_dir = str(tmp_path_factory.mktemp("fcm_state")) + "/cells"
-    odd = orders.filter(F.col("o_orderkey") % 2 == 1)
+    root = str(tmp_path_factory.mktemp("fcm_state")) + "/cells"
+    even = SK.cm_cells(orders.filter(F.col("o_orderkey") % 2 == 0), "o_custkey")
+    odd = SK.cm_cells(orders.filter(F.col("o_orderkey") % 2 == 1), "o_custkey")
 
     def cells_rows(df):
         return sorted(
             (r["j"], r["bucket"], r["cell_n"]) for r in df.collect()
         )
 
-    SS.merge_batch_cells(orders.filter(F.col("o_orderkey") % 2 == 0), 0, cells_dir, "o_custkey")
-
-    # crash mid-compaction: the fold computes but the snapshot commit
-    # never happens — the previous (empty) watermark must keep serving
-    real_write = C.write_snapshot
-    try:
-        def boom(*a, **k):
-            raise OSError("injected crash before snapshot commit")
-
-        C.write_snapshot = boom
-        with pytest.raises(OSError):
-            SS.compact_cells(spark, cells_dir)
-    finally:
-        C.write_snapshot = real_write
-
-    SS.merge_batch_cells(odd, 1, cells_dir, "o_custkey")
     want = cells_rows(SK.cm_cells(orders, "o_custkey"))
-    assert cells_rows(SS.served_cells(spark, cells_dir)) == want
+    summed = (
+        even.unionByName(odd).groupBy("j", "bucket").agg(F.sum("cell_n").alias("cell_n"))
+    )
+    assert cells_rows(summed) == want
+    assert cells_rows(
+        S.pinned_snapshot(spark, root, "union", lambda: SK.cm_cells(orders, "o_custkey"))
+    ) == want
 
-    # the real fold after the crash, plus GC: serving never changes
-    SS.compact_cells(spark, cells_dir)
-    SS.gc_cells(spark, cells_dir)
-    assert cells_rows(SS.served_cells(spark, cells_dir)) == want
+    def boom(*a, **k):
+        raise OSError("injected crash before snapshot commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "write_snapshot", boom)
+        with pytest.raises(OSError):
+            S.pinned_snapshot(spark, root, "even", lambda: even)
+    # the crashed rebuild committed nothing: the union cells still serve
+    assert cells_rows(S.pinned_snapshot(spark, root, "union", lambda: even)) == want
+    assert cells_rows(S.pinned_snapshot(spark, root, "even", lambda: even)) == cells_rows(even)
 
 
 @pytest.mark.skipif(
@@ -135,9 +131,8 @@ def test_lm_serve_equals_batch_on_near_empty_mutation(spark, tmp_path_factory):
     LM.incremental_lm_counts(spark, land, schema, state, ck)
     docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(land)
     LM.incremental_lm_counts(spark, land, schema, state, ck)
-    LM.compact_counts(spark, state)
 
-    uni, big = LM.served_counts(spark, state)
+    uni, big = fold_lm_partials(spark, state)
     got = sorted(
         (r["doc_id"], r["n_bigrams"], str(r["avg_logprob"]))
         for r in LM.score_docs(docs, uni, big).collect()
