@@ -18,7 +18,4 @@ Design stance (see SURVEY.md §7):
 - Designed for 100 TB / 1000 executors; tested on local[32].
 """
 
-from mle_proj_datapipeline_spark.session import get_spark
-
-__all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -1,17 +1,19 @@
 """IVF (inverted-file) approximate nearest neighbor: multi-probe
-search, trained codebooks, and the persisted-index serve paths.
+search over a fixed or a trained codebook, and the persisted index.
 Cell-assignment primitives live in operators/veclib.py, codebook
 training in operators/kmeans.py.
 
 Scale design (100 TB): the codebook is driver-held k·dim (broadcast);
-search shuffles once on cell id; the persisted index is a snapshot
-table keyed by cell, appended map-only per batch.
+search shuffles once on cell id; the persisted index is one snapshot
+table holding the codebook and the cell assignment together, pinned by
+``snapshots.pinned_snapshot`` under the corpus fingerprint and the
+training parameters.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 
 from mle_proj_datapipeline_spark.operators.kmeans import kmeans_fit
 from mle_proj_datapipeline_spark.operators.veclib import (
@@ -21,6 +23,61 @@ from mle_proj_datapipeline_spark.operators.veclib import (
     ivf_probes,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
+
+
+def _probe_rerank(
+    cands: DataFrame,
+    queries: DataFrame,
+    probes: Column,
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """Exact top-k within the probed cells, shared by every IVF path:
+    each query explodes its probed cell ids (``probes``, an array
+    column over ``queries``), the broadcast queries equi-join the
+    candidates (neighbor_id, cv, cell) on cell, and cosine ranks the
+    pairs (ties by neighbor id)."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        F.explode(probes).alias("cell"),
+    )
+    scored = (
+        cands.join(F.broadcast(q), "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
+        .select("query_id", "neighbor_id", "cosine")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rk")
+    )
+
+
+def _codebook(
+    book_rows: list[Row], vec_col: str, n_probes: int, round_to: int
+) -> tuple[list[list[float]], Column, Column]:
+    """Compile trained (cell, i, m) codebook rows into the driver-held
+    k·dim matrix, the array of its cell ids, and the probe-list
+    expression over ``vec_col``. A cell that lost every vector drops
+    out of the trained codebook, so expression indices are positions in
+    the SURVIVING-cell list — the cell-id array maps them back to real
+    cell ids."""
+    cells = sorted({r["cell"] for r in book_rows})
+    dim = max(r["i"] for r in book_rows)
+    pos = {c: p for p, c in enumerate(cells)}
+    book: list[list[float]] = [[0.0] * dim for _ in cells]
+    for r in book_rows:
+        book[pos[r["cell"]]][r["i"] - 1] = float(r["m"])
+    cell_ids = F.array(*[F.lit(c) for c in cells])
+    probes = F.transform(
+        ivf_probes(vec_col, book, n_probes=n_probes, round_to=round_to),
+        lambda p: F.element_at(cell_ids, p),
+    )
+    return book, cell_ids, probes
 
 
 def ivf_topk(
@@ -44,23 +101,7 @@ def ivf_topk(
         F.col(vec_col).alias("cv"),
         ivf_cell(vec_col).alias("cell"),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(ivf_probes(vec_col)).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return _probe_rerank(c, queries, ivf_probes(vec_col), id_col, vec_col, k)
 
 
 def ivf_trained_topk(
@@ -84,9 +125,8 @@ def ivf_trained_topk(
     class) is then pulled to the driver and compiled into the same
     closed-form nearest-cell expression ivf_topk uses, so assigning the
     FULL corpus is pure map work: no join, no shuffle, whole-stage
-    codegen. That is the 100 TB shape — only training touches shuffles,
-    and at that scale codebook + assignment would persist as snapshot
-    tables and be reused across query batches rather than retrained.
+    codegen. That is the 100 TB shape — only training touches shuffles;
+    the persisted index (ivf_index) pays that training once per corpus.
     Distances round to the trainer's grid pre-argmin so the assignment
     is exactly the oracle's (rounded-dist, lowest-cell-tie) one."""
     _, cent = kmeans_fit(
@@ -94,151 +134,59 @@ def ivf_trained_topk(
     )
     # kmeans_fit's final assignment is lazy and never consumed —
     # only the (cell, i, m) codebook rows are evaluated here.
-    book_rows = cent.collect()
-    # A cell that lost every vector drops out of the trained codebook, so
-    # expression indices are positions in the SURVIVING-cell list — map
-    # them back to real cell ids explicitly.
-    cells = sorted({r["cell"] for r in book_rows})
-    dim = max(r["i"] for r in book_rows)
-    pos = {c: p for p, c in enumerate(cells)}
-    book: list[list[float]] = [[0.0] * dim for _ in cells]
-    for r in book_rows:
-        book[pos[r["cell"]]][r["i"] - 1] = float(r["m"])
-    cell_ids = F.array(*[F.lit(c) for c in cells])
-
+    book, cell_ids, probes = _codebook(cent.collect(), vec_col, n_probes, round_to)
     c = ensure_parallelism(candidates.select(id_col, vec_col)).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         F.element_at(cell_ids, ivf_cell(vec_col, book, round_to=round_to)).alias("cell"),
     )
-    qp = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            F.transform(
-                ivf_probes(vec_col, book, n_probes=n_probes, round_to=round_to),
-                lambda p: F.element_at(cell_ids, p),
-            )
-        ).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(qp), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return _probe_rerank(c, queries, probes, id_col, vec_col, k)
 
 
-def ivf_index_build(
+def ivf_index(
     vecs: DataFrame,
-    root: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iterations: int = 2,
     round_to: int = 6,
-) -> int:
-    """Build and PERSIST an IVF index: train the coarse quantizer
-    (kmeans_fit) and commit two snapshot tables under ``root`` —
-    ``codebook`` (cell, i, m) and ``assignment`` (vid, cell, v: the
-    vector itself, so the query path is self-contained, no join back to
-    the corpus). This is the 100 TB usage pattern the in-query trainer
-    only simulates: pay training once, serve every subsequent query
-    batch from the committed index. Returns the codebook version.
-
-    Commit pairing: the codebook commits FIRST and the assignment
-    records its version in meta — readers pin that pair, so a crash
-    between the two commits (or a reader racing a rebuild) can never
-    score probe lists against centroids from a different training run
-    than the assignment was built with."""
-    from mle_proj_datapipeline_spark.sources.snapshots import write_snapshot
-
+) -> DataFrame:
+    """The persisted IVF index as ONE table from one ``kmeans_fit``
+    call: codebook rows (cell, i, m) with a null vid, and assignment
+    rows (vid, cell, v — the vector itself, so serving needs no join
+    back to the corpus). Pinned as one snapshot, both halves land in
+    one atomic commit, so a reader can never score probe lists against
+    centroids from another training run than the assignment's. The two
+    halves come from separate union children, so they sit in separate
+    files and the codebook read (``vid IS NULL``) skips the assignment
+    row groups on their null counts."""
     assigned, cent = kmeans_fit(
         vecs, id_col, vec_col, iterations=iterations, round_to=round_to
     )
     one = vecs.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    vcb = write_snapshot(cent, f"{root}/codebook")
-    write_snapshot(
-        assigned.select("vid", "cell").join(one, "vid"),
-        f"{root}/assignment",
-        meta={"codebook_version": vcb},
+    return (
+        assigned.select("vid", "cell")
+        .join(one, "vid")
+        .unionByName(cent, allowMissingColumns=True)
     )
-    return vcb
-
-
-def _pinned_codebook(
-    spark, root: str
-) -> tuple[list[list[float]], list[int], int | None]:
-    """Load the codebook version the LATEST assignment commit was built
-    with (``codebook_version`` in the assignment manifest's meta) —
-    never the bare latest codebook, which may belong to an in-flight
-    rebuild that has committed its codebook but not yet its assignment.
-    Returns (book, cells, pinned_version) with book rows ordered like
-    ``cells`` — one history read serves both the book and the pin."""
-    from mle_proj_datapipeline_spark.sources.snapshots import history, read_snapshot
-
-    snaps = history(spark, f"{root}/assignment")
-    pinned = snaps[-1].get("meta", {}).get("codebook_version") if snaps else None
-    book_rows = read_snapshot(spark, f"{root}/codebook", version=pinned).collect()
-    cells = sorted({r["cell"] for r in book_rows})
-    dim = max(r["i"] for r in book_rows)
-    pos = {c: p for p, c in enumerate(cells)}
-    book: list[list[float]] = [[0.0] * dim for _ in cells]
-    for r in book_rows:
-        book[pos[r["cell"]]][r["i"] - 1] = float(r["m"])
-    return book, cells, pinned
 
 
 def ivf_index_topk(
-    spark,
     queries: DataFrame,
-    root: str,
+    index: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
     n_probes: int = NUM_PROBES,
     round_to: int = 6,
 ) -> DataFrame:
-    """Serve ANN top-k from a PERSISTED IVF index (ivf_index_build):
-    zero training work — the codebook snapshot (k·dim rows, bounded)
-    collects to the driver and compiles into the closed-form probe
-    expression; candidates come straight off the committed assignment
-    table, pre-partitioned by cell. Identical results to
-    ivf_trained_topk for the same corpus/params (tested + same oracle).
-    The codebook is the one PINNED by the assignment commit
-    (_pinned_codebook), so a racing rebuild can't mismatch the pair."""
-    from mle_proj_datapipeline_spark.sources.snapshots import read_snapshot
-
-    book, cells, _ = _pinned_codebook(spark, root)
-    cell_ids = F.array(*[F.lit(c) for c in cells])
-
-    c = read_snapshot(spark, f"{root}/assignment").select(
+    """Serve ANN top-k from a persisted IVF index (``ivf_index``): zero
+    training work — the codebook rows (k·dim, bounded) collect to the
+    driver and compile into the closed-form probe expression;
+    candidates are the committed assignment rows. Identical results to
+    ivf_trained_topk for the same corpus and parameters (same oracle)."""
+    book_rows = index.filter(F.col("vid").isNull()).select("cell", "i", "m").collect()
+    _, _, probes = _codebook(book_rows, vec_col, n_probes, round_to)
+    cands = index.filter(F.col("vid").isNotNull()).select(
         F.col("vid").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
     )
-    qp = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            F.transform(
-                ivf_probes(vec_col, book, n_probes=n_probes, round_to=round_to),
-                lambda p: F.element_at(cell_ids, p),
-            )
-        ).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(qp), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return _probe_rerank(cands, queries, probes, id_col, vec_col, k)

@@ -1,10 +1,12 @@
-"""Random-hyperplane LSH approximate nearest neighbor: banded bucket
-top-k and the persisted-index serve paths. Vector primitives live in
-operators/veclib.py.
+"""Random-hyperplane LSH approximate nearest neighbor: the banded
+signature projection and the candidate rerank over it. Vector
+primitives live in operators/veclib.py.
 
 Scale design (100 TB): sign-bit bucket per vector, exact rerank within
-bucket — one shuffle on bucket id, no cross join; the persisted index
-pins its geometry + corpus fingerprint in the snapshot manifest.
+bucket — one shuffle on bucket id, no cross join. The persisted index
+(plans/llm_ann_queries.ann_lsh_indexed_top1) is ``lsh_signatures``
+pinned by ``snapshots.pinned_snapshot`` under the corpus fingerprint
+and geometry.
 """
 
 from __future__ import annotations
@@ -21,12 +23,7 @@ from mle_proj_datapipeline_spark.operators.veclib import (
     planes_per_band_for,
 )
 from mle_proj_datapipeline_spark.session import ensure_parallelism
-from mle_proj_datapipeline_spark.sources.snapshots import (
-    history,
-    materialize_frame,
-    read_snapshot,
-    write_snapshot,
-)
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
 
 
 def lsh_topk(
@@ -58,6 +55,23 @@ def lsh_topk(
       with the query in EVERY band (P_miss = Π_b (1 - p^planes); more
       bands → higher recall at constant per-band cost).
     """
+    base = materialize_frame(
+        lsh_signatures(df, id_col, vec_col, bands, planes_per_band), snapshot_root
+    )
+    return lsh_rerank(base, bands, k)
+
+
+def lsh_signatures(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    bands: int = BANDS,
+    planes_per_band: int | None = PLANES_PER_BAND,
+) -> DataFrame:
+    """The banded signature table (vid, v, bk0..bk{bands-1}): each
+    vector with its ``bands`` sign-bit bucket keys. It is the map-side
+    cost of LSH — the in-query path (lsh_topk) pays it per call, the
+    persisted index pays it once per corpus and geometry."""
     one = df.select(id_col, vec_col)
     if planes_per_band is None:
         planes_per_band = planes_per_band_for(one.count())
@@ -68,20 +82,15 @@ def lsh_topk(
         ).alias(f"bk{b}")
         for b in range(bands)
     ]
-    base = materialize_frame(
-        ensure_parallelism(one).select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("v"), *band_cols
-        ),
-        snapshot_root,
+    return ensure_parallelism(one).select(
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("v"), *band_cols
     )
 
-    return _lsh_rerank(base, bands, k)
 
-
-def _lsh_rerank(base: DataFrame, bands: int, k: int) -> DataFrame:
+def lsh_rerank(base: DataFrame, bands: int, k: int) -> DataFrame:
     """Candidate generation + exact rerank over a banded signature table
-    (vid, v, bk0..bk{bands-1}) — shared by the in-query path (lsh_topk)
-    and the persisted-index serve path (lsh_index_topk)."""
+    (lsh_signatures) — shared by the in-query path (lsh_topk) and the
+    persisted-index serve path (ann_lsh_indexed_top1)."""
     sig = base.select(
         "vid",
         F.explode(
@@ -123,71 +132,9 @@ def _lsh_rerank(base: DataFrame, bands: int, k: int) -> DataFrame:
     return out.select("query_id", "neighbor_id", "cosine", "rk")
 
 
-def lsh_index_build(
-    df: DataFrame,
-    root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bands: int = BANDS,
-    planes_per_band: int | None = PLANES_PER_BAND,
-    meta_extra: dict | None = None,
-) -> int:
-    """Build and PERSIST the multi-band LSH index: the banded signature
-    table (vid, v, per-band bucket keys) committed as a snapshot, with
-    the geometry recorded in manifest meta so a reader (or a rebuild
-    check) can detect a stale index after a geometry change. The
-    signature computation — the map-side cost lsh_topk pays on every
-    call — is paid once here; serving only runs candidate join +
-    rerank. Returns the committed version."""
-    one = df.select(id_col, vec_col)
-    if planes_per_band is None:
-        planes_per_band = planes_per_band_for(one.count())
-    all_planes = hyperplanes(bands * planes_per_band)
-    band_cols = [
-        plane_bucket(
-            F.col(vec_col), all_planes[b * planes_per_band : (b + 1) * planes_per_band]
-        ).alias(f"bk{b}")
-        for b in range(bands)
-    ]
-    base = ensure_parallelism(one).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v"), *band_cols
-    )
-    return write_snapshot(
-        base,
-        f"{root}/signatures",
-        meta={"bands": bands, "planes_per_band": planes_per_band, **(meta_extra or {})},
-    )
-
-
-def lsh_index_geometry(spark, root: str) -> dict | None:
-    """Geometry meta of the committed LSH index, or None if absent."""
-    snaps = history(spark, f"{root}/signatures")
-    return snaps[-1].get("meta") if snaps else None
-
-
-def lsh_index_topk(spark, root: str, k: int = 1) -> DataFrame:
-    """Serve LSH ANN top-k from the PERSISTED signature index
-    (lsh_index_build): zero signature work — candidates and rerank run
-    straight off the committed banded table, identical results to
-    lsh_topk over the same corpus/geometry (same oracle)."""
-    meta = lsh_index_geometry(spark, root)
-    if meta is None:
-        raise FileNotFoundError(f"no LSH index committed under {root}")
-    # Materialize the committed signature table once per serve call: the
-    # rerank consumes it three times (band explode, query vectors,
-    # candidate vectors) and re-scanning even a small parquet snapshot
-    # 3× costs more than one localCheckpoint of it — and gives AQE
-    # exact sizes for the rerank's broadcast decisions.
-    base = materialize_frame(read_snapshot(spark, f"{root}/signatures"))
-    return _lsh_rerank(base, int(meta["bands"]), k)
-
-
 def lsh_top1(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    snapshot_root: str | None = None,
+    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """Approximate nearest neighbor per vector — multi-band hyperplane
     LSH (lsh_topk, k=1). Kept as the named top-1 entry point."""
-    return lsh_topk(df, id_col, vec_col, k=1, snapshot_root=snapshot_root)
+    return lsh_topk(df, id_col, vec_col, k=1)

@@ -11,18 +11,16 @@ days stale) fire on the test data.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from mle_proj_datapipeline_spark.operators.hashing import P31, h31
 from mle_proj_datapipeline_spark.plans.registry import register
-from mle_proj_datapipeline_spark.sources.catalog import load_table
-from mle_proj_datapipeline_spark.sources.metrics import (
-    stored_grade_metrics,
-    stored_metrics,
-    write_registry,
-    read_registry,
-)
+from mle_proj_datapipeline_spark.sources.catalog import load_table, source_fingerprint
+from mle_proj_datapipeline_spark.sources.metrics import table_root
+from mle_proj_datapipeline_spark.sources.snapshots import pinned_snapshot
 from mle_proj_datapipeline_spark.streaming.lifecycle import (
     F1_THRESHOLD,
     STALE_DAYS,
@@ -54,6 +52,29 @@ def weekly_model_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.86) + (h31(F.concat_ws("|", "model", "week")) % 20) / F.lit(200.0), 4
     )
     return base.withColumn("metric", metric)
+
+
+def _stored(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The lifecycle stores' write → read-back (SURVEY §2 A7/L4): the
+    reference writes weekly metrics to Postgres and promotions to an
+    MLflow registry, then queries them back. Here each store is a
+    managed snapshot table ``name`` holding ``build()``, pinned to the
+    orders fingerprint — built and committed once per orders version,
+    and every call returns the READ-BACK table, never the in-flight
+    plan. A crashed refresh can never serve a half-written panel: the
+    commit is atomic and the previous version keeps serving."""
+    return pinned_snapshot(
+        spark, table_root(name, sf_dir), source_fingerprint(sf_dir, "orders"), build
+    )
+
+
+def _stored_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted (model, week, metric) panel (weekly_model_metrics)."""
+    return _stored(
+        spark, sf_dir, "metrics_store", lambda: weekly_model_metrics(spark, sf_dir)
+    )
 
 
 @register(
@@ -95,8 +116,7 @@ def retraining_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     table and read back before the fold — the reference's Postgres
     write (model_inference_utils.py:97-143) → query
     (query_model_performance.py) flow, not an in-memory shortcut."""
-    panel = stored_metrics(spark, sf_dir, weekly_model_metrics(spark, sf_dir))
-    return decide_batch(panel)
+    return decide_batch(_stored_panel(spark, sf_dir))
 
 
 @register(
@@ -124,7 +144,7 @@ def best_model_per_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel — CTE + ROW_NUMBER shape, deterministic tiebreak."""
     from pyspark.sql import Window
 
-    m = stored_metrics(spark, sf_dir, weekly_model_metrics(spark, sf_dir))
+    m = _stored_panel(spark, sf_dir)
     w = Window.partitionBy("week").orderBy(F.desc("metric"), F.asc("model"))
     return (
         m.withColumn("rk", F.row_number().over(w))
@@ -174,32 +194,33 @@ def production_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     registration (hash-derived here; the slot a real trainer fills)."""
     from pyspark.sql import Window
 
-    m = stored_metrics(spark, sf_dir, weekly_model_metrics(spark, sf_dir))
-    per_week = Window.partitionBy("week").orderBy(F.desc("metric"), F.asc("model"))
-    best = (
-        m.withColumn("rk", F.row_number().over(per_week))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
-    hp = h31(F.col("model"))
-    registry = best.select(
-        "week",
-        F.col("model").alias("prod_model"),
-        F.row_number().over(Window.orderBy("week")).alias("version"),
-        F.col("metric").alias("prod_metric"),
-        F.concat(
-            F.lit("depth="),
-            (F.lit(3) + hp % 6).cast("string"),
-            F.lit(";lr=0.0"),
-            (F.lit(1) + hp % 9).cast("string"),
-        ).alias("params"),
-        F.when(
-            F.col("week") == F.max("week").over(Window.partitionBy()),
-            F.lit("Production"),
-        ).otherwise(F.lit("Archived")).alias("stage"),
-    )
-    write_registry(registry, sf_dir)
-    return read_registry(spark, sf_dir)
+    def build() -> DataFrame:
+        m = _stored_panel(spark, sf_dir)
+        per_week = Window.partitionBy("week").orderBy(F.desc("metric"), F.asc("model"))
+        best = (
+            m.withColumn("rk", F.row_number().over(per_week))
+            .filter(F.col("rk") == 1)
+            .drop("rk")
+        )
+        hp = h31(F.col("model"))
+        return best.select(
+            "week",
+            F.col("model").alias("prod_model"),
+            F.row_number().over(Window.orderBy("week")).alias("version"),
+            F.col("metric").alias("prod_metric"),
+            F.concat(
+                F.lit("depth="),
+                (F.lit(3) + hp % 6).cast("string"),
+                F.lit(";lr=0.0"),
+                (F.lit(1) + hp % 9).cast("string"),
+            ).alias("params"),
+            F.when(
+                F.col("week") == F.max("week").over(Window.partitionBy()),
+                F.lit("Production"),
+            ).otherwise(F.lit("Archived")).alias("stage"),
+        )
+
+    return _stored(spark, sf_dir, "model_registry", build)
 
 
 GRADES = list("ABCDEFG")
@@ -241,20 +262,22 @@ def grade_f1_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: panel is models × weeks rows (tiny); the explode fans out by a
     constant 7; one shuffle on (model, grade)."""
-    base = weekly_model_metrics(spark, sf_dir).drop("metric")
-    entries: list = []
-    for g in GRADES:
-        entries.append(F.lit(g))
-        entries.append(
-            F.round(
-                F.lit(0.80)
-                + (h31(F.concat_ws("|", F.col("model"), F.col("week"), F.lit(g))) % 30)
-                / F.lit(200.0),
-                4,
+    def build() -> DataFrame:
+        base = weekly_model_metrics(spark, sf_dir).drop("metric")
+        entries: list = []
+        for g in GRADES:
+            entries.append(F.lit(g))
+            entries.append(
+                F.round(
+                    F.lit(0.80)
+                    + (h31(F.concat_ws("|", F.col("model"), F.col("week"), F.lit(g))) % 30)
+                    / F.lit(200.0),
+                    4,
+                )
             )
-        )
-    panel = base.withColumn("grade_f1_json", F.to_json(F.create_map(*entries)))
-    stored = stored_grade_metrics(spark, sf_dir, panel)
+        return base.withColumn("grade_f1_json", F.to_json(F.create_map(*entries)))
+
+    stored = _stored(spark, sf_dir, "grade_metrics_store", build)
     typed = stored.withColumn(
         "grade_f1", F.from_json("grade_f1_json", "map<string,double>")
     )

@@ -16,6 +16,8 @@ from mle_proj_datapipeline_spark.operators import veclib as _vl
 from mle_proj_datapipeline_spark.plans.llm_common import _COSINE, _bucket_sql
 from mle_proj_datapipeline_spark.plans.registry import register
 from mle_proj_datapipeline_spark.sources.catalog import load_table, source_fingerprint
+from mle_proj_datapipeline_spark.sources.metrics import table_root
+from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame, pinned_snapshot
 
 # --------------------------------------------------------------------------
 # Similarity: brute-force cosine top-k
@@ -180,8 +182,6 @@ def label_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     below the 4dp output grid, and smaller than the engine-vs-oracle
     accumulation-order difference the contract already tolerates
     (verified row-identical vs the oracle at sf0.001/sf0.01)."""
-    from mle_proj_datapipeline_spark.sources.snapshots import materialize_frame
-
     emb = _vl.valid_embeddings(load_table(spark, sf_dir, "embeddings"))
     e = emb.select(
         "label", F.posexplode("embedding").alias("i0", "v0")
@@ -382,27 +382,27 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_ivf_indexed_topk", oracle=_ivf_trained_oracle())
 def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k through the PERSISTED IVF index layout: ivf_index_build
-    trains the k-means codebook and commits codebook + assignment as
-    snapshot tables; ivf_index_topk then answers the queries from the
-    committed pair (bounded codebook collect + equi-join on the
-    committed assignment). This query calls ivf_index_build on EVERY
-    call, so each call retrains k-means and commits two new versions;
-    the index is not pinned to its source yet (pinning needs the
-    codebook/assignment pair kept as one unit). Same oracle as
+    """ANN top-k served from the PERSISTED IVF index: one
+    ``_ivf.ivf_index`` table (the trained codebook and the cell
+    assignment as one commit) is pinned per (corpus fingerprint,
+    iterations, rounding grid), and ``_ivf.ivf_index_topk`` answers the
+    queries from it (bounded codebook collect + equi-join on the
+    committed assignment). k-means trains only when the pin misses;
+    steady state runs no training job. Same oracle as
     ann_ivf_trained_topk — the persisted path must reproduce the
-    in-query training path exactly. tests/test_similarity_scale.py
-    proves the reuse property of the layout: a second query batch
-    against the same committed index runs no kmeans jobs."""
-    from mle_proj_datapipeline_spark.sources.metrics import table_root
-    from mle_proj_datapipeline_spark.sources.snapshots import expire
-
+    in-query training path exactly."""
     emb = _vl.valid_embeddings(load_table(spark, sf_dir, "embeddings"))
-    root = table_root("ivf_index", sf_dir)
-    _ivf.ivf_index_build(emb, root)
-    expire(spark, f"{root}/codebook", keep_last=3)
-    expire(spark, f"{root}/assignment", keep_last=3)
-    return _ivf.ivf_index_topk(spark, emb.filter(F.col("vec_id") < 50), root, k=3)
+    iterations, round_to = 2, 6
+    key = f"{source_fingerprint(sf_dir, 'embeddings')}|it={iterations}|round={round_to}"
+    index = pinned_snapshot(
+        spark,
+        table_root("ivf_index", sf_dir),
+        key,
+        lambda: _ivf.ivf_index(emb, iterations=iterations, round_to=round_to),
+    )
+    return _ivf.ivf_index_topk(
+        emb.filter(F.col("vec_id") < 50), index, k=3, round_to=round_to
+    )
 
 
 @register(
@@ -483,29 +483,28 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_lsh_indexed_top1", oracle=_LSH_TOP1_ORACLE)
 def ann_lsh_indexed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH ANN top-1 served from the PERSISTED signature index
-    (_lsh.lsh_index_build / lsh_index_topk) — same oracle as
-    ann_lsh_top1, because serving from the committed banded table must
-    reproduce the in-query path exactly. The index builds once per
-    corpus and is rebuilt when absent, when the committed geometry meta
-    no longer matches the code's, or when the SOURCE FILES changed (a
-    file-stat fingerprint in the meta — the warehouse outlives testdata
-    regeneration, so geometry alone would serve a stale corpus). Steady
-    state is candidate join + rerank only — the production serve
-    pattern that buys back the 2-band recall fix's per-call signature
-    cost (VERDICT r4 item 5). ann_lsh_top1 stays registered as the
+    """LSH ANN top-1 served from the PERSISTED signature index — same
+    oracle as ann_lsh_top1, because serving from the committed banded
+    table must reproduce the in-query path exactly. The banded
+    signatures (``_lsh.lsh_signatures``) are pinned per (corpus
+    fingerprint, bands, planes per band): the warehouse outlives
+    testdata regeneration, so geometry alone would serve a stale
+    corpus. Steady state is candidate join + rerank only — the
+    production serve pattern that buys back the 2-band recall fix's
+    per-call signature cost. ann_lsh_top1 stays registered as the
     build-path measurement."""
-    from mle_proj_datapipeline_spark.sources.metrics import table_root
-    from mle_proj_datapipeline_spark.sources.snapshots import expire
-
     emb = _vl.valid_embeddings(load_table(spark, sf_dir, "embeddings"))
-    root = table_root("lsh_index", sf_dir)
-    want = {
-        "bands": _vl.BANDS,
-        "planes_per_band": _vl.PLANES_PER_BAND,
-        "source": source_fingerprint(sf_dir, "embeddings"),
-    }
-    if _lsh.lsh_index_geometry(spark, root) != want:
-        _lsh.lsh_index_build(emb, root, meta_extra={"source": want["source"]})
-        expire(spark, f"{root}/signatures", keep_last=3)
-    return _lsh.lsh_index_topk(spark, root, k=1)
+    key = (
+        f"{source_fingerprint(sf_dir, 'embeddings')}"
+        f"|bands={_vl.BANDS}|ppb={_vl.PLANES_PER_BAND}"
+    )
+    pinned = pinned_snapshot(
+        spark,
+        f"{table_root('lsh_index', sf_dir)}/signatures",
+        key,
+        lambda: _lsh.lsh_signatures(emb),
+    )
+    # Cut the committed table once per serve call: the rerank reads it
+    # three times (band explode, query vectors, candidate vectors), and
+    # the cut gives AQE exact sizes for the rerank's broadcast choices.
+    return _lsh.lsh_rerank(materialize_frame(pinned), _vl.BANDS, 1)

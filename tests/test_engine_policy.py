@@ -95,6 +95,36 @@ def test_lineage_cuts_go_through_materialize_frame():
     assert found == {"sources/snapshots.py"}
 
 
+def test_artifacts_commit_through_pinned_snapshot():
+    """A persisted artifact is reused only through
+    ``snapshots.pinned_snapshot``: outside sources/snapshots.py nothing
+    commits, lists or expires snapshot versions itself, except the
+    time-travel demonstration, which commits two versions to read the
+    first back."""
+    pat = re.compile(r"\b(write_snapshot|expire|history)\(")
+    found = {
+        f"{name}:{getattr(st, 'name', '<module>')}"
+        for name, text in _sources().items()
+        if name != "sources/snapshots.py"
+        for st in ast.parse(text).body
+        if pat.search(ast.unparse(st))
+    }
+    assert found == {"plans/lifecycle_queries.py:metrics_time_travel"}
+
+
+def test_package_inits_hold_no_imports():
+    """A package ``__init__.py`` re-exports nothing: an import there is
+    a facade the reachability gate below cannot see (an import alone
+    reaches nothing), so every caller imports from the defining
+    module."""
+    for path in PKG.rglob("__init__.py"):
+        tree = ast.parse(path.read_text())
+        imports = [
+            n for n in ast.walk(tree) if isinstance(n, (ast.Import, ast.ImportFrom))
+        ]
+        assert not imports, f"{path.relative_to(PKG)} imports {len(imports)} time(s)"
+
+
 # Package definitions that no registered query, module-level code, the
 # CLI, the driver contract, bench.py or perfbench/ reaches, kept on
 # purpose. Any other unreached definition is dead code: wire it into a

@@ -111,30 +111,26 @@ def test_decision_properties(spark, metrics_pdf):
 
 def test_metrics_store_roundtrip(spark, tmp_path_factory, monkeypatch):
     """A7: lifecycle queries read the PERSISTED metrics table — the
-    panel must survive a write→read-back through the snapshot store,
-    version history stays bounded, and a refresh replaces the panel."""
+    panel survives a write→read-back through the snapshot store, pinned
+    to the orders fingerprint, and a repeat read serves that commit
+    instead of committing the same panel again."""
     import os
 
-    from mle_proj_datapipeline_spark.sources import metrics as M
+    from mle_proj_datapipeline_spark.plans.lifecycle_queries import _stored_panel
+    from mle_proj_datapipeline_spark.sources.catalog import source_fingerprint
     from mle_proj_datapipeline_spark.sources.snapshots import history
 
     wh = str(tmp_path_factory.mktemp("warehouse"))
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", wh)
 
-    panel = spark.createDataFrame(
-        [("m1", "2024-01-07", 0.91), ("m2", "2024-01-07", 0.88)],
-        "model string, week string, metric double",
-    )
-    got = M.stored_metrics(spark, "/root/testdata/sf0.001", panel)
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in panel.collect()}
+    got = _stored_panel(spark, SF_SMOKE)
+    want = weekly_model_metrics(spark, SF_SMOKE)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     root = os.path.join(wh, "metrics_store_sf0.001")
-    assert os.path.isdir(root)
-
-    # refresh several times: logical table is replaced, history bounded
-    for _ in range(M.KEEP_VERSIONS + 2):
-        M.stored_metrics(spark, "/root/testdata/sf0.001", panel.limit(1))
-    assert M.read_metrics(spark, root).count() == 1
-    assert len(history(spark, root)) <= M.KEEP_VERSIONS
+    _stored_panel(spark, SF_SMOKE)
+    assert [s["meta"]["source"] for s in history(spark, root)] == [
+        source_fingerprint(SF_SMOKE, "orders")
+    ]
 
 
 def test_production_model_registry_roundtrip(spark, tmp_path_factory, monkeypatch):

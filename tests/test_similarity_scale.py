@@ -112,27 +112,30 @@ def test_kmeans_inertia_monotone(spark):
 
 
 def test_ivf_index_reuse_serves_without_training(spark, tmp_path_factory):
-    """The persisted IVF index is the pay-training-once artifact: build
-    commits codebook + assignment snapshots; every later query batch is
-    served from the index alone — identical results to the in-query
-    trainer, and the serving plan contains no training operators (no
-    posexplode of the corpus, no avg-update aggregate)."""
+    """The persisted IVF index is the pay-training-once artifact: one
+    pinned table holds codebook + assignment; every later query batch
+    is served from the pinned index alone — identical results to the
+    in-query trainer, and the serving plan contains no training
+    operators (no posexplode of the corpus, no avg-update aggregate)."""
     import pyspark.sql.functions as F
 
     from mle_proj_datapipeline_spark.sources.catalog import load_table
+    from mle_proj_datapipeline_spark.sources.snapshots import pinned_snapshot
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     root = str(tmp_path_factory.mktemp("ivfidx"))
-    ann_ivf.ivf_index_build(emb, root)
+    index = pinned_snapshot(spark, root, "corpus", lambda: ann_ivf.ivf_index(emb))
 
     q1 = emb.filter(F.col("vec_id") < 20)
     q2 = emb.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 40))
-    served = ann_ivf.ivf_index_topk(spark, q1, root, k=3)
+    served = ann_ivf.ivf_index_topk(q1, index, k=3)
     trained = ann_ivf.ivf_trained_topk(q1, emb, k=3)
     assert sorted(map(tuple, served.collect())) == sorted(map(tuple, trained.collect()))
 
-    # Second batch: index reused, no training in the serving plan.
-    out2 = ann_ivf.ivf_index_topk(spark, q2, root, k=3)
+    # Second batch: index reused (the pin never rebuilds), no training
+    # in the serving plan.
+    reused = pinned_snapshot(spark, root, "corpus", lambda: pytest.fail("index rebuilt"))
+    out2 = ann_ivf.ivf_index_topk(q2, reused, k=3)
     plan = out2._sc._jvm.PythonSQLUtils.explainString(
         out2._jdf.queryExecution(), "formatted"
     )

@@ -1,6 +1,7 @@
 """Snapshot-table layer (sources/snapshots.py): versioned commits,
 version pinning, expiry and concurrent commits over plain parquet +
-JSON manifests, the ``pinned_snapshot`` reuse primitive, plus the
+JSON manifests, the ``pinned_snapshot`` reuse primitive and the
+queries that persist their artifacts through it, plus the
 ``materialize_frame`` lineage cut."""
 
 from __future__ import annotations
@@ -102,6 +103,106 @@ def test_pinned_snapshot_builds_once_per_key(spark, root):
     # a pinned empty artifact is served, not rebuilt
     assert pinned_snapshot(spark, root, "k3", build([(4, "d")])).count() == 0
     assert len(builds) == 3
+
+
+# The queries that persist an artifact: the source table its pin is
+# keyed on, and the warehouse table it commits.
+PINNED_QUERIES = {
+    "ann_lsh_indexed_top1": ("embeddings", "lsh_index"),
+    "ann_ivf_indexed_topk": ("embeddings", "ivf_index"),
+    "production_model": ("orders", "model_registry"),
+    "grade_f1_breakdown": ("orders", "grade_metrics_store"),
+    "retraining_trigger": ("orders", "metrics_store"),
+}
+
+
+def _committed(spark, wh) -> dict[str, int]:
+    """Latest committed version of every snapshot table under ``wh``."""
+    import os
+
+    return {
+        os.path.relpath(d, wh): history(spark, d)[-1]["version"]
+        for d, subdirs, _ in os.walk(wh)
+        if "_snapshots" in subdirs
+    }
+
+
+def _build_stages(spark, group: str) -> list[str]:
+    """Stages of job group ``group`` that train k-means or write
+    parquet (a snapshot commit)."""
+    st = spark.sparkContext.statusTracker()
+    names = [
+        st.getStageInfo(s).name
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    return [n for n in names if "kmeans.py" in n or n.startswith("parquet at")]
+
+
+@pytest.fixture()
+def sf_copy(tmp_path, monkeypatch):
+    """A writable copy of the smoke corpus and a fresh warehouse."""
+    import shutil
+
+    from tests.conftest import SF_SMOKE
+
+    sf = tmp_path / "sf_copy"
+    shutil.copytree(SF_SMOKE, sf, copy_function=shutil.copyfile)
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path / "wh"))
+    return str(sf), str(tmp_path / "wh")
+
+
+def test_persisted_artifacts_reuse_their_pinned_commit(spark, sf_copy):
+    """A second call of each artifact-persisting query serves the pinned
+    commit: no new snapshot version anywhere in the warehouse, and no
+    k-means or commit job in its job group."""
+    import __spark_entry__ as entrymod
+
+    from tests.test_sources import _jobs
+
+    sf, wh = sf_copy
+    qs = entrymod.queries()
+    for name in PINNED_QUERIES:
+        qs[name](spark, sf).toPandas()
+    built = _committed(spark, wh)
+    assert {r.split("_sf_copy")[0] for r in built} == {
+        store for _, store in PINNED_QUERIES.values()
+    }
+    for name in PINNED_QUERIES:
+        _jobs(spark, f"pinned-reuse:{name}", lambda: qs[name](spark, sf).toPandas())
+        assert _build_stages(spark, f"pinned-reuse:{name}") == [], name
+    assert _committed(spark, wh) == built
+
+
+@pytest.mark.parametrize("table", ["embeddings", "orders"])
+def test_persisted_artifacts_rebuild_on_source_change(spark, sf_copy, table):
+    """A rewritten source file misses the pin: every artifact keyed on
+    it commits exactly one new version and the queries answer for the
+    NEW rows (oracle parity on the rewritten corpus); artifacts keyed on
+    the other table stay as they were."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+    from tests.oracle_harness import compare, duck_connection
+
+    sf, wh = sf_copy
+    qs, osql = entrymod.queries(), entrymod.oracle_sql()
+    for name in PINNED_QUERIES:
+        qs[name](spark, sf).toPandas()
+    before = _committed(spark, wh)
+
+    path = f"{sf}/{table}.parquet"
+    t = pq.read_table(path)
+    pq.write_table(t.slice(0, t.num_rows // 2), path)
+
+    con = duck_connection(sf)
+    for name in PINNED_QUERIES:
+        compare(qs[name](spark, sf), con, osql[name], name)
+    after = _committed(spark, wh)
+    stores = tuple(store for src, store in PINNED_QUERIES.values() if src == table)
+    assert {r: after[r] - v for r, v in before.items()} == {
+        r: int(r.startswith(stores)) for r in before
+    }
 
 
 def test_concurrent_writers_never_lose_a_commit(spark, tmp_path_factory):
